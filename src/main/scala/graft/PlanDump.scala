@@ -8,10 +8,10 @@ import org.apache.spark.sql.execution.FormattedMode
   * (`plans/r<N>/<query>_{before,after}.txt`). Unlike `graft.Plans`
   * (which regenerates the full EXPLAINS.md on the twin-free sf0.001
   * fixture), this takes the data directory on the command line so a
-  * DUPLICATED corpus can be used — the twin-collapse legs are
-  * stat-gated per corpus (`Dedup.twinGate`, avg copies >= 1.2) and
-  * never execute on the driver fixtures, so only a duplicated input
-  * makes the collapsed plan shape visible in the dump.
+  * DUPLICATED corpus can be used — the twin-collapse legs
+  * (`ops.Collapse`) are stat-gated per corpus (`Dedup.twinGate`, avg
+  * copies >= 1.2) and never execute on the twin-free fixtures, so only a
+  * duplicated input makes the collapsed plan shape visible in the dump.
   *
   * Usage: runMain graft.PlanDump <outDir> <suffix> <dataDir> <query>...
   * Writes <outDir>/<query>_<suffix>.txt with the FINAL adaptive plan

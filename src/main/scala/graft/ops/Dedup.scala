@@ -126,30 +126,12 @@ object Dedup {
         sort_array(collect_list(col("doc_id"))).as("members")))
     val repPairs = pairsFromSigs(
       minhashSigs(grp.select(col("rep").as("doc_id"), col("t"))))
-    // Cross expansion: one side exploded at a time (a row never holds
-    // the m_a × m_b product); least/greatest because member ids
-    // interleave across groups (d4's crossOut shape).
-    val crossOut = repPairs
-      .join(grp.select(col("rep").as("doc_a"), col("members").as("ms_a")), Seq("doc_a"))
-      .join(grp.select(col("rep").as("doc_b"), col("members").as("ms_b")), Seq("doc_b"))
-      .select(col("est_jaccard"), col("ms_b"), explode(col("ms_a")).as("x"))
-      .select(col("est_jaccard"), col("x"), explode(col("ms_b")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"), col("est_jaccard"))
-    // Within-group pairs: sorted members + posexplode/slice keep
-    // doc_a < doc_b without a pair product in one row (d4's shape);
-    // round(1.0, 3) in the original is the double literal 1.0.
-    val withinOut = grp.filter(size(col("members")) >= 2)
-      .select(col("members"), posexplode(col("members")).as(Seq("i", "x")))
-      .select(col("x").as("doc_a"),
-        explode(slice(col("members"), col("i") + lit(2),
-          size(col("members")))).as("doc_b"),
-        lit(1.0).as("est_jaccard"))
-    // Schema parity with the direct path (d4's analysis-time widener:
-    // the optimizer folds it before execution).
-    def widen(c: String) = when(col(c).isNotNull, col(c)).as(c)
-    crossOut.unionByName(withinOut)
-      .select(widen("doc_a"), widen("doc_b"), col("est_jaccard"))
+    // Within-group pairs at est 1.0 — round(1.0, 3) in the original is
+    // the double literal 1.0.
+    Collapse.pairs(repPairs, grp,
+      grp.filter(size(col("members")) >= 2)
+        .select(col("members"), lit(1.0).as("est_jaccard")),
+      "est_jaccard")
   }
 
   /** Band explode + self-join + per-pair dedup over a signature frame
@@ -189,25 +171,18 @@ object Dedup {
     * votes ±1 on bit i; the signed sums per document give the signature.
     * One explode + one aggregation — linear in corpus size.
     *
-    * EXACT TWIN COLLAPSE (round 17): the signature is a pure function of
-    * the TEXT alone (no corpus-level statistic at all), so behind the
-    * shared text [[twinGate]] the md5 explode + 16 bit sums run once per
-    * DISTINCT text over [[textHub]] and signatures fan back through
-    * group membership — no weighting needed anywhere. The
-    * [[hasNullDocId]] guard covers the one semantic the hub cannot
-    * reproduce: the direct groupBy merges ALL null-id documents into a
-    * single signature row, while collect_list drops them from members
-    * (same rule for d7/t6; fixture and gate corpora carry none).
+    * Twin-collapsed through [[Collapse.byKey]] on text behind
+    * [[twinGate]]: the signature is a pure function of the text (no
+    * corpus-level statistic), so it runs once per distinct text.
     */
   def d3Simhash(s: SparkSession, dir: String): DataFrame =
-    d3SimhashImpl(s, dir,
-      collapse = twinGate(s, dir, Seq("text")) && !hasNullDocId(s, dir))
+    d3SimhashImpl(s, dir, collapse = twinGate(s, dir, Seq("text")))
 
   private[graft] def d3SimhashImpl(s: SparkSession, dir: String,
       collapse: Boolean): DataFrame = {
     val oddHex = Seq("1", "3", "5", "7", "9", "b", "d", "f")
-    def signature(rows: DataFrame): DataFrame = {
-      val tokHash = rows
+    Collapse.byKey(load(s, dir, "documents"), Seq("text"), collapse) { rows =>
+      val tokHash = graft.Tables.spread(rows)
         .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
         .select(col("doc_id"), md5(col("tok")).as("h"))
       val bitSums = (1 to 16).map(i =>
@@ -219,11 +194,6 @@ object Dedup {
           (1 to 16).map(i => when(col(s"s_$i") > 0, lit(1L << (i - 1))).otherwise(lit(0L)))
             .reduce(_ + _).as("simhash"))
     }
-    if (collapse) {
-      val hub = textHub(load(s, dir, "documents")
-        .select(col("doc_id"), col("text")))
-      expandByMembers(signature(hub), hub)
-    } else signature(graft.Tables.spread(load(s, dir, "documents")))
   }
 
   /** Inverted-index posting-list cap: shingles appearing in more than
@@ -295,8 +265,8 @@ object Dedup {
     * never the rows.
     */
   /** Memoized exact-copy depth probe shared by the stat-gated twin
-    * collapses (d4 on (source, text) — its blocking key; d2 on text
-    * alone — it has no blocking key): one bounded driver action,
+    * collapses (d4 on (source, text) — its blocking key; d2 and the
+    * [[Collapse.byKey]] operators on text alone): one bounded Spark action,
     * approx_count_distinct over xxhash64(keyCols), collapse iff avg
     * copies per distinct key ≥ 1.2. Engine-side only, memoized per
     * (corpus dir, key) for the JVM lifetime — see d4's scaladoc for
@@ -317,20 +287,6 @@ object Dedup {
       // DegenerateCorpusSpec's schema-parity gate on t10, round 17).
       st.getLong(0) > 0L && st.getLong(0) * 10L >= st.getLong(1) * 12L
     })
-
-  /** Memoized null-doc_id probe for the d3/d7/t6 family (round 17),
-    * whose DIRECT forms groupBy(doc_id) — merging every null-id
-    * document into one output group — while the hub expansion drops
-    * null members (collect_list skips nulls). Those operators collapse
-    * only on corpora with zero null ids; evaluated lazily AFTER the
-    * twin gate (short-circuit), so twin-free corpora never pay it.
-    */
-  private val nullIdGates = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-
-  private[graft] def hasNullDocId(s: SparkSession, dir: String): Boolean =
-    nullIdGates.computeIfAbsent(dir, _ =>
-      load(s, dir, "documents").filter(col("doc_id").isNull)
-        .limit(1).count() > 0L)
 
   def d4NgramJaccard(s: SparkSession, dir: String): DataFrame =
     d4NgramJaccardImpl(s, dir, twinGate(s, dir, Seq("source", "text")))
@@ -411,32 +367,19 @@ object Dedup {
         transform(filter(col("reps"), b => b.getField("rep") > a.getField("rep")),
           b => struct(a.getField("rep").as("rep_a"), a.getField("n_sh").as("n_a"),
             b.getField("rep").as("rep_b"), b.getField("n_sh").as("n_b")))))).as("p"))
-      .groupBy(col("p.rep_a").as("rep_a"), col("p.rep_b").as("rep_b"))
+      .groupBy(col("p.rep_a").as("doc_a"), col("p.rep_b").as("doc_b"))
       .agg(count(lit(1)).as("n_inter"),
         max(col("p.n_a")).as("n_a"), max(col("p.n_b")).as("n_b"))
-      .select(col("rep_a"), col("rep_b"),
+      .select(col("doc_a"), col("doc_b"),
         round(col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")).cast("double"), 6).as("jaccard"))
       .filter(col("jaccard") >= 0.3)
-    // Cross expansion: every (member of A) × (member of B) pair carries
-    // the rep pair's J. Groups are disjoint doc sets, so no overlap with
-    // the within leg; one side exploded at a time (a row never holds the
-    // m_a × m_b product). least/greatest because member ids interleave
-    // across groups.
-    val crossOut = repPairs
-      .join(grp.select(col("rep").as("rep_a"), col("members").as("ms_a")), Seq("rep_a"))
-      .join(grp.select(col("rep").as("rep_b"), col("members").as("ms_b")), Seq("rep_b"))
-      .select(col("jaccard"), col("ms_b"), explode(col("ms_a")).as("x"))
-      .select(col("jaccard"), col("x"), explode(col("ms_b")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"), col("jaccard"))
     // Within-group pairs: ni_w = how many of the group's shingles
     // survive the doc-depth cap (count of kept postings containing the
     // rep — including single-rep postings, whose n_docs = m ≥ 2). All
-    // member pairs of the group share J = ni_w / (2n − ni_w); sorted
-    // members + posexplode/slice keep doc_a < doc_b without a pair
-    // product ever materializing in one row.
-    val withinOut = postings
+    // member pairs of the group share J = ni_w / (2n − ni_w). Groups are
+    // disjoint doc sets, so the legs never overlap.
+    val within = postings
       .select(explode(col("reps")).as("r"))
       .filter(col("r.m") >= 2)
       .groupBy(col("r.rep").as("rep"))
@@ -446,24 +389,8 @@ object Dedup {
           (col("n_sh") * 2 - col("ni_w")).cast("double"), 6).as("jaccard"))
       .filter(col("jaccard") >= 0.3)
       .join(grp.select(col("rep"), col("members")), Seq("rep"))
-      .select(col("jaccard"), col("members"),
-        posexplode(col("members")).as(Seq("i", "x")))
-      .select(col("x").as("doc_a"),
-        explode(slice(col("members"), col("i") + lit(2),
-          size(col("members")))).as("doc_b"),
-        col("jaccard"))
-    // Schema parity with the direct path: the expansion's least/greatest
-    // and explode outputs are non-nullable, but the per-document form's
-    // grouping keys are nullable — a caller switching corpora (and
-    // therefore strategies) must see ONE schema (DegenerateCorpusSpec
-    // pins it). `when(isNotNull, …)` widens nullability at ANALYSIS
-    // time (where Dataset.schema is read); the optimizer's
-    // NullPropagation folds it away before execution, so the widener is
-    // schema-only. (Dataset.to was tried first: nullability RELAXATION
-    // is a no-op upcast there and leaves the schema non-nullable.)
-    def widen(c: String) = when(col(c).isNotNull, col(c)).as(c)
-    crossOut.unionByName(withinOut.select("doc_a", "doc_b", "jaccard"))
-      .select(widen("doc_a"), widen("doc_b"), col("jaccard"))
+      .select(col("members"), col("jaccard"))
+    Collapse.pairs(repPairs, grp, within, "jaccard")
   }
 
   /** d15's Jaccard threshold as an exact rational (3/10, d4's bar):
@@ -1411,54 +1338,6 @@ object Dedup {
     substrSpans(load(s, dir, "documents"),
       collapse = twinGate(s, dir, Seq("text")))
 
-  /** EXACT-TWIN COLLAPSE for the whole window-hash family (round 16,
-    * d4/d2's pattern): every per-position expression — the K-char
-    * window md5s, the winnow local-min, the island merge, the scrub
-    * fold — is a pure function of the document's TEXT, and the only
-    * corpus-global terms are per-key occurrence aggregates (d12's
-    * count ≥ 2, t13's max(ev)) that depend on texts and group sizes,
-    * never on which twin contributed. So the md5-heavy gram pass runs
-    * over one representative per distinct text — a count-weighted
-    * occurrence sum (mult) preserves d12's corpus-wide ≥ 2 semantics
-    * exactly: a text duplicated m ≥ 2 times has EVERY window duplicated
-    * and flags end to end, which is precisely why the 100× gate made
-    * this family's walls ~linear in the duplication factor — and
-    * per-document results expand back through group membership
-    * (output-bound; spans/fingerprints/scrubbed text are identical
-    * across twins). Stat-gated per corpus via [[twinGate]] on text;
-    * the frame-level cores below keep the direct path as their
-    * composition default.
-    */
-  private[ops] def textHub(docs: DataFrame): DataFrame =
-    OpCaches.persisted(docs
-      .groupBy(col("text"))
-      .agg(min(col("doc_id")).as("doc_id"),
-        sort_array(collect_list(col("doc_id"))).as("members"),
-        count(lit(1)).as("mult")))
-
-  /** d12's flagged-window pipeline over a [[textHub]]: the gram pass
-    * runs per representative and the corpus-wide occurrence count is
-    * the mult-weighted sum over the window-key partition.
-    */
-  private def repDupSpans(hub: DataFrame): DataFrame =
-    islands(windowGrams(hub.select(col("doc_id"), col("text"), col("mult")),
-        passthrough = Seq("mult"))
-      .withColumn("n_occ", sum(col("mult")).over(Window.partitionBy("gk")))
-      .filter(col("n_occ") >= 2))
-
-  /** Fan per-representative rows back out to every member; `doc_id` is
-    * replaced (widened like d4's expansion — analysis-time nullability
-    * parity with the direct path), all other columns ride along.
-    */
-  private[ops] def expandByMembers(rep: DataFrame, hub: DataFrame): DataFrame = {
-    val rest = rep.columns.filter(_ != "doc_id").toSeq
-    rep.withColumnRenamed("doc_id", "rep")
-      .join(hub.select(col("doc_id").as("rep"), col("members")), Seq("rep"))
-      .select(explode(col("members")).as("docx") +: rest.map(col): _*)
-      .select(when(col("docx").isNotNull, col("docx")).as("doc_id") +:
-        rest.map(col): _*)
-  }
-
   /** Segment stride for the window-hash pass: documents are first
     * exploded into stride-sized segments (with K-1 chars of overlap so
     * every window lives wholly inside one segment), and the per-row
@@ -1475,28 +1354,30 @@ object Dedup {
     * 1-based inclusive character offsets. Spans from one document never
     * overlap and are separated by >=1 unflagged character (the island
     * merge is by running max of covered end, so adjacency collapses).
+    *
+    * Twin-collapsed through [[Collapse.byKey]] on text (the whole
+    * window-hash family — d12, d13, d14, t13, t14 — collapses the same
+    * way): every per-position expression is a pure function of the text,
+    * and the one corpus-wide term, the window occurrence count, is the
+    * `mult`-weighted sum. A text copied m ≥ 2 times flags end to end.
     */
-  private[graft] def substrSpans(docs: DataFrame): DataFrame =
-    substrSpans(docs, collapse = false)
+  private[graft] def substrSpans(docs: DataFrame, collapse: Boolean = false): DataFrame =
+    Collapse.byKey(docs, Seq("text"), collapse)(dupSpans)
 
-  private[graft] def substrSpans(docs: DataFrame, collapse: Boolean): DataFrame = {
-    if (collapse) {
-      val hub = textHub(docs)
-      return expandByMembers(repDupSpans(hub), hub)
-    }
-    // Occurrence count as a WINDOW count over the gk partition (t10's
-    // shape): structurally ONE hashing pass — a groupBy+join-back
-    // formulation re-ran the scan→window-hash pipeline per branch
-    // (column pruning diverges the branches so ReuseExchange can't
-    // fire; count-reference tricks fold away — count(struct(..)) of a
-    // never-null struct rewrites to count(1) and prunes anyway). The
-    // price is the window sort on 8-byte keys inside each partition;
-    // a boilerplate-hot key serializes its partition either way (the
-    // join would co-locate the same rows), and cost stays linear.
-    islands(windowGrams(docs)
-      .withColumn("n_occ", count(lit(1)).over(Window.partitionBy("gk")))
+  /** d12's flagged-window pipeline over `(doc_id, text, mult)` rows.
+    * Occurrence count as a WINDOW sum over the gk partition (t10's
+    * shape): structurally ONE hashing pass — a groupBy+join-back
+    * formulation re-ran the scan→window-hash pipeline per branch
+    * (column pruning diverges the branches so ReuseExchange can't
+    * fire). The price is the window sort on 8-byte keys inside each
+    * partition; a boilerplate-hot key serializes its partition either
+    * way (the join would co-locate the same rows), and cost stays
+    * linear.
+    */
+  private def dupSpans(rows: DataFrame): DataFrame =
+    islands(windowGrams(rows, passthrough = Seq("mult"))
+      .withColumn("n_occ", sum(col("mult")).over(Window.partitionBy("gk")))
       .filter(col("n_occ") >= 2))
-  }
 
   /** The segmented window-hash pass: one `(doc_id, off, gk)` row per
     * K-char window position, plus `passthrough` columns carried from
@@ -1579,18 +1460,13 @@ object Dedup {
     spanScrub(load(s, dir, "documents"),
       collapse = twinGate(s, dir, Seq("text")))
 
-  private[graft] def spanScrub(docs: DataFrame): DataFrame =
-    spanScrub(docs, collapse = false)
-
-  private[graft] def spanScrub(docs: DataFrame, collapse: Boolean): DataFrame = {
-    if (!collapse) return scrubWith(docs, substrSpans(docs))
-    // Twins share their spans AND therefore their scrubbed text: scrub
-    // once per representative, expand the (clean_text, removed) rows.
-    // One hub serves the gram pass, the scrub rejoin and the fan-out.
-    val hub = textHub(docs)
-    expandByMembers(
-      scrubWith(hub.select(col("doc_id"), col("text")), repDupSpans(hub)), hub)
-  }
+  /** Twins share their spans and therefore their scrubbed text, so the
+    * scrub runs once per representative ([[Collapse.byKey]]): one hub
+    * serves the gram pass, the scrub rejoin and the fan-out.
+    */
+  private[graft] def spanScrub(docs: DataFrame, collapse: Boolean = false): DataFrame =
+    Collapse.byKey(docs, Seq("text"), collapse)(rows =>
+      scrubWith(rows.select(col("doc_id"), col("text")), dupSpans(rows)))
 
   /** t13 — contamination SPANS: the decontamination twin of d12. A
     * corpus document's span is flagged when it occurs VERBATIM inside
@@ -1608,12 +1484,15 @@ object Dedup {
     * ride the same window and are dropped by the filter.
     */
   def t13ContamSpans(s: SparkSession, dir: String): DataFrame =
-    // Both sides live in one table, so tag in a single projection —
-    // a corpus/eval filter pair unioned back together would scan (and
-    // re-hash) the table once per side.
-    contamSpansTagged(t1314Tagged(s, dir),
-      collapse = twinGate(s, dir, Seq("text")))
+    Collapse.byKey(t1314Tagged(s, dir), Seq("text", "ev"),
+      twinGate(s, dir, Seq("text")))(contamSpansTagged)
 
+  /** Both sides live in one table, so tag in a single projection — a
+    * corpus/eval filter pair unioned back together would scan (and
+    * re-hash) the table once per side. Collapse key (text, ev): an eval
+    * and a corpus copy of one text are NOT interchangeable (the tag
+    * decides which side flags), copies within a side are.
+    */
   private def t1314Tagged(s: SparkSession, dir: String): DataFrame =
     load(s, dir, "documents")
       .select(col("doc_id"), col("text"),
@@ -1622,23 +1501,14 @@ object Dedup {
   /** t14 — contamination SCRUB: t13's spans excised from the corpus
     * (eval docs are not part of the output). Every corpus document
     * comes back once; a doc wholly contained in the eval set becomes
-    * the empty string.
+    * the empty string. Collapsed like t13: one hub feeds the span pass,
+    * the scrub rejoin and the fan-out.
     */
-  def t14ContamScrub(s: SparkSession, dir: String): DataFrame = {
-    if (twinGate(s, dir, Seq("text"))) {
-      // Collapsed: scrub once per distinct CORPUS text (the ev = 0 side
-      // of t13's tagged hub — the same hub instance feeds the span
-      // pass, the scrub rejoin and the fan-out) and expand.
-      val hub = taggedHub(t1314Tagged(s, dir))
-      val corpusHub = hub.filter(col("ev") === 0)
-      return expandByMembers(
-        scrubWith(corpusHub.select(col("doc_id"), col("text")),
-          repContamSpans(hub)), corpusHub)
-    }
-    val d = load(s, dir, "documents")
-    scrubWith(d.filter(!(col("source") <=> lit(EvalSrc))),
-      t13ContamSpans(s, dir))
-  }
+  def t14ContamScrub(s: SparkSession, dir: String): DataFrame =
+    Collapse.byKey(t1314Tagged(s, dir), Seq("text", "ev"),
+      twinGate(s, dir, Seq("text")))(rows =>
+      scrubWith(rows.filter(col("ev") === 0).select(col("doc_id"), col("text")),
+        contamSpansTagged(rows)))
 
   // ONE convention (see TextAnalysis.EvalSource). A `def`, not a `val`:
   // TextAnalysis's oracle strings reference Dedup.normFpSql, so a
@@ -1654,36 +1524,11 @@ object Dedup {
       corpus.select(col("doc_id"), col("text"), lit(0).as("ev"))
         .unionByName(eval.select(col("doc_id"), col("text"), lit(1).as("ev"))))
 
-  private def contamSpansTagged(tagged: DataFrame): DataFrame =
-    contamSpansTagged(tagged, collapse = false)
-
-  private def contamSpansTagged(tagged: DataFrame, collapse: Boolean): DataFrame = {
-    if (collapse) {
-      // Group by (text, ev): an eval and a corpus copy of one text are
-      // NOT interchangeable (the tag decides which side flags), but
-      // copies within a side are; the contamination verdict reads only
-      // max(ev) per window key, so group multiplicity is irrelevant
-      // here — the collapse is tag-exact with no weighting needed.
-      val hub = taggedHub(tagged)
-      return expandByMembers(repContamSpans(hub), hub)
-    }
-    islands(windowGrams(tagged, passthrough = Seq("ev"))
-      .withColumn("hit", max(col("ev")).over(Window.partitionBy("gk")))
-      .filter(col("ev") === 0 && col("hit") === 1))
-  }
-
-  private def taggedHub(tagged: DataFrame): DataFrame =
-    OpCaches.persisted(tagged
-      .groupBy(col("text"), col("ev"))
-      .agg(min(col("doc_id")).as("doc_id"),
-        sort_array(collect_list(col("doc_id"))).as("members")))
-
-  /** t13's flagged-window pipeline over a [[taggedHub]] — rep-level
-    * grams with the ev tag; only ev = 0 reps emit spans.
+  /** t13's flagged-window pipeline over `(doc_id, text, ev)` rows: the
+    * verdict reads only max(ev) per window key, so it ignores `mult`.
     */
-  private def repContamSpans(hub: DataFrame): DataFrame =
-    islands(windowGrams(hub.select(col("doc_id"), col("text"), col("ev")),
-        passthrough = Seq("ev"))
+  private def contamSpansTagged(tagged: DataFrame): DataFrame =
+    islands(windowGrams(tagged, passthrough = Seq("ev"))
       .withColumn("hit", max(col("ev")).over(Window.partitionBy("gk")))
       .filter(col("ev") === 0 && col("hit") === 1))
 
@@ -1721,35 +1566,26 @@ object Dedup {
     winnow(load(s, dir, "documents"),
       collapse = twinGate(s, dir, Seq("text")))
 
-  private[graft] def winnow(docs: DataFrame): DataFrame =
-    winnow(docs, collapse = false)
-
-  private[graft] def winnow(docs: DataFrame, collapse: Boolean): DataFrame = {
-    if (!collapse) return winnowDirect(docs)
-    // The fingerprint set is per-document with no corpus-global term at
-    // all, so the collapse is the plain text hub: select once per
-    // distinct text, expand (doc_id, off, gk) rows — the 28M-row
-    // output write is the remaining floor at the 100× gate.
-    val hub = textHub(docs)
-    expandByMembers(winnowDirect(hub.select(col("doc_id"), col("text"))), hub)
-  }
-
-  private def winnowDirect(docs: DataFrame): DataFrame = {
-    val w = Window.partitionBy("doc_id").orderBy("off")
-      .rowsBetween(Window.currentRow, WinnowW - 1)
-    windowGrams(docs)
-      // Rightmost-min per window: struct min orders by gk then -off,
-      // so ties on gk resolve to the LARGEST offset — the tie rule
-      // that makes runs of identical windows (e.g. char repeats)
-      // contribute one fingerprint per run, not one per position.
-      .withColumn("sel",
-        min(struct(col("gk").as("gk"), (-col("off")).as("noff"))).over(w))
-      .withColumn("nfull", count(lit(1)).over(w))
-      .filter(col("nfull") === WinnowW)
-      .select(col("doc_id"), (-col("sel.noff")).as("off"),
-        col("sel.gk").as("gk"))
-      .distinct()
-  }
+  /** The fingerprint set is per-document with no corpus-global term at
+    * all, so [[Collapse.byKey]] on text selects once per distinct text.
+    */
+  private[graft] def winnow(docs: DataFrame, collapse: Boolean = false): DataFrame =
+    Collapse.byKey(docs, Seq("text"), collapse) { rows =>
+      val w = Window.partitionBy("doc_id").orderBy("off")
+        .rowsBetween(Window.currentRow, WinnowW - 1)
+      windowGrams(rows)
+        // Rightmost-min per window: struct min orders by gk then -off,
+        // so ties on gk resolve to the LARGEST offset — the tie rule
+        // that makes runs of identical windows (e.g. char repeats)
+        // contribute one fingerprint per run, not one per position.
+        .withColumn("sel",
+          min(struct(col("gk").as("gk"), (-col("off")).as("noff"))).over(w))
+        .withColumn("nfull", count(lit(1)).over(w))
+        .filter(col("nfull") === WinnowW)
+        .select(col("doc_id"), (-col("sel.noff")).as("off"),
+          col("sel.gk").as("gk"))
+        .distinct()
+    }
 
   /** Excise `spans` from `docs`, `passThrough` columns carried beside
     * the scrubbed text (curation needs source/lang to survive).
@@ -1816,29 +1652,21 @@ object Dedup {
     * pinning the aggregate's semantics declaratively).
     */
   def d7Simhash64(s: SparkSession, dir: String): DataFrame =
-    d7Simhash64Impl(s, dir,
-      collapse = twinGate(s, dir, Seq("text")) && !hasNullDocId(s, dir))
+    d7Simhash64Impl(s, dir, collapse = twinGate(s, dir, Seq("text")))
 
-  /** d3's twin collapse, same reasoning verbatim: the 64-bit signature
-    * is a pure per-text function (the two md5s per token dominate the
-    * wall), so it runs once per distinct text and fans back through
-    * membership. Null-id guard shared with d3/t6.
+  /** d3's twin collapse: the 64-bit signature is a pure per-text
+    * function (the two md5s per token dominate the wall).
     */
   private[graft] def d7Simhash64Impl(s: SparkSession, dir: String,
-      collapse: Boolean): DataFrame = {
-    def signature(rows: DataFrame): DataFrame = rows
-      .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
-      .select(col("doc_id"),
-        concat(md5(concat(lit("0:"), col("tok"))),
-          md5(concat(lit("1:"), col("tok")))).as("h"))
-      .groupBy("doc_id")
-      .agg(graft.functions.SimHash64Agg.simhash64(col("h")).as("simhash64"))
-    if (collapse) {
-      val hub = textHub(load(s, dir, "documents")
-        .select(col("doc_id"), col("text")))
-      expandByMembers(signature(hub), hub)
-    } else signature(graft.Tables.spread(load(s, dir, "documents")))
-  }
+      collapse: Boolean): DataFrame =
+    Collapse.byKey(load(s, dir, "documents"), Seq("text"), collapse)(rows =>
+      graft.Tables.spread(rows)
+        .select(col("doc_id"), explode(toks(col("text"))).as("tok"))
+        .select(col("doc_id"),
+          concat(md5(concat(lit("0:"), col("tok"))),
+            md5(concat(lit("1:"), col("tok")))).as("h"))
+        .groupBy("doc_id")
+        .agg(graft.functions.SimHash64Agg.simhash64(col("h")).as("simhash64")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "d1_exact_dedup" -> d1ExactDedup,

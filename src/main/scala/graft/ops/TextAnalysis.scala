@@ -513,24 +513,18 @@ object TextAnalysis {
   /** Frame-based core over any `(doc_id, text)` corpus. */
   def lmScore(docs: DataFrame): DataFrame = lmScore(docs, collapse = false)
 
-  /** EXACT TWIN COLLAPSE for t15 (round 16, the window-hash family's
-    * rule applied to the LM pass): a document's per-position p sequence
-    * is a pure function of its TEXT, and both model counts are exact
-    * INTEGER occurrence sums over the corpus — so behind the shared
-    * text [[Dedup.twinGate]], the bigram explode + stacked windows +
-    * position fold run once per DISTINCT text over [[Dedup.textHub]],
-    * with the window counts mult-weighted (sum(mult) over the same
-    * partitions ≡ count(1) over the per-copy rows, Long-for-Long) and
-    * scores fanned back through group membership. Bit-exact at any
-    * duplication depth: integer sums are associative, the quotient is
-    * the same two longs cast to double, and each text's position order
-    * is its own. Twin-free corpora keep the original single-pass plan
-    * below (zero overhead beyond the memoized probe).
+  /** Twin-collapsed through [[Collapse.byKey]] on text: a document's
+    * per-position p sequence is a pure function of its text, and both
+    * model counts are `mult`-weighted integer sums (`sum(mult)` ≡
+    * `count(1)` per copy, Long for Long), so the scores are bit-exact at
+    * any duplication depth. The join-back over the same rows keeps
+    * documents without a bigram (n_bigrams 0, score null).
     */
-  private[graft] def lmScore(docs: DataFrame, collapse: Boolean): DataFrame = {
-    if (collapse) {
-      val hub = Dedup.textHub(docs.select(col("doc_id"), col("text")))
-      val bg = hub
+  private[graft] def lmScore(docs: DataFrame, collapse: Boolean): DataFrame =
+    Collapse.byKey(docs, Seq("text"), collapse) { rows =>
+      // toks materialized in its own projection: a lambda body referencing
+      // an enclosing expression re-evaluates it per element (t10's lesson).
+      val bg = graft.Tables.spread(rows)
         .select(col("doc_id"), col("mult"), toks(col("text")).as("tk"))
         .select(col("doc_id"), col("mult"),
           posexplode(
@@ -552,42 +546,12 @@ object TextAnalysis {
         .select(col("doc_id"), col("n_bigrams"),
           (aggregate(col("ps"), lit(0.0), (acc, x) => acc + x.getField("p")) /
             col("n_bigrams").cast("double")).as("lm_score"))
-      return docs.select(col("doc_id"))
-        .join(Dedup.expandByMembers(scored, hub), Seq("doc_id"), "left")
+      rows.select(col("doc_id"))
+        .join(scored, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
           col("lm_score"))
     }
-    // toks materialized in its own projection: a lambda body referencing
-    // an enclosing expression re-evaluates it per element (t10's lesson).
-    val bg = graft.Tables.spread(docs)
-      .select(col("doc_id"), toks(col("text")).as("tk"))
-      .select(col("doc_id"),
-        posexplode(
-          when(size(col("tk")) >= 2,
-            transform(sequence(lit(1), size(col("tk")) - 1),
-              i => struct(element_at(col("tk"), i).as("w1"),
-                element_at(col("tk"), i + 1).as("w2"))))
-            .otherwise(array().cast("array<struct<w1:string,w2:string>>"))))
-      .select(col("doc_id"), (col("pos") + 1).as("pos"),
-        col("col.w1").as("w1"), col("col.w2").as("w2"))
-    val p = bg
-      .withColumn("n2", count(lit(1)).over(Window.partitionBy("w1", "w2")))
-      .withColumn("n1", count(lit(1)).over(Window.partitionBy("w1")))
-      .select(col("doc_id"), col("pos"),
-        (col("n2").cast("double") / col("n1").cast("double")).as("p"))
-    val scored = p.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sort_array(collect_list(struct(col("pos"), col("p")))).as("ps"))
-      .select(col("doc_id"), col("n_bigrams"),
-        (aggregate(col("ps"), lit(0.0), (acc, x) => acc + x.getField("p")) /
-          col("n_bigrams").cast("double")).as("lm_score"))
-    docs.select(col("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_bigrams"), lit(0L)).as("n_bigrams"),
-        col("lm_score"))
-  }
 
   private val ImpTargetLang = "en"
 
@@ -627,35 +591,24 @@ object TextAnalysis {
   def importanceWeights(docs: DataFrame): DataFrame =
     importanceWeights(docs, collapse = false)
 
-  /** EXACT TWIN COLLAPSE for t16 (t15's rule with the target flag in
-    * the key): a document's bucket sequence is a pure function of its
-    * TEXT, and both bucket counts are exact integer sums where each
-    * row contributes (tgt, 1) — so the hub groups by (tgt, text)
-    * (collapsing same-text docs across all non-target langs too),
-    * weights the window sums by mult (`sum(mult*tgt)` ≡ `sum(tgt)`
-    * per copy, `sum(mult)` ≡ `count(1)` — Long-for-Long), and fans
-    * per-representative scores back through membership. The gate key
-    * is (lang, text): distinct(tgt, text) ≤ distinct(lang, text), so
-    * the probe can only under-fire, never mis-fire.
+  /** Twin-collapsed through [[Collapse.byKey]] on (tgt, text), t15's
+    * rule with the target flag in the key (same-text docs collapse across
+    * all non-target langs too): both bucket counts are `mult`-weighted
+    * integer sums. The gate key is (lang, text): distinct(tgt, text) ≤
+    * distinct(lang, text), so the probe can only under-fire.
     */
-  private[graft] def importanceWeights(docs: DataFrame, collapse: Boolean): DataFrame = {
-    if (collapse) {
-      val hub = OpCaches.persisted(docs
-        .select(col("doc_id"),
-          (col("lang") <=> lit(ImpTargetLang)).cast("int").as("tgt"),
-          col("text"))
-        .groupBy(col("tgt"), col("text"))
-        .agg(min(col("doc_id")).as("doc_id"),
-          sort_array(collect_list(col("doc_id"))).as("members"),
-          count(lit(1)).as("mult")))
-      val tk = hub
+  private[graft] def importanceWeights(docs: DataFrame, collapse: Boolean): DataFrame =
+    Collapse.byKey(
+      docs.select(col("doc_id"),
+        (col("lang") <=> lit(ImpTargetLang)).cast("int").as("tgt"), col("text")),
+      Seq("tgt", "text"), collapse) { rows =>
+      val tk = graft.Tables.spread(rows)
         .select(col("doc_id"), col("tgt"), col("mult"), toks(col("text")).as("tk"))
         .select(col("doc_id"), col("tgt"), col("mult"), posexplode(col("tk")))
         .select(col("doc_id"), col("tgt"), col("mult"), (col("pos") + 1).as("pos"),
           conv(substring(md5(col("col")), 1, 2), 16, 10).cast("long").as("b"))
       val r = tk
-        .withColumn("cnt_t",
-          sum(col("mult") * col("tgt")).over(Window.partitionBy("b")))
+        .withColumn("cnt_t", sum(col("mult") * col("tgt")).over(Window.partitionBy("b")))
         .withColumn("cnt_r", sum(col("mult")).over(Window.partitionBy("b")))
         .select(col("doc_id"), col("pos"),
           (col("cnt_t").cast("double") / col("cnt_r").cast("double")).as("r"))
@@ -665,36 +618,12 @@ object TextAnalysis {
         .select(col("doc_id"), col("n_tokens"),
           (aggregate(col("rs"), lit(0.0), (a, x) => a + x.getField("r")) /
             col("n_tokens").cast("double")).as("imp_weight"))
-      return docs.select(col("doc_id"))
-        .join(Dedup.expandByMembers(scored, hub), Seq("doc_id"), "left")
+      rows.select(col("doc_id"))
+        .join(scored, Seq("doc_id"), "left")
         .select(col("doc_id"),
           coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
           col("imp_weight"))
     }
-    val tk = graft.Tables.spread(docs)
-      .select(col("doc_id"),
-        (col("lang") <=> lit(ImpTargetLang)).cast("int").as("tgt"),
-        toks(col("text")).as("tk"))
-      .select(col("doc_id"), col("tgt"), posexplode(col("tk")))
-      .select(col("doc_id"), col("tgt"), (col("pos") + 1).as("pos"),
-        conv(substring(md5(col("col")), 1, 2), 16, 10).cast("long").as("b"))
-    val r = tk
-      .withColumn("cnt_t", sum(col("tgt")).over(Window.partitionBy("b")))
-      .withColumn("cnt_r", count(lit(1)).over(Window.partitionBy("b")))
-      .select(col("doc_id"), col("pos"),
-        (col("cnt_t").cast("double") / col("cnt_r").cast("double")).as("r"))
-    val scored = r.groupBy("doc_id")
-      .agg(count(lit(1)).as("n_tokens"),
-        sort_array(collect_list(struct(col("pos"), col("r")))).as("rs"))
-      .select(col("doc_id"), col("n_tokens"),
-        (aggregate(col("rs"), lit(0.0), (a, x) => a + x.getField("r")) /
-          col("n_tokens").cast("double")).as("imp_weight"))
-    docs.select(col("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_tokens"), lit(0L)).as("n_tokens"),
-        col("imp_weight"))
-  }
 
   /** Adjacent-token n-grams ("wᵢ … wᵢ₊ₙ₋₁") in document order — the ONE
     * formulation shared by t5/t9 (bigrams) and t10 (5-gram shingles),
@@ -796,84 +725,48 @@ object TextAnalysis {
       maxPostings: Int): DataFrame =
     contamination(docs, evalSource, maxPostings, collapse = false)
 
-  /** EXACT TWIN COLLAPSE for t10 (round 16, t13's tagged-hub rule): a
-    * document's distinct shingle set is a pure function of its TEXT,
-    * the only source-dependence is the eval FLAG, and both per-shingle
-    * corpus terms are integer occurrence sums — the posting cap is a
-    * whole-shingle FILTER (`_np <= cap` drops every row of an over-cap
-    * shingle), so it weights exactly. The shingle pass runs once per
-    * distinct (ev, text); `_np`/`n_eval` become mult-weighted sums over
-    * the same shingle partition; a text present on BOTH sides splits
-    * into two hub rows whose mults land on the correct sides (t13's
-    * tag-split case); per-representative hit counts expand back through
-    * the non-eval groups' membership. Null-id members vanish from
-    * `members` (collect_list skips nulls) exactly as the direct
-    * collect_set skips them, while their rows still weight `mult`.
+  /** Twin-collapsed through [[Collapse.byKey]] on (ev, text): a
+    * document's distinct shingle set is a pure function of its text,
+    * the only source-dependence is the eval flag, and both per-shingle
+    * corpus terms (`_np`, `n_eval`) are `mult`-weighted sums — the
+    * posting cap is a whole-shingle filter, so it weights exactly. A
+    * text present on both sides splits into two hub rows whose mults
+    * land on the correct sides.
+    *
+    * Null-SAFE source comparison: with ===/=!= a null-source doc would
+    * satisfy NEITHER side (three-valued logic), so it would never be
+    * counted as a posting and could never be flagged as contaminated —
+    * yet Curation deliberately admits null-source docs as candidates.
+    * <=> makes null source mean "not the eval set", same as the
+    * oracle's IS DISTINCT FROM.
     */
   private[graft] def contamination(docs: DataFrame, evalSource: String,
-      maxPostings: Int, collapse: Boolean): DataFrame = {
-    if (collapse) {
-      val hub = OpCaches.persisted(docs
-        .select(col("doc_id"), (col("source") <=> evalSource).as("ev"),
-          col("text"))
-        .groupBy(col("ev"), col("text"))
-        .agg(min(col("doc_id")).as("doc_id"),
-          sort_array(collect_list(col("doc_id"))).as("members"),
-          count(lit(1)).as("mult")))
-      val rep = hub
-        .select(col("doc_id"), col("ev"), col("mult"), toks(col("text")).as("t"))
-        .select(col("doc_id"), col("ev"), col("mult"),
-          explode(array_distinct(ngrams(col("t"), 5))).as("sh"))
-        .withColumn("_np",
-          sum(when(!col("ev"), col("mult")).otherwise(0L))
-            .over(Window.partitionBy("sh")))
-        .filter(col("_np") <= maxPostings)
-        .groupBy("sh")
-        .agg(
-          sum(when(col("ev"), col("mult")).otherwise(0L)).as("n_eval"),
-          collect_set(when(!col("ev"), col("doc_id"))).as("docs"))
-        .filter(col("n_eval") > 0)
-        .select(explode(col("docs")).as("doc_id"))
-        .groupBy("doc_id")
-        .agg(count(lit(1)).as("n_hit_shingles"))
-      return Dedup.expandByMembers(rep,
-        hub.filter(!col("ev")).select(col("doc_id"), col("members")))
-    }
-    contaminationDirect(docs, evalSource, maxPostings)
-  }
-
-  private def contaminationDirect(docs: DataFrame, evalSource: String,
-      maxPostings: Int): DataFrame =
-    // Null-SAFE source comparison throughout: with ===/=!= a null-source
-    // doc satisfies NEITHER side (three-valued logic), so it would never
-    // be counted as a posting and could never be flagged as contaminated
-    // — yet Curation deliberately admits null-source docs as candidates.
-    // <=> makes null source mean "not the eval set", same as the
-    // oracle's IS DISTINCT FROM.
-    docs
+      maxPostings: Int, collapse: Boolean): DataFrame =
+    Collapse.byKey(
+      docs.select(col("doc_id"), (col("source") <=> evalSource).as("ev"), col("text")),
+      Seq("ev", "text"), collapse)(rows => rows
       // Tokens MATERIALIZED as a column before the n-gram transform:
       // inlining `ngrams(toks(text))` makes every element_at in every
       // shingle lambda re-run the whole split+filter tokenizer (no CSE
       // inside expression trees — ~5 re-tokenizations per shingle, ~350
       // per document, measured 6.2 s -> 1.8 s at sf1). CollapseProject
       // keeps the alias because it is non-cheap and multiply-referenced.
-      .select(col("doc_id"), col("source"), toks(col("text")).as("t"))
-      .select(col("doc_id"), col("source"),
+      .select(col("doc_id"), col("ev"), col("mult"), toks(col("text")).as("t"))
+      .select(col("doc_id"), col("ev"), col("mult"),
         explode(array_distinct(ngrams(col("t"), 5))).as("sh"))
       .withColumn("_np",
-        sum(when(!(col("source") <=> evalSource), 1L).otherwise(0L))
-          .over(Window.partitionBy("sh")))
+        sum(when(!col("ev"), col("mult")).otherwise(0L)).over(Window.partitionBy("sh")))
       .filter(col("_np") <= maxPostings)
       .groupBy("sh")
       .agg(
-        sum(when(col("source") <=> evalSource, 1L).otherwise(0L)).as("n_eval"),
-        collect_set(when(!(col("source") <=> evalSource), col("doc_id"))).as("docs"))
+        sum(when(col("ev"), col("mult")).otherwise(0L)).as("n_eval"),
+        collect_set(when(!col("ev"), col("doc_id"))).as("docs"))
       .filter(col("n_eval") > 0)
       .select(explode(col("docs")).as("doc_id"))
       // (doc_id, shingle) is unique after the per-doc array_distinct, so
       // a plain count IS the distinct contaminated-shingle count.
       .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_hit_shingles"))
+      .agg(count(lit(1)).as("n_hit_shingles")))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "t10_contamination" -> t10Contamination,

@@ -380,7 +380,10 @@ class PropertySpec extends AnyFunSuite {
     // fire — depth 2.1 ≥ 1.2 trips the text gate), and the eval text
     // appears verbatim both as eval copies and as a corpus doc plus an
     // embedded substring (t13's tag-split groups: same text, both
-    // sides). Direct forms are the committed frame-level cores.
+    // sides). Null doc_ids: null-id copies of duplicated texts (t0, t3,
+    // an eval copy) and a text held only by null ids (tn) — a collapse
+    // must neither drop nor expand them. Direct forms are the
+    // committed frame-level cores (t10: the row-counting spec form).
     import graft.ops.Dedup
     val b = "this exact boilerplate header sentence repeats verbatim across many documents"
     val ev = "benchmark evaluation question text that must be detected verbatim in the corpus"
@@ -388,13 +391,16 @@ class PropertySpec extends AnyFunSuite {
     val t1 = b + " beta continuation with other unique words here"
     val tu = "entirely unrelated text with no duplicated spans anywhere inside it at all"
     val t3 = "prefix words then " + ev + " and suffix words after"
-    val rows = Seq(
-      (1L, "src1", t0), (2L, "src2", t0), (3L, "src1", t0),
-      (4L, "src1", t1), (5L, "src2", t1),
-      (6L, "src1", tu),
-      (7L, "src1", t3), (8L, "src2", t3),
-      (9L, "src1", ev),
-      (20L, "src0", ev), (21L, "src0", ev))
+    val tn = b + " gamma continuation held by documents without ids"
+    val rows = Seq[(Option[Long], String, String)](
+      (Some(1L), "src1", t0), (Some(2L), "src2", t0), (Some(3L), "src1", t0),
+      (Some(4L), "src1", t1), (Some(5L), "src2", t1),
+      (Some(6L), "src1", tu),
+      (Some(7L), "src1", t3), (Some(8L), "src2", t3),
+      (Some(9L), "src1", ev),
+      (Some(20L), "src0", ev), (Some(21L), "src0", ev),
+      (None, "src2", t0), (None, "src1", t3), (None, "src0", ev),
+      (None, "src1", tn), (None, "src2", tn))
     val dir = java.nio.file.Files.createTempDirectory("spanTwins").toFile
     try {
       rows.toDF("doc_id", "source", "text").write.mode("overwrite")
@@ -405,8 +411,10 @@ class PropertySpec extends AnyFunSuite {
         .filter(!(col("source") <=> lit("src0"))).select("doc_id", "text")
       val eval = spark.read.parquet(s"${dir.getPath}/documents.parquet")
         .filter(col("source") <=> lit("src0")).select("doc_id", "text")
-      def set(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(_.toSeq.toList).toSet
+      // Multisets, not sets: null-id rows can repeat, and a collapse
+      // that drops or duplicates one must show.
+      def bag(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(_.toSeq.toList).groupBy(identity).view.mapValues(_.length).toMap
       val withSource = spark.read.parquet(s"${dir.getPath}/documents.parquet")
       val pairs: Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = Seq(
         ("d12", Dedup.d12SubstrSpans(spark, dir.getPath), Dedup.substrSpans(all)),
@@ -416,19 +424,28 @@ class PropertySpec extends AnyFunSuite {
         ("t14", Dedup.t14ContamScrub(spark, dir.getPath),
           Dedup.scrubWith(corpus, Dedup.contamSpans(corpus, eval))),
         ("d14", Dedup.d14Winnow(spark, dir.getPath), Dedup.winnow(all)),
-        // t10 joined the family in the r16 third pass: its (ev, text)
-        // tagged hub runs the 5-gram pass per distinct pair, with the
-        // whole-shingle posting cap as a mult-weighted sum. src0 is the
-        // engine's EvalSource; ev appears as BOTH eval copies and a
-        // corpus doc (tag-split), and t3 embeds ev's shingles.
+        // t10's (ev, text) collapse runs the 5-gram pass per distinct
+        // pair, with the whole-shingle posting cap as a mult-weighted
+        // sum. src0 is the engine's EvalSource; ev appears as BOTH eval
+        // copies and a corpus doc (tag-split), and t3 embeds ev's
+        // shingles. Both the public entry and the frame core answer to
+        // the row-counting spec form.
         ("t10", graft.ops.TextAnalysis.t10Contamination(spark, dir.getPath),
-          graft.ops.TextAnalysis.contamination(withSource, "src0", 1000)))
-      for ((name, got, want) <- pairs) {
-        val (g, w) = (set(got), set(want))
+          graft.ops.DirectForms.contamination(withSource, "src0", 1000)),
+        ("t10 core", graft.ops.TextAnalysis.contamination(withSource, "src0", 1000),
+          graft.ops.DirectForms.contamination(withSource, "src0", 1000)))
+      val diverged = pairs.filter { case (name, got, want) =>
+        val g = bag(got)
         assert(g.nonEmpty, s"$name produced no rows — vacuous")
-        assert(g == w, s"$name collapse diverged from direct")
-      }
-      // The collapse actually engaged (gate depth 11/6 ≥ 1.2).
+        g != bag(want)
+      }.map(_._1)
+      assert(diverged.isEmpty, s"collapse diverged from direct: ${diverged.mkString(", ")}")
+      // Non-vacuous on null ids: d13 returns every input document once,
+      // the null-id ones included, and d12 flags the null-only text.
+      assert(bag(Dedup.d13SpanScrub(spark, dir.getPath)).values.sum == all.count())
+      assert(Dedup.d12SubstrSpans(spark, dir.getPath).filter(col("doc_id").isNull)
+        .count() > 0)
+      // The collapse actually engaged (gate depth 16/6 ≥ 1.2).
       assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")))
     } finally {
       def rm(f: java.io.File): Unit = {
@@ -443,17 +460,22 @@ class PropertySpec extends AnyFunSuite {
     // 3 texts × 3 copies + a singleton + empty + null text: the text hub,
     // the membership expansion and the no-token drop all fire. Driver
     // fixtures are twin-free, so these legs otherwise only execute at
-    // the 100× gate. (t6 was measured on this corpus too and its
-    // collapse REVERTED — see the negative-result note on t6TfIdf.)
+    // the 100× gate. A null-id copy of t1 and a text held only by null
+    // ids (t5): the direct groupBy merges every null-id document into
+    // one signature row, and the collapse must give that same row.
+    // (t6 was measured on this corpus too and its collapse REVERTED —
+    // see the negative-result note on t6TfIdf.)
     val t1 = "alpha beta gamma delta alpha beta"
     val t2 = "alpha beta gamma delta epsilon zeta"
     val t3 = "zeta eta theta iota kappa lambda zeta"
     val t4 = "mu nu xi omicron pi rho sigma tau"
-    val rows = Seq(
-      (1L, t1), (2L, t1), (3L, t1),
-      (4L, t2), (5L, t2), (6L, t2),
-      (7L, t3), (8L, t3), (9L, t3),
-      (10L, t4), (11L, ""), (12L, null.asInstanceOf[String]))
+    val t5 = "upsilon phi chi psi omega"
+    val rows = Seq[(Option[Long], String)](
+      (Some(1L), t1), (Some(2L), t1), (Some(3L), t1),
+      (Some(4L), t2), (Some(5L), t2), (Some(6L), t2),
+      (Some(7L), t3), (Some(8L), t3), (Some(9L), t3),
+      (Some(10L), t4), (Some(11L), ""), (Some(12L), null.asInstanceOf[String]),
+      (None, t1), (None, t5), (None, t5))
     val dir = java.nio.file.Files.createTempDirectory("sigTwins").toFile
     try {
       rows.toDF("doc_id", "text")
@@ -461,18 +483,18 @@ class PropertySpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"${dir.getPath}/documents.parquet")
       // The public entries must take the collapse branch on this corpus.
       assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")))
-      assert(!graft.ops.Dedup.hasNullDocId(spark, dir.getPath))
-      def set(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(_.toSeq.toList).toSet
+      def bag(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(_.toSeq.toList).groupBy(identity).view.mapValues(_.length).toMap
       val pairs: Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = Seq(
         ("d3", graft.ops.Dedup.d3Simhash(spark, dir.getPath),
           graft.ops.Dedup.d3SimhashImpl(spark, dir.getPath, collapse = false)),
         ("d7", graft.ops.Dedup.d7Simhash64(spark, dir.getPath),
           graft.ops.Dedup.d7Simhash64Impl(spark, dir.getPath, collapse = false)))
       for ((name, got, want) <- pairs) {
-        val (g, w) = (set(got), set(want))
+        val (g, w) = (bag(got), bag(want))
         assert(g.nonEmpty, s"$name produced no rows — vacuous")
         assert(g == w, s"$name collapse diverged from direct")
+        assert(g.keys.exists(_.head == null), s"$name lost the null-id signature")
       }
     } finally {
       def rm(f: java.io.File): Unit = {
@@ -945,40 +967,46 @@ class PropertySpec extends AnyFunSuite {
     // mixed langs so t16's tgt flag splits one text across hub groups
     // (same text under en AND de — the (tgt, text) key's hard case),
     // shared bigrams across texts (the model counts aggregate across
-    // groups), a sub-2-token doc (n_bigrams 0, null score) and a null
-    // text. Direct forms are the committed frame-level cores; scores
+    // groups), a sub-2-token doc (n_bigrams 0, null score), a null
+    // text, a null-id copy of t0 and a text held only by null ids (t2).
+    // The reference is the row-counting spec form (DirectForms); scores
     // must match BIT-FOR-BIT (integer-weighted sums, same quotient),
     // not approximately — so compare raw doubles, no rounding.
     val b = "the quick brown fox jumps over the lazy dog again and again"
     val t0 = b + " alpha tail"
     val t1 = b + " beta tail words"
-    val rows = Seq(
-      (1L, t0, "en", "src1"), (2L, t0, "en", "src2"), (3L, t0, "de", "src1"),
-      (4L, t1, "en", "src1"), (5L, t1, "de", "src2"), (6L, t1, "de", "src3"),
-      (7L, t1, "de", "src1"),
-      (8L, "single", "en", "src1"),
-      (9L, null.asInstanceOf[String], "de", "src1"))
+    val t2 = b + " gamma tail held without ids"
+    val rows = Seq[(Option[Long], String, String, String)](
+      (Some(1L), t0, "en", "src1"), (Some(2L), t0, "en", "src2"),
+      (Some(3L), t0, "de", "src1"),
+      (Some(4L), t1, "en", "src1"), (Some(5L), t1, "de", "src2"),
+      (Some(6L), t1, "de", "src3"), (Some(7L), t1, "de", "src1"),
+      (Some(8L), "single", "en", "src1"),
+      (Some(9L), null.asInstanceOf[String], "de", "src1"),
+      (None, t0, "en", "src2"), (None, t2, "en", "src1"), (None, t2, "de", "src1"))
     val dir = java.nio.file.Files.createTempDirectory("lmTwins").toFile
     try {
       rows.toDF("doc_id", "text", "lang", "source").write.mode("overwrite")
         .parquet(s"${dir.getPath}/documents.parquet")
       val docs = spark.read.parquet(s"${dir.getPath}/documents.parquet")
-      def set(df: org.apache.spark.sql.DataFrame) = df.collect()
-        .map(_.toSeq.toList).toSet
-      import graft.ops.TextAnalysis
-      // Gates actually engage on this corpus (9 docs / 4 distinct texts;
-      // 6 distinct (lang, text) pairs — 9/6 = 1.5 ≥ 1.2).
+      // Multisets: the null-id rows repeat.
+      def bag(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .map(_.toSeq.toList).groupBy(identity).view.mapValues(_.length).toMap
+      import graft.ops.{DirectForms, TextAnalysis}
+      // Gates actually engage on this corpus (12 docs / 5 distinct texts;
+      // 8 distinct (lang, text) pairs — 12/8 = 1.5 ≥ 1.2).
       assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")))
       assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("lang", "text")))
-      val lmGot = set(TextAnalysis.t15LmScore(spark, dir.getPath))
-      val lmWant = set(TextAnalysis.lmScore(docs))
+      val lmWant = bag(DirectForms.lmScore(docs))
+      val lmGot = bag(TextAnalysis.t15LmScore(spark, dir.getPath))
       assert(lmGot.nonEmpty && lmGot == lmWant, "t15 collapse diverged")
-      val impGot = set(TextAnalysis.t16Importance(spark, dir.getPath))
-      val impWant = set(TextAnalysis.importanceWeights(docs))
+      assert(bag(TextAnalysis.lmScore(docs)) == lmWant, "t15 direct diverged")
+      val impWant = bag(DirectForms.importanceWeights(docs))
+      val impGot = bag(TextAnalysis.t16Importance(spark, dir.getPath))
       assert(impGot.nonEmpty && impGot == impWant, "t16 collapse diverged")
-      // The collapse paths were exercised, not vacuously equal: the
-      // weighted hub really has multi-member groups on this corpus.
-      assert(lmGot.size == rows.size && impGot.size == rows.size)
+      assert(bag(TextAnalysis.importanceWeights(docs)) == impWant, "t16 direct diverged")
+      // Every document comes back once, null ids included.
+      assert(lmGot.values.sum == rows.size && impGot.values.sum == rows.size)
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
