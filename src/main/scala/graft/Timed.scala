@@ -5,11 +5,12 @@ import org.apache.spark.sql.SparkSession
 /** Ad-hoc per-query timer for queries OUTSIDE the Bench headline set
   * (Bench's set stays frozen for cross-round comparability):
   * `sbt "runMain graft.Timed <sfDir> <query...>"` — warm-up + min-of-3
-  * per query, cache cleared between runs. Deliberately measures via
-  * `count()`, the SAME action Bench and BENCHCMP use — its numbers are
-  * commensurable with the official envelope, with the shared caveat
-  * that count() lets the optimizer prune unconsumed projections.
-  * Honors `SPARK_GRAFT_CPUS` like Bench/Verify for the same reason.
+  * per query, cache cleared between runs. Each run writes the full
+  * result to the `noop` sink, so the whole plan executes: unlike
+  * Bench's `count()`, nothing lets the optimizer prune unconsumed
+  * projections or eliminate a left join, and every query's wall is
+  * end to end. Its numbers are therefore NOT commensurable with Bench
+  * or BENCHCMP figures. Honors `SPARK_GRAFT_CPUS` like Bench/Verify.
   */
 object Timed {
   def main(args: Array[String]): Unit = {
@@ -30,11 +31,13 @@ object Timed {
         // A failing query reports FAILED and the loop continues — one
         // bad query must not lose the measurements before it.
         try {
-          SparkEntry.queries(n)(spark, dir).count() // warm
+          def run(): Unit = SparkEntry.queries(n)(spark, dir)
+            .write.format("noop").mode("overwrite").save()
+          run() // warm
           val times = (1 to 3).map { _ =>
             spark.catalog.clearCache()
             val t0 = System.nanoTime()
-            SparkEntry.queries(n)(spark, dir).count()
+            run()
             (System.nanoTime() - t0) / 1e9
           }
           println(f"TIMING $n min=${times.min}%.3f " +

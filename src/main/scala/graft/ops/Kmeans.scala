@@ -45,56 +45,60 @@ object Kmeans {
   private[graft] def quantize(vecCol: Column): Column =
     transform(vecCol, x => floor(x.cast("double") * Scale).cast("long"))
 
-  /** Exact integer squared-L2 between two scaled-long arrays — the
-    * native codegen'd kernel ([[graft.functions.SqDistLong]]): one fused
-    * long loop inside whole-stage codegen instead of per-element
-    * higher-order-function lambdas. Long addition is associative, so it
-    * is bit-identical to [[sqDistComposed]] (FunctionsSpec pins it).
+  /** The first-k vectors (`id` < k), each split into its `dim`-wide
+    * subspaces: `(sub, id, cv)` sorted by (sub, id). These are the seed
+    * centroids of every literal codebook — s7's flat k-means is the one-
+    * subspace case (`dim` = the vector width), s8's training seeds and
+    * s4/s5's fixed codebook split the same vectors four ways. A bounded
+    * driver hop of k rows.
     */
-  private def sqDist(a: Column, b: Column): Column =
-    graft.functions.SqDistLong.sq_dist_long(a, b)
+  private[ops] def seeds[T](e: DataFrame, id: String, v: String, k: Int,
+      dim: Int): Seq[(Int, Long, Seq[T])] =
+    e.filter(col(id) < k).select(col(id), col(v)).collect().toSeq
+      .flatMap(r => r.getSeq[T](1).grouped(dim).zipWithIndex
+        .map { case (cv, b) => (b, r.getLong(0), cv) })
+      .sortBy(c => (c._1, c._2))
 
-  /** Composed-builtins form — the semantic spec the native expression is
-    * tested bit-identical against.
+  /** Single-pass nearest-centroid assignment: `e`'s columns plus
+    * `(sub, cell, dist)`, one row per (input row, subspace that has
+    * centroids). ONE projection over the unexploded vector `v` slices
+    * each subspace b once (`slice(v, b·dim + 1, dim)`); the generator
+    * above it builds, per b, `least()` over b's k `struct(dist, cell,
+    * sub)` candidates and explodes the array of the per-subspace
+    * winners. `least`'s struct ordering compares fields in order —
+    * distance asc, then cell asc — which IS the deterministic tie-break
+    * the oracles replay. Centroids are driver literals, so the argmin is
+    * a narrow map: no join, no shuffle, and every distance is the native
+    * kernel `dist` inside whole-stage codegen. The explode's input is the
+    * array expression itself, not a column: over a column the optimizer
+    * would infer a non-empty filter and push it, array and all, below
+    * the projection (d4's explode_outer note). Rows of a subspace with no
+    * centroids vanish; with no centroids at all every row does.
     */
-  private[graft] def sqDistComposed(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)),
-      lit(0L), (acc, x) => acc + x)
-
-  /** Row-local argmin against driver-literal centroids: `least()` over k
-    * codegen'd `struct(dist, cell)` expressions. `least`'s struct ordering
-    * compares fields in order — squared-L2 asc, then cell asc — which IS
-    * the deterministic tie-break the oracle replays, and every distance
-    * stays inside whole-stage codegen (sq_dist_long over a literal array).
-    */
-  private def bestCell(q: Column, cents: Seq[(Long, Seq[Long])]): Column = {
-    val candidates = cents.map { case (cell, cv) =>
-      struct(sqDist(q, array(cv.map(lit): _*)).as("dist"),
-        lit(cell).as("cell"))
+  private[ops] def nearest[T](e: DataFrame, v: String, cents: Seq[(Int, Long, Seq[T])],
+      dim: Int, dist: (Column, Column) => Column): DataFrame = {
+    val keep = e.columns.toSeq.map(col)
+    val bySub = cents.groupBy(_._1).toSeq.sortBy(_._1)
+    val subs = if (bySub.isEmpty) Seq(0) else bySub.map(_._1) // 0: the dummy's
+    val sliced = e.select(keep ++ subs.map(b =>
+      slice(col(v), b * dim + 1, dim).as(s"sv_$b")): _*)
+    def cand(b: Int, d: Column, cell: Long): Column =
+      struct(d.as("dist"), lit(cell).as("cell"), lit(b).as("sub"))
+    val best = bySub.map { case (b, cs) =>
+      val cands = cs.map { case (_, cell, cv) =>
+        cand(b, dist(col(s"sv_$b"), array(cv.map(lit): _*)), cell)
+      }
+      if (cands.sizeIs == 1) cands.head else least(cands: _*)
     }
-    // Empty centroid set (degenerate empty corpus): a non-null dummy —
-    // [[assign]]'s constant-false filter drops every row (the old join
-    // form's semantics), and the dummy keeps the schema's nullability
-    // identical to the normal path (DegenerateCorpusSpec pins degenerate
-    // == sf0.001 schemas exactly). least() needs > 1 children.
-    // (The dummy's dist is the kernel itself — sq_dist(q, q) — so its
-    // nullability matches the normal path's exactly.)
-    if (candidates.isEmpty) struct(sqDist(q, q).as("dist"), lit(0L).as("cell"))
-    else if (candidates.sizeIs == 1) candidates.head
-    else least(candidates: _*)
+    // No centroids: an empty array of the same element type — a dummy
+    // candidate (its dist the kernel itself, so nullability matches)
+    // sliced to length 0. DegenerateCorpusSpec pins the schema parity.
+    val winners =
+      if (best.isEmpty) slice(array(cand(0, dist(col("sv_0"), col("sv_0")), 0L)), 1, 0)
+      else array(best: _*)
+    sliced.select(keep :+ explode(winners).as("a"): _*)
+      .select(keep ++ Seq("sub", "cell", "dist").map(f => col(s"a.$f").as(f)): _*)
   }
-
-  /** One assignment pass: every vector to its nearest centroid (squared-L2
-    * asc, cell asc) — a narrow per-row map ([[bestCell]]); the vector
-    * never leaves its input partition. The constant filter only ever
-    * drops rows on an empty centroid set (degenerate corpora), where the
-    * old join form returned zero rows.
-    */
-  private def assign(e: DataFrame, cents: Seq[(Long, Seq[Long])]): DataFrame =
-    e.select(col("id"), col("q"), bestCell(col("q"), cents).as("best"))
-      .filter(lit(cents.nonEmpty))
-      .select(col("id"), col("best.cell").as("cell"), col("q"),
-        col("best.dist").as("dist"))
 
   /** EXACT WEIGHTED-TWIN COLLAPSE for the update aggregations (round
     * 16, the dedup family's pattern carried into training): assignment
@@ -113,12 +117,11 @@ object Kmeans {
     * share a value but must stay distinct centroids). Unique-vector
     * corpora keep the scan-per-round form: the scaladoc above is
     * explicit that caching a 100 TB corpus is not a plan, and the
-    * hub IS the corpus when nothing is duplicated.
+    * hub IS the corpus when nothing is duplicated. The verdict is
+    * memoized on the table's file listing ([[graft.Tables.memoOnListing]]).
     */
-  private val embGates = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]
-
   private[graft] def embTwinGate(s: SparkSession, dir: String): Boolean =
-    embGates.computeIfAbsent(dir, _ => {
+    graft.Tables.memoOnListing(s, dir, "embeddings", "embedding") {
       val st = graft.Tables.spread(load(s, dir, "embeddings"))
         .agg(count(lit(1)).as("n"),
           approx_count_distinct(xxhash64(col("embedding"))).as("nd"))
@@ -126,207 +129,80 @@ object Kmeans {
       // n > 0: empty corpus = no twins (Dedup.twinGate's rule — 0 >= 0
       // must not route degenerate inputs onto the collapse plans).
       st.getLong(0) > 0L && st.getLong(0) * 10L >= st.getLong(1) * 12L
-    })
+    }
+
+  /** Exact integer squared-L2 — the native `sq_dist_long` kernel. */
+  private val sqDist: (Column, Column) => Column = graft.functions.Functions.sq_dist_long
 
   /** Lloyd's: `iters` × (assign → integer-mean update), then a final
     * assignment against the trained centroids. `e` must be
-    * `(id: long, q: array<long>)` with `dim`-length vectors. Returns the
-    * final assignment frame and the trained centroids.
+    * `(id: long, q: array<long>)`; centroids are `(sub, cell, cv)` with
+    * `dim`-wide `cv`, subspace b covering `q`'s components
+    * [b·dim + 1, (b + 1)·dim]. Flat k-means is one subspace; PQ training
+    * is one subspace per codebook, all trained JOINTLY — the per-subspace
+    * runs are independent k-means whose only coupling is the driver
+    * loop, so one action per round trains every codebook. Returns the
+    * final assignment `(id, q, sub, cell, dist)` and the trained
+    * centroids.
+    *
+    * Each round aggregates `sum(w)` and `sum(q_i · w)` by (sub, cell)
+    * over ONE weight-carrying frame: the persisted `(q, w)` twin hub
+    * when `collapse` (see [[embTwinGate]]), else `e` itself with w = 1.
+    * The (sub × k) result rows × (dim + 3) values round-trip through the
+    * driver as the next round's literal centroids.
     */
-  private[graft] def lloyd(e: DataFrame, init: Seq[(Long, Seq[Long])],
+  private[graft] def lloyd(e: DataFrame, init: Seq[(Int, Long, Seq[Long])],
       iters: Int = Iters, dim: Int = Dim,
-      collapse: Boolean = false): (DataFrame, Seq[(Long, Seq[Long])]) = {
-    val hub = if (!collapse) null else OpCaches.persisted(
-      e.groupBy(col("q")).agg(count(lit(1)).as("w")))
+      collapse: Boolean = false): (DataFrame, Seq[(Int, Long, Seq[Long])]) = {
+    val weighted =
+      if (collapse) OpCaches.persisted(e.groupBy(col("q")).agg(count(lit(1)).as("w")))
+      else e.select(col("q"), lit(1L).as("w"))
+    val sums = (1 to dim).map(i =>
+      sum(element_at(col("q"), col("sub") * dim + i) * col("w")).as(s"s_$i"))
     var cents = init
     for (_ <- 1 to iters) {
-      val stats = (if (collapse) {
-        val a = hub
-          .select(col("w"), col("q"), bestCell(col("q"), cents).as("best"))
-          .filter(lit(cents.nonEmpty))
-        val sums = (1 to dim).map(i =>
-          sum(element_at(col("q"), i) * col("w")).as(s"s_$i"))
-        a.groupBy(col("best.cell").as("cell"))
-          .agg(sum(col("w")).as("n"), sums: _*)
-      } else {
-        val a = assign(e, cents)
-        val sums = (1 to dim).map(i => sum(element_at(col("q"), i)).as(s"s_$i"))
-        // k rows × (dim+1) longs — the bounded driver hop.
-        a.groupBy("cell").agg(count(lit(1)).as("n"), sums: _*)
-      }).collect()
-        .map(r => r.getLong(0) -> r).toMap
-      cents = cents.map { case (cell, prev) =>
-        stats.get(cell) match {
+      val stats = nearest(weighted, "q", cents, dim, sqDist)
+        .groupBy("sub", "cell").agg(sum(col("w")).as("n"), sums: _*)
+        .collect()
+        .map(r => (r.getInt(0), r.getLong(1)) -> r).toMap
+      cents = cents.map { case (b, cell, prev) =>
+        stats.get((b, cell)) match {
           case Some(r) =>
-            val n = r.getLong(1)
+            val n = r.getLong(2)
             // floorDiv, not /: sums go negative and the oracle's pmod
             // identity floors — truncation would diverge on negatives.
-            cell -> Seq.tabulate(dim)(i => Math.floorDiv(r.getLong(2 + i), n))
-          case None => cell -> prev // empty cell keeps its centroid
+            (b, cell, Seq.tabulate(dim)(i => Math.floorDiv(r.getLong(3 + i), n)))
+          case None => (b, cell, prev) // empty cell keeps its centroid
         }
       }
     }
-    (assign(e, cents), cents)
+    (nearest(e, "q", cents, dim, sqDist), cents)
+  }
+
+  /** Lloyd's over the quantized corpus, seeded with the first-k vectors
+    * split into `dim`-wide subspaces, collapsed behind [[embTwinGate]].
+    */
+  private def train(s: SparkSession, dir: String, k: Int, iters: Int,
+      dim: Int): (DataFrame, Seq[(Int, Long, Seq[Long])]) = {
+    val e = corpus(s, dir)
+    lloyd(e, seeds[Long](e, "id", "q", k, dim), iters, dim, collapse = embTwinGate(s, dir))
   }
 
   /** Trained centroids for downstream IVF/PQ consumers: `(cell, cv)` with
     * scaled-long components (divide by [[Scale]] for float space).
     */
   def trainCentroids(s: SparkSession, dir: String,
-      k: Int = K, iters: Int = Iters): Seq[(Long, Seq[Long])] = {
-    val e = corpus(s, dir)
-    lloyd(e, initFrom(e, k), iters, collapse = embTwinGate(s, dir))._2
-  }
+      k: Int = K, iters: Int = Iters): Seq[(Long, Seq[Long])] =
+    train(s, dir, k, iters, Dim)._2.map(c => (c._2, c._3))
 
-  /** Per-subspace PQ codebook training over each subspace's subvectors
-    * (layout shared with s4/s5 via [[Similarity.subvectors]]), seeded
-    * like s4's codebook with the first-k vectors' subvectors. Returns
-    * `(sub_idx, cent_id, cv)` in scaled-long space —
-    * [[Similarity.s4PqCodesTrained]] maps it back to float space and
-    * feeds the unchanged assignment operator. All subspaces train
-    * JOINTLY in one grouped Lloyd's ([[lloydGrouped]]): one job per
-    * round over the shared quantized subvector frame.
+  /** Per-subspace PQ codebooks, `(sub, cell, cv)` in scaled-long space,
+    * seeded like s4's codebook with the first-k vectors' subvectors —
+    * [[Similarity.s4PqCodesTrained]] maps them back to float space and
+    * feeds the unchanged assignment operator.
     */
   def trainPqCodebooks(s: SparkSession, dir: String,
-      k: Int = K, iters: Int = Iters): Seq[(Int, Long, Seq[Long])] = {
-    val subs = quantizedSubvectors(s, dir).persist()
-    try trainPqOn(subs, k, iters, collapse = embTwinGate(s, dir))
-    finally subs.unpersist()
-  }
-
-  private def quantizedSubvectors(s: SparkSession, dir: String): DataFrame =
-    Similarity.subvectors(s, dir)
-      .select(col("vec_id"), col("sub_idx"), quantize(col("sv")).as("q"))
-
-  /** Training core over an (ideally persisted) quantized-subvector
-    * frame. All subspaces train JOINTLY: the per-subspace Lloyd's runs
-    * are independent k-means whose only coupling is the driver loop, so
-    * one grouped iteration — centroids keyed (sub, cell), assignment
-    * joined on sub, stats grouped by (sub, cell) — trains every
-    * codebook with ONE action per round (k x subspaces rows through
-    * the driver) instead of subspaces x (init + rounds + final)
-    * sequential jobs. Per-subspace arithmetic, tie-breaks and results
-    * are bit-identical to the sequential formulation (the s8 oracle
-    * already replays exactly this shape: the `sub` key threaded through
-    * every CTE). Persisting still matters: init + per-round stats +
-    * the caller's final assignment would otherwise each re-scan the
-    * parquet AND re-run the subvector explode+quantize.
-    * (s7's flat corpus is deliberately NOT cached: one scan per round
-    * is the textbook k-means cost and caching a 100 TB corpus is not a
-    * plan — the exploded subvector frame here is derived work worth
-    * keeping for the bounded training window.)
-    */
-  private def trainPqOn(subs: DataFrame, k: Int,
-      iters: Int, collapse: Boolean = false): Seq[(Int, Long, Seq[Long])] = {
-    val e = subs.select(col("sub_idx").cast("int").as("gid"),
-      col("vec_id").as("id"), col("q"))
-    lloydGrouped(e, initGrouped(e, k), iters, Similarity.PqSubDim, collapse)._2
-  }
-
-  /** Grouped assignment: like [[assign]] but each row picks the argmin
-    * within its own group's centroids — a CASE chain over gid (groups are
-    * the handful of PQ subspaces), each arm a row-local [[bestCell]].
-    * Still narrow; the inner-join semantics of the old broadcast-join form
-    * (rows whose gid has no centroids vanish) are kept by the null filter.
-    */
-  private def groupedBest(cents: Seq[(Int, Long, Seq[Long])]): Column = {
-    val byGid = cents.groupBy(_._1).view.mapValues(_.map(c => (c._2, c._3)))
-      .toSeq.sortBy(_._1)
-    byGid.foldLeft(lit(null).cast("struct<dist:bigint,cell:bigint>")) {
-      case (acc, (g, cs)) =>
-        when(col("gid") === g, bestCell(col("q"), cs)).otherwise(acc)
-    }
-  }
-
-  private def assignGrouped(e: DataFrame,
-      cents: Seq[(Int, Long, Seq[Long])]): DataFrame = {
-    // One filtered branch per subspace, unioned — NOT the single nested
-    // groupedBest CASE chain (round-17 measurement: the chain form ran
-    // the 100×-gate final assignment at ~19 µs/row, 15 s of s8's 17 s
-    // wall; the branch form with one s7-sized bestCell per branch is
-    // ~10× faster; see OPTIMIZATION_r17.md). Row set is identical: gids
-    // partition the input, rows whose gid has no centroids are dropped
-    // by both forms, and `when(lit(true), …)` pins the analyzed
-    // nullability to the old chain's (nullable best).
-    val byGid = cents.groupBy(_._1).view.mapValues(_.map(c => (c._2, c._3)))
-      .toSeq.sortBy(_._1)
-    val assigned =
-      if (byGid.isEmpty)
-        // Empty-cents semantics: zero rows (every gid lacks centroids).
-        // A constant-false filter with a non-null dummy best, so the
-        // degenerate schema's nullability matches the branch form below
-        // exactly (DegenerateCorpusSpec pins degenerate == sf0.001).
-        // dist: null literal (nullable, like the kernel's dist over a
-        // nullable vector column); cell: 0L (non-null, like lit(cell)).
-        e.filter(lit(false)).select(col("gid"), col("id"), col("q"),
-          struct(lit(null).cast("long").as("dist"), lit(0L).as("cell")).as("best"))
-      else byGid.map { case (g, cs) =>
-        e.filter(col("gid") === g)
-          .select(col("gid"), col("id"), col("q"),
-            bestCell(col("q"), cs).as("best"))
-      }.reduce(_ unionByName _)
-    assigned.filter(col("best").isNotNull)
-      .select(col("gid"), col("id"), col("best.cell").as("cell"), col("q"),
-        col("best.dist").as("dist"))
-  }
-
-  /** Grouped Lloyd's: [[lloyd]] with an extra group key on every step —
-    * N independent k-means in one job per round. `e` must be
-    * `(gid: int, id: long, q: array<long>)`.
-    */
-  private[graft] def lloydGrouped(e: DataFrame, init: Seq[(Int, Long, Seq[Long])],
-      iters: Int, dim: Int,
-      collapse: Boolean = false): (DataFrame, Seq[(Int, Long, Seq[Long])]) = {
-    // Same weighted-twin collapse as [[lloyd]], keyed per subspace.
-    val hub = if (!collapse) null else OpCaches.persisted(
-      e.groupBy(col("gid"), col("q")).agg(count(lit(1)).as("w")))
-    var cents = init
-    for (_ <- 1 to iters) {
-      val stats = (if (collapse) {
-        val a = hub
-          .select(col("gid"), col("w"), col("q"), groupedBest(cents).as("best"))
-          .filter(col("best").isNotNull)
-        val sums = (1 to dim).map(i =>
-          sum(element_at(col("q"), i) * col("w")).as(s"s_$i"))
-        a.groupBy(col("gid"), col("best.cell").as("cell"))
-          .agg(sum(col("w")).as("n"), sums: _*)
-      } else {
-        val a = assignGrouped(e, cents)
-        val sums = (1 to dim).map(i => sum(element_at(col("q"), i)).as(s"s_$i"))
-        // (k x groups) rows x (dim+2) values — still the bounded driver hop.
-        a.groupBy("gid", "cell").agg(count(lit(1)).as("n"), sums: _*)
-      }).collect()
-        .map(r => (r.getInt(0), r.getLong(1)) -> r).toMap
-      cents = cents.map { case (g, cell, prev) =>
-        stats.get((g, cell)) match {
-          case Some(r) =>
-            val n = r.getLong(2)
-            (g, cell, Seq.tabulate(dim)(i => Math.floorDiv(r.getLong(3 + i), n)))
-          case None => (g, cell, prev) // empty cell keeps its centroid
-        }
-      }
-    }
-    (assignGrouped(e, cents), cents)
-  }
-
-  /** First-k-vectors init per group — each group's seed is its own
-    * subvector of the same first-k vectors, exactly [[initFrom]] applied
-    * groupwise (ids are shared across groups by construction).
-    */
-  private def initGrouped(e: DataFrame, k: Int): Seq[(Int, Long, Seq[Long])] =
-    e.filter(col("id") < k).orderBy("gid", "id")
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getSeq[Long](2)))
-      .toSeq
-
-  /** First-k-vectors init — deterministic, and exactly what s3/s4 use as
-    * their fixed codebooks, so trained centroids are a drop-in refinement.
-    */
-  private def initFrom(e: DataFrame, k: Int): Seq[(Long, Seq[Long])] =
-    e.filter(col("id") < k).orderBy("id")
-      .collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1))
-      .toSeq
+      k: Int = K, iters: Int = Iters): Seq[(Int, Long, Seq[Long])] =
+    train(s, dir, k, iters, Similarity.PqSubDim)._2
 
   private def corpus(s: SparkSession, dir: String): DataFrame =
     // spread: per-row distance math above a single-row-group scan; the
@@ -340,10 +216,9 @@ object Kmeans {
     * cosine on exactly these quantized components, so engine and
     * oracle share one vector formulation).
     */
-  private[ops] def assignedWithVec(s: SparkSession, dir: String): DataFrame = {
-    val e = corpus(s, dir)
-    lloyd(e, initFrom(e, K), collapse = embTwinGate(s, dir))._1
-  }
+  private[ops] def assignedWithVec(s: SparkSession, dir: String): DataFrame =
+    train(s, dir, K, Iters, Dim)._1
+      .select(col("id"), col("cell"), col("q"), col("dist"))
 
   /** s7 — k-means cell assignment after [[Iters]] Lloyd's iterations:
     * `(vec_id, cell, dist)`, all exact integers, hash-pinned against the
@@ -354,43 +229,20 @@ object Kmeans {
       .select(col("id").as("vec_id"), col("cell"), col("dist"))
 
   /** s8 — PQ codes from TRAINED codebooks, end to end and oracle-gated:
-    * per-subspace Lloyd's training ([[trainPqCodebooks]]) followed by
-    * nearest-centroid code assignment, entirely in the scaled-long
-    * space so every number is exact. This closes the loop the round-3
-    * verdict called out: s4's seed-codebook codes were oracled, the
-    * trained variant was spec-gated only — now the whole train→assign
-    * path hash-matches a DuckDB replay. The oracle is s7's unrolled-CTE
-    * arithmetic with ONE extra grouping key (the subspace): same
-    * quantization, same integer mean, same tie-breaks — the subspace
-    * dimension multiplies rows, not SQL.
+    * per-subspace Lloyd's training followed by nearest-centroid code
+    * assignment, entirely in the scaled-long space so every number is
+    * exact. This closes the loop the round-3 verdict called out: s4's
+    * seed-codebook codes were oracled, the trained variant was
+    * spec-gated only — now the whole train→assign path hash-matches a
+    * DuckDB replay. The oracle is s7's unrolled-CTE arithmetic with ONE
+    * extra grouping key (the subspace): same quantization, same integer
+    * mean, same tie-breaks — the subspace dimension multiplies rows, not
+    * SQL. The code assignment is training's own final assignment.
     */
-  def s8PqTrained(s: SparkSession, dir: String): DataFrame = {
-    // Training AND final assignment share one persisted subvector frame
-    // (training alone drives ~20 actions over it); the assignment result
-    // is localCheckpoint'd — it is output-sized (4 rows of 4 longs per
-    // vector), so materializing it lets the cache go while the returned
-    // frame stays valid (the d9 retention pattern, bounded by output).
-    val subs = quantizedSubvectors(s, dir).persist()
-    try {
-      // collapse gate (round 17): this call was the ONE trainPqOn site
-      // missing the round-16 weighted-twin collapse — trainPqCodebooks
-      // (s4/s5's path) passed it, so s8's training re-scanned the full
-      // subvector frame per Lloyd's round at the 100× gate. Same
-      // bit-identity argument as lloyd/lloydGrouped (PropertySpec pins
-      // direct ≡ weighted); the final per-id assignment below is
-      // unchanged.
-      val books = trainPqOn(subs, K, Iters, collapse = embTwinGate(s, dir))
-      // Code assignment is the same row-local grouped argmin training
-      // uses — trained books are driver literals, so no join, no argmin
-      // shuffle (tie-break (dist, cent_id) preserved by bestCell).
-      val e = subs.select(col("sub_idx").cast("int").as("gid"),
-        col("vec_id").as("id"), col("q"))
-      assignGrouped(e, books)
-        .select(col("id").as("vec_id"), col("gid").cast("long").as("sub_idx"),
-          col("cell").as("code"), col("dist"))
-        .localCheckpoint()
-    } finally subs.unpersist()
-  }
+  def s8PqTrained(s: SparkSession, dir: String): DataFrame =
+    train(s, dir, K, Iters, Similarity.PqSubDim)._1
+      .select(col("id").as("vec_id"), col("sub").cast("long").as("sub_idx"),
+        col("cell").as("code"), col("dist"))
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "s7_kmeans_assign" -> s7KmeansAssign,

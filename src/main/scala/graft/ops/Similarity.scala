@@ -22,30 +22,12 @@ import graft.Tables.load
   */
 object Similarity {
 
-  /** Sequential-double cosine similarity — the native codegen'd
-    * expression ([[graft.functions.CosineSimilarity]]): one fused loop
-    * instead of three array-lambda passes, same bits.
+  /** Sequential-double cosine similarity — the native codegen'd kernel
+    * ([[graft.functions.VectorKernel]]): one fused loop instead of three
+    * array-lambda passes, same bits.
     */
   def cosine(a: Column, b: Column): Column =
     graft.functions.Functions.cosine_sim(a, b)
-
-  /** Composed-builtins form of [[cosine]] — kept as the semantic spec the
-    * native expression is tested bit-identical against.
-    */
-  def cosineComposed(a: Column, b: Column): Column = {
-    val dot = aggregate(zip_with(a, b, (x, y) => x * y), lit(0.0), (acc, x) => acc + x)
-    val na = aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x)
-    val nb = aggregate(transform(b, x => x * x), lit(0.0), (acc, x) => acc + x)
-    dot / sqrt(na * nb)
-  }
-
-  /** Composed-builtins form of the double squared-L2 kernel — kept as the
-    * semantic spec [[graft.functions.SqDistDouble]] is tested bit-identical
-    * against (FunctionsSpec): the same sequential left-to-right fold, so
-    * swapping forms cannot move a hash-compared result.
-    */
-  def sqDistDoubleComposed(a: Column, b: Column): Column = aggregate(
-    zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (acc, x) => acc + x)
 
   /** DuckDB-side cosine over float-list columns, widened to double. */
   def cosineSql(a: String, b: String): String =
@@ -553,6 +535,10 @@ object Similarity {
   private[ops] val PqSubDim = 16 // 64-dim embeddings / 4 subspaces
   private val PqCodes = 8
 
+  /** (vec_id, v): the double-widened corpus the PQ operators read. */
+  private def pqCorpus(s: SparkSession, dir: String): DataFrame =
+    load(s, dir, "embeddings").select(col("vec_id"), asDouble(col("embedding")).as("v"))
+
   /** s4 — product-quantization code assignment: split each vector into
     * `PqSubspaces` subvectors and store, per subspace, the id of the
     * nearest codebook centroid (squared-L2 argmin, tie-break smallest
@@ -564,79 +550,23 @@ object Similarity {
     * identical). Integer code output is robust to float-association ulps,
     * so the oracle needs no bit-level care beyond determinism of argmin.
     */
-  /** (vec_id, sub_idx, sv): every vector split into its PQ subvectors —
-    * the one place the subspace layout is defined.
-    */
-  private[graft] def subvectors(s: SparkSession, dir: String): DataFrame =
-    load(s, dir, "embeddings")
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .select(col("vec_id"),
-        posexplode(array((0 until PqSubspaces).map(b =>
-          slice(col("v"), b * PqSubDim + 1, PqSubDim)): _*)).as(Seq("sub_idx", "sv")))
-
-  /** Codebook = the first `PqCodes` vectors' subvectors, collected —
-    * `PqCodes × PqSubspaces` rows, the bounded driver hop every literal
-    * codebook makes ([[Kmeans]]'s initFrom precedent). Sorted for a
-    * deterministic expression layout.
-    */
-  private def codebook(subs: DataFrame): Seq[(Long, Int, Seq[Double])] =
-    subs.filter(col("vec_id") < PqCodes)
-      .select(col("vec_id"), col("sub_idx"), col("sv"))
-      .collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getSeq[Double](2)))
-      .sortBy(t => (t._2, t._1)).toSeq
-
   def s4PqCodes(s: SparkSession, dir: String): DataFrame = {
-    val subs = subvectors(s, dir)
-    s4PqCodesWith(subs, codebook(subs))
+    val e = pqCorpus(s, dir)
+    s4PqCodesWith(e, Kmeans.seeds[Double](e, "vec_id", "v", PqCodes, PqSubDim))
   }
 
   /** The PQ assignment operator proper, codebook pluggable —
-    * `(cent_id, c_sub, cv)` driver-side rows. The oracled [[s4PqCodes]]
+    * `(sub, cent_id, cv)` driver-side rows. The oracled [[s4PqCodes]]
     * feeds the first-`PqCodes` seed codebook; [[s4PqCodesTrained]] feeds
     * per-subspace k-means centroids through the same shape. The argmin
-    * is row-local — one filtered branch per subspace id, each branch
-    * `least()` over that subspace's k struct(dist, cent_id) columns,
-    * unioned — so the exploded corpus never shuffles and never joins:
-    * the old broadcast-join + min_by-by-(vec_id, sub_idx) form pushed
-    * every subvector row through an aggregation exchange.
+    * is row-local and single-pass ([[Kmeans.nearest]]): one projection
+    * over the unexploded vector, so the corpus is scanned once and never
+    * shuffles or joins.
     */
-  private[ops] def s4PqCodesWith(subs: DataFrame,
-      cents: Seq[(Long, Int, Seq[Double])]): DataFrame = {
-    // Native fused-double kernel (SqDistLong's template): the composed
-    // aggregate(zip_with(…)) form evaluated every candidate's per-element
-    // lambdas outside whole-stage codegen — this is the per-row hot loop
-    // (rows × k candidates), and the swap is bit-identical by construction
-    // (same sequential fold; FunctionsSpec pins it against the composed
-    // spec form, sqDistDoubleComposed).
-    def sqd(cv: Seq[Double]): Column =
-      graft.functions.SqDistDouble.sq_dist_double(
-        col("sv"), array(cv.map(lit): _*))
-    val bySub = cents.groupBy(_._2).view
-      .mapValues(_.map(c => (c._1, c._3))).toSeq.sortBy(_._1)
-    // One filtered branch per subspace, unioned — NOT a nested CASE
-    // chain over sub_idx (Kmeans.assignGrouped's round-17 lesson: the
-    // chain form ran s8's 100×-gate assignment at ~19 µs/row; each
-    // branch here is one independent least()-of-k expression). Rows
-    // whose sub_idx has no codebook vanish, like the old inner join;
-    // the empty-codebook dummy mirrors the branch form's nullability
-    // (nullable dist, non-null code) for degenerate-schema parity.
-    val assigned =
-      if (bySub.isEmpty)
-        subs.filter(lit(false)).select(col("vec_id"), col("sub_idx"),
-          struct(lit(null).cast("double").as("dist"), lit(0L).as("code")).as("b"))
-      else bySub.map { case (sub, cs) =>
-        val cands = cs.map { case (cid, cv) =>
-          struct(sqd(cv).as("dist"), lit(cid).as("code"))
-        }
-        subs.filter(col("sub_idx") === sub)
-          .select(col("vec_id"), col("sub_idx"),
-            (if (cands.sizeIs == 1) cands.head else least(cands: _*)).as("b"))
-      }.reduce(_ unionByName _)
-    assigned.filter(col("b").isNotNull)
-      .select(col("vec_id"), col("sub_idx").cast("long").as("sub_idx"),
-        col("b.code").as("code"))
-  }
+  private[ops] def s4PqCodesWith(e: DataFrame,
+      cents: Seq[(Int, Long, Seq[Double])]): DataFrame =
+    Kmeans.nearest(e, "v", cents, PqSubDim, graft.functions.Functions.sq_dist_double)
+      .select(col("vec_id"), col("sub").cast("long").as("sub_idx"), col("cell").as("code"))
 
   /** s4 with per-subspace k-means-trained codebooks
     * ([[Kmeans.trainPqCodebooks]]) — real PQ training instead of the
@@ -646,9 +576,8 @@ object Similarity {
     */
   def s4PqCodesTrained(s: SparkSession, dir: String): DataFrame = {
     val trained = Kmeans.trainPqCodebooks(s, dir)
-      .map { case (b, cell, cv) =>
-        (cell, b, cv.map(_.toDouble / Kmeans.Scale)) }
-    s4PqCodesWith(subvectors(s, dir), trained)
+      .map { case (b, cell, cv) => (b, cell, cv.map(_.toDouble / Kmeans.Scale)) }
+    s4PqCodesWith(pqCorpus(s, dir), trained)
   }
 
   private val PqTopK = 3
@@ -664,25 +593,22 @@ object Similarity {
     * vec_id asc).
     */
   def s5PqSearch(s: SparkSession, dir: String): DataFrame = {
-    // Build the subvector pipeline ONCE and feed codes/queries/codebook
-    // from it through the pluggable-codebook seam (review-caught:
-    // calling s4PqCodes here constructed a second, divergent subvectors
-    // subtree that ReuseExchange could never collapse).
-    val subs = subvectors(s, dir)
-    val cb = codebook(subs)
-    val codes = s4PqCodesWith(subs, cb) // (vec_id, sub_idx, code)
-    val queries = subs
+    val e = pqCorpus(s, dir)
+    val cb = Kmeans.seeds[Double](e, "vec_id", "v", PqCodes, PqSubDim)
+    val codes = s4PqCodesWith(e, cb) // (vec_id, sub_idx, code)
+    val queries = e
       .filter(col("vec_id") >= PqCodes && col("vec_id") < PqCodes + PqQueries)
-      .select(col("vec_id").as("query_id"), col("sub_idx").as("q_sub"), col("sv").as("qv"))
-    val sqDist =
-      graft.functions.SqDistDouble.sq_dist_double(col("qv"), col("cv"))
+      .select(col("vec_id").as("query_id"), col("v").as("qv"))
     // Distance tables: queries × subspaces × centroids (tiny — broadcast;
     // the codebook side is the collected literal rows, not a subtree).
+    // The query's subvector is the slice s4's assignment scores.
     import s.implicits._
-    val cents = cb.toDF("cent_id", "c_sub", "cv")
-    val tables = queries.join(broadcast(cents), col("q_sub") === col("c_sub"))
-      .select(col("query_id"), col("q_sub").as("sub_idx"),
-        col("cent_id").as("code"), sqDist.as("d"))
+    val cents = cb.toDF("c_sub", "cent_id", "cv")
+    val tables = queries.crossJoin(broadcast(cents))
+      .select(col("query_id"), col("c_sub").cast("long").as("sub_idx"),
+        col("cent_id").as("code"),
+        graft.functions.Functions.sq_dist_double(
+          slice(col("qv"), col("c_sub") * PqSubDim + 1, lit(PqSubDim)), col("cv")).as("d"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("approx_dist").asc, col("vec_id").asc)
     // One addend per subspace, added in fixed subspace order — a plain

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.Functions
-import graft.ops.Similarity
+import graft.ops.{ComposedKernels, Similarity}
 
-/** The native CosineSimilarity expression must be bit-identical to the
-  * composed-builtins recurrence it replaces (oracle results are
+/** The native vector kernels must be bit-identical to the
+  * composed-builtins recurrences they replace (oracle results are
   * hash-compared — an ulp of drift is a correctness failure, not noise).
   */
 class FunctionsSpec extends AnyFunSuite {
@@ -22,7 +22,7 @@ class FunctionsSpec extends AnyFunSuite {
       .limit(5000)
       .select(
         Functions.cosine_sim(col("a.v"), col("b.v")).as("native"),
-        Similarity.cosineComposed(col("a.v"), col("b.v")).as("composed"))
+        ComposedKernels.cosine(col("a.v"), col("b.v")).as("composed"))
     assert(pairs.filter(col("native") =!= col("composed")).count() == 0)
     assert(pairs.filter(col("native").isNull).count() == 0)
   }
@@ -33,8 +33,8 @@ class FunctionsSpec extends AnyFunSuite {
     val pairs = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .limit(5000)
       .select(
-        graft.functions.SqDistLong.sq_dist_long(col("a.q"), col("b.q")).as("native"),
-        graft.ops.Kmeans.sqDistComposed(col("a.q"), col("b.q")).as("composed"))
+        Functions.sq_dist_long(col("a.q"), col("b.q")).as("native"),
+        ComposedKernels.sqDistLong(col("a.q"), col("b.q")).as("composed"))
     assert(pairs.filter(col("native") =!= col("composed")).count() == 0)
     assert(pairs.filter(col("native").isNull).count() == 0)
     // identical vectors → 0; length mismatch → null (like the composed
@@ -43,12 +43,12 @@ class FunctionsSpec extends AnyFunSuite {
       (Seq(1L, 2L), Seq(1L, 2L)),
       (Seq.empty[Long], Seq.empty[Long]))
       .toDF("a", "b")
-      .select(graft.functions.SqDistLong.sq_dist_long($"a", $"b").as("d"))
+      .select(Functions.sq_dist_long($"a", $"b").as("d"))
       .as[Option[Long]].collect().toSeq
     assert(edge == Seq(Some(0L), Some(0L)))
     val mism = Seq((Seq(1L, 2L), Seq(1L)))
       .toDF("a", "b")
-      .select(graft.functions.SqDistLong.sq_dist_long($"a", $"b").as("d"))
+      .select(Functions.sq_dist_long($"a", $"b").as("d"))
       .as[Option[Long]].collect().toSeq
     assert(mism == Seq(None))
     // Null ELEMENTS poison the distance to null, exactly like the
@@ -59,8 +59,8 @@ class FunctionsSpec extends AnyFunSuite {
       (Seq(Some(1L), Some(2L)), Seq(Some(4L), Some(6L))))
       .toDF("a", "b")
       .select(
-        graft.functions.SqDistLong.sq_dist_long($"a", $"b").as("native"),
-        graft.ops.Kmeans.sqDistComposed($"a", $"b").as("composed"))
+        Functions.sq_dist_long($"a", $"b").as("native"),
+        ComposedKernels.sqDistLong($"a", $"b").as("composed"))
       .as[(Option[Long], Option[Long])].collect().toSeq
     assert(withNulls == Seq((None, None), (Some(25L), Some(25L))))
   }
@@ -71,8 +71,8 @@ class FunctionsSpec extends AnyFunSuite {
     val pairs = e.as("a").join(e.as("b"), col("a.vec_id") < col("b.vec_id"))
       .limit(5000)
       .select(
-        graft.functions.SqDistDouble.sq_dist_double(col("a.v"), col("b.v")).as("native"),
-        Similarity.sqDistDoubleComposed(col("a.v"), col("b.v")).as("composed"))
+        Functions.sq_dist_double(col("a.v"), col("b.v")).as("native"),
+        ComposedKernels.sqDistDouble(col("a.v"), col("b.v")).as("composed"))
     assert(pairs.filter(col("native") =!= col("composed")).count() == 0)
     assert(pairs.filter(col("native").isNull).count() == 0)
     // identical vectors → 0.0; empty arrays → 0.0 (the fold's seed);
@@ -81,12 +81,12 @@ class FunctionsSpec extends AnyFunSuite {
       (Seq(1.5, -2.0), Seq(1.5, -2.0)),
       (Seq.empty[Double], Seq.empty[Double]))
       .toDF("a", "b")
-      .select(graft.functions.SqDistDouble.sq_dist_double($"a", $"b").as("d"))
+      .select(Functions.sq_dist_double($"a", $"b").as("d"))
       .as[Option[Double]].collect().toSeq
     assert(edge == Seq(Some(0.0), Some(0.0)))
     val mism = Seq((Seq(1.0, 2.0), Seq(1.0)))
       .toDF("a", "b")
-      .select(graft.functions.SqDistDouble.sq_dist_double($"a", $"b").as("d"))
+      .select(Functions.sq_dist_double($"a", $"b").as("d"))
       .as[Option[Double]].collect().toSeq
     assert(mism == Seq(None))
     // Null ELEMENTS poison the distance to null, exactly like the
@@ -97,10 +97,48 @@ class FunctionsSpec extends AnyFunSuite {
       (Seq(Some(1.0), Some(2.0)), Seq(Some(4.0), Some(6.0))))
       .toDF("a", "b")
       .select(
-        graft.functions.SqDistDouble.sq_dist_double($"a", $"b").as("native"),
-        Similarity.sqDistDoubleComposed($"a", $"b").as("composed"))
+        Functions.sq_dist_double($"a", $"b").as("native"),
+        ComposedKernels.sqDistDouble($"a", $"b").as("composed"))
       .as[(Option[Double], Option[Double])].collect().toSeq
     assert(withNulls == Seq((None, None), (Some(25.0), Some(25.0))))
+  }
+
+  test("every native kernel ≡ its composed reference on null elements, " +
+    "length mismatch and empty arrays, interpreted and codegen'd") {
+    // Rows 0-2 must be null: a null element on either side, then a length
+    // mismatch. Over a local relation the optimizer folds the projection
+    // with the interpreted loop; after a repartition it runs codegen'd.
+    def rows[T](one: T, two: T, three: T, five: T) = Seq(
+      (0, Seq(Some(one), None, Some(three)), Seq(Some(one), Some(two), Some(three))),
+      (1, Seq(Some(one), Some(two)), Seq(None, Some(two))),
+      (2, Seq(Some(one), Some(two), Some(five)), Seq(Some(one), Some(two))),
+      (3, Seq.empty[Option[T]], Seq.empty[Option[T]]),
+      (4, Seq(Some(one), Some(five)), Seq(Some(three), Some(two))))
+    val longs = rows(1L, 2L, 3L, 5L).toDF("i", "a", "b")
+    val doubles = rows(1.5, -2.0, 3.25, 5.0).toDF("i", "a", "b")
+    val kernels: Seq[(String, org.apache.spark.sql.DataFrame,
+        (Column, Column) => Column, (Column, Column) => Column)] = Seq(
+      ("sq_dist_long", longs, Functions.sq_dist_long, ComposedKernels.sqDistLong),
+      ("sq_dist_double", doubles, Functions.sq_dist_double, ComposedKernels.sqDistDouble),
+      ("dot_product", doubles, Functions.dot_product, ComposedKernels.dot),
+      ("cosine_sim", doubles, Functions.cosine_sim, ComposedKernels.cosine))
+    for ((name, df, native, composed) <- kernels; frame <- Seq(df, df.repartition(1))) {
+      // Empty cosine is 0/0: NaN natively (IEEE, as DuckDB), while the
+      // composed form's ANSI division raises DIVIDE_BY_ZERO — so NaN is
+      // that row's reference.
+      val reference =
+        if (name == "cosine_sim") when(size($"a") > 0, composed($"a", $"b")).otherwise(Double.NaN)
+        else composed($"a", $"b")
+      val got = frame
+        .select(col("i"), native($"a", $"b").cast("double"), reference.cast("double"))
+        .as[(Int, Option[Double], Option[Double])].collect().sortBy(_._1).toSeq
+      def bits(d: Option[Double]) = d.map(java.lang.Double.doubleToLongBits)
+      got.foreach { case (i, n, c) =>
+        assert(bits(n) == bits(c), s"$name row $i: native $n, composed $c")
+      }
+      assert(got.take(3).forall(_._2.isEmpty), s"$name: null element or mismatch must be null")
+      assert(got.drop(3).forall(_._2.nonEmpty), s"$name: $got")
+    }
   }
 
   test("hoisted-norm dot-product cosine == fused cosine, bit for bit") {
@@ -142,7 +180,7 @@ class FunctionsSpec extends AnyFunSuite {
       .select(
         Functions.cosine_sim(col("a"), col("b")).as("native"),
         Functions.dot_product(col("a"), col("b")).as("dot"),
-        Similarity.cosineComposed(col("a"), col("b")).as("composed"))
+        ComposedKernels.cosine(col("a"), col("b")).as("composed"))
       .head()
     assert(r.isNullAt(0) && r.isNullAt(1) && r.isNullAt(2))
   }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ops.Kmeans
 
@@ -17,6 +17,13 @@ import graft.ops.Kmeans
 class KmeansSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTest.session
 
+  /** Flat k-means is one subspace: `(cell, cv)` centroids in and out. */
+  private def flatLloyd(e: DataFrame, init: Seq[(Long, Seq[Long])], iters: Int,
+      dim: Int): (DataFrame, Seq[(Long, Seq[Long])]) = {
+    val (a, c) = Kmeans.lloyd(e, init.map { case (cell, cv) => (0, cell, cv) }, iters, dim)
+    (a, c.map { case (_, cell, cv) => (cell, cv) })
+  }
+
   test("empty cell keeps its centroid and can re-capture points (duplicate seeds)") {
     import spark.implicits._
     // k=2 with identical seeds at the origin: every point ties to cell 0
@@ -31,7 +38,7 @@ class KmeansSpec extends AnyFunSuite {
       (3L, Seq(100L, 0L, 0L, 0L)))
     val e = pts.toDF("id", "q")
     val init = pts.take(2)
-    val (assigned, cents) = Kmeans.lloyd(e, init, iters = 2, dim = 4)
+    val (assigned, cents) = flatLloyd(e, init, iters = 2, dim = 4)
     val byId = assigned.select("id", "cell").as[(Long, Long)].collect().toMap
     assert(byId(0L) == 1L && byId(1L) == 1L,
       s"origin points must land in the kept empty cell: $byId")
@@ -53,15 +60,17 @@ class KmeansSpec extends AnyFunSuite {
     val g1 = Seq(
       (0L, Seq(-5L, 3L, 0L, 0L)), (1L, Seq(40L, -7L, 1L, 0L)),
       (2L, Seq(-6L, 2L, 0L, 0L)), (3L, Seq(41L, -9L, 0L, 0L)))
-    val joint = (g0.map { case (id, q) => (0, id, q) } ++
-      g1.map { case (id, q) => (1, id, q) }).toDF("gid", "id", "q")
+    // One 8-dim vector per id: group 0's components, then group 1's —
+    // two 4-wide subspaces.
+    val joint = g0.zip(g1).map { case ((id, q0), (_, q1)) => (id, q0 ++ q1) }
+      .toDF("id", "q")
     val init = g0.take(2).map { case (id, q) => (0, id, q) } ++
       g1.take(2).map { case (id, q) => (1, id, q) }
-    val (ja, jc) = Kmeans.lloydGrouped(joint, init, iters = 2, dim = 4)
-    val jointAssign = ja.select("gid", "id", "cell").as[(Int, Long, Long)]
+    val (ja, jc) = Kmeans.lloyd(joint, init, iters = 2, dim = 4)
+    val jointAssign = ja.select("sub", "id", "cell").as[(Int, Long, Long)]
       .collect().map(t => (t._1, t._2) -> t._3).toMap
     for ((g, pts) <- Seq(0 -> g0, 1 -> g1)) {
-      val (sa, sc) = Kmeans.lloyd(pts.toDF("id", "q"), pts.take(2),
+      val (sa, sc) = flatLloyd(pts.toDF("id", "q"), pts.take(2),
         iters = 2, dim = 4)
       assert(jc.collect { case (`g`, cell, cv) => (cell, cv) } == sc,
         s"group $g centroids diverge")
@@ -77,7 +86,7 @@ class KmeansSpec extends AnyFunSuite {
     val pts = Seq(
       (0L, Seq(0L, 0L)), (1L, Seq(10L, 0L)),
       (2L, Seq(2L, 0L)), (3L, Seq(7L, 1L)))
-    val (assigned, cents) = Kmeans.lloyd(pts.toDF("id", "q"),
+    val (assigned, cents) = flatLloyd(pts.toDF("id", "q"),
       pts.take(2), iters = 0, dim = 2)
     assert(cents == pts.take(2))
     val got = assigned.select("id", "cell", "dist").as[(Long, Long, Long)]
@@ -109,8 +118,11 @@ class KmeansSpec extends AnyFunSuite {
     // Quantization error = Σ over (vector, subspace) of the distance to
     // the nearest codebook entry. Lloyd's can only lower it vs its own
     // seed (each step is a monotone improvement up to integer flooring).
+    val subs = Tables.load(s, dir, "embeddings")
+      .select(col("vec_id"), transform(col("embedding"), _.cast("double")).as("v"))
+      .select(col("vec_id"), posexplode(array((0 until 4).map(b =>
+        slice(col("v"), b * 16 + 1, 16)): _*)).as(Seq("sub_idx", "sv")))
     def err(codebook: org.apache.spark.sql.DataFrame): Double = {
-      val subs = Similarity.subvectors(s, dir)
       subs.join(broadcast(codebook), col("sub_idx") === col("c_sub"))
         .select(col("vec_id"), col("sub_idx"),
           aggregate(zip_with(col("sv"), col("cv"), (x, y) => (x - y) * (x - y)),
@@ -118,7 +130,7 @@ class KmeansSpec extends AnyFunSuite {
         .groupBy("vec_id", "sub_idx").agg(min("d").as("d"))
         .agg(sum("d")).as[Double].head()
     }
-    val seedBook = Similarity.subvectors(s, dir).filter(col("vec_id") < 8)
+    val seedBook = subs.filter(col("vec_id") < 8)
       .select(col("vec_id").as("cent_id"), col("sub_idx").as("c_sub"),
         col("sv").as("cv"))
     val trainedBook = trained

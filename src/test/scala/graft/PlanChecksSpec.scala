@@ -278,6 +278,18 @@ class PlanChecksSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(!p.contains("Join"), s"centroids must be literals, not a join:\n${p.take(800)}")
   }
 
+  test("s4/s5: PQ assignment is one projection over the unexploded vector — " +
+    "one embeddings scan, no per-subspace Union") {
+    val s4 = SparkEntry.queries("s4_pq_codes")(spark, dir)
+    s4.collect()
+    val p4 = s4.queryExecution.executedPlan.toString
+    assert("FileScan parquet".r.findAllIn(p4).length == 1, s"s4 must scan once:\n$p4")
+    assert(!p4.contains("Union"), s"s4 must not union per-subspace branches:\n$p4")
+    assert(p4.contains("sq_dist_double"), s"native kernel missing:\n$p4")
+    val p5 = plan("s5_pq_search")
+    assert(!p5.contains("Union"), s"s5 must not union per-subspace branches:\n${p5.take(2000)}")
+  }
+
   test("t10: posting-cap window and shingle aggregation share one exchange " +
     "(no corpus self-join, no second scan for the eval side)") {
     val p = plan("t10_contamination")

@@ -331,6 +331,25 @@ class PropertySpec extends AnyFunSuite {
       val direct = run(graft.ops.Dedup.d4NgramJaccardImpl(spark, dir.getPath,
         collapse = false))
       assert(direct == got)
+      // Null ids: each null-id document counts toward a shingle's
+      // posting depth on both paths and pairs on neither. Source a holds
+      // 999 documents sharing "alpha beta gamma" plus 2 null-id ones
+      // (depth 1,001 > MaxPostings); source b holds 1,000 plus a null-id
+      // copy of one of them, which must not merge into that copy's group.
+      val nullDocs =
+        (0 until 999).map(i => (Option(i.toLong), "a", s"alpha beta gamma u$i")) ++
+          (0 until 2).map(j => (Option.empty[Long], "a", s"alpha beta gamma n$j")) ++
+          (0 until 1000).map(i => (Option(10000L + i), "b", s"delta epsilon zeta t$i")) :+
+          ((Option.empty[Long], "b", "delta epsilon zeta t0"))
+      nullDocs.toDF("doc_id", "source", "text").write.mode("overwrite")
+        .parquet(s"${dir.getPath}/documents.parquet")
+      val nullDirect = run(graft.ops.Dedup.d4NgramJaccardImpl(spark, dir.getPath,
+        collapse = false))
+      val nullCollapse = run(graft.ops.Dedup.d4NgramJaccardImpl(spark, dir.getPath,
+        collapse = true))
+      assert(nullDirect.isEmpty, s"posting cap must drop the shared shingles: ${nullDirect.size}")
+      assert(nullCollapse == nullDirect,
+        s"collapse gave ${nullCollapse.size} pairs, direct ${nullDirect.size}")
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
@@ -353,22 +372,22 @@ class PropertySpec extends AnyFunSuite {
       (v, vi) <- base.zipWithIndex
       c <- 0 until 4
     } yield ((vi * 10 + c).toLong, v)).toDF("id", "q")
-    val init = Seq(0L -> base(0), 1L -> base(1))
+    val init = Seq((0, 0L, base(0)), (0, 1L, base(1)))
     val (aD, cD) = Kmeans.lloyd(e, init, iters = 3, dim = 4, collapse = false)
     val (aC, cC) = Kmeans.lloyd(e, init, iters = 3, dim = 4, collapse = true)
     assert(cC == cD, "weighted update diverged from the per-copy update")
     assert(aC.collect().map(_.toSeq).toSet == aD.collect().map(_.toSeq).toSet)
-    // Grouped (PQ) variant: two subspaces over the same duplicates.
+    // Grouped (PQ) variant: two subspaces over the same duplicates — one
+    // 8-dim vector per id, subspace g holding the base vector plus g.
     val eg = (for {
       (v, vi) <- base.zipWithIndex
       c <- 0 until 4
-      g <- 0 until 2
-    } yield (g, (vi * 10 + c).toLong, v.map(_ + g))).toDF("gid", "id", "q")
+    } yield ((vi * 10 + c).toLong, v ++ v.map(_ + 1))).toDF("id", "q")
     val initG = Seq((0, 0L, base(0)), (0, 1L, base(1)),
       (1, 0L, base(0).map(_ + 1)), (1, 1L, base(1).map(_ + 1)))
-    val (_, gD) = Kmeans.lloydGrouped(eg, initG, iters = 3, dim = 4,
+    val (_, gD) = Kmeans.lloyd(eg, initG, iters = 3, dim = 4,
       collapse = false)
-    val (_, gC) = Kmeans.lloydGrouped(eg, initG, iters = 3, dim = 4,
+    val (_, gC) = Kmeans.lloyd(eg, initG, iters = 3, dim = 4,
       collapse = true)
     assert(gC == gD, "grouped weighted update diverged")
   }
@@ -512,7 +531,7 @@ class PropertySpec extends AnyFunSuite {
     // (vector, books) — each copy must land on its base twin's
     // (sub_idx, code, dist) exactly. This pins the round-17 WIRING of the
     // weighted-twin collapse into s8PqTrained's training call (the math
-    // itself is pinned by the lloyd/lloydGrouped direct≡weighted tests).
+    // itself is pinned by lloyd's direct≡weighted test).
     val baseN = 10
     val copies = 3
     val dim = graft.ops.Kmeans.Dim
@@ -568,6 +587,34 @@ class PropertySpec extends AnyFunSuite {
         "text twinGate must read false on an empty corpus")
       assert(!graft.ops.Kmeans.embTwinGate(spark, dir.getPath),
         "embeddings twinGate must read false on an empty corpus")
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
+      }
+      rm(dir)
+    }
+  }
+
+  test("twin gates re-probe a corpus rewritten in place: the memo is keyed " +
+    "on the table's file listing, not on the directory") {
+    val dir = java.nio.file.Files.createTempDirectory("gateRewrite").toFile
+    def write(copies: Int): Unit = {
+      val ids = for (i <- 0 until 6; c <- 0 until copies) yield (i, c)
+      ids.map { case (i, c) => ((i * copies + c).toLong, "src", s"text number $i") }
+        .toDF("doc_id", "source", "text").write.mode("overwrite")
+        .parquet(s"${dir.getPath}/documents.parquet")
+      ids.map { case (i, c) =>
+        ((i * copies + c).toLong, Seq.tabulate(4)(d => (i * 4 + d).toFloat)) }
+        .toDF("vec_id", "embedding").write.mode("overwrite")
+        .parquet(s"${dir.getPath}/embeddings.parquet")
+    }
+    def gates = (graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")),
+      graft.ops.Kmeans.embTwinGate(spark, dir.getPath))
+    try {
+      write(copies = 1)
+      assert(gates == ((false, false)), "twin-free corpus")
+      write(copies = 3)
+      assert(gates == ((true, true)), "the same dir rewritten with 3 copies of each row")
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
