@@ -9,8 +9,34 @@ import org.apache.spark.sql.execution.FormattedMode
   * and the round-over-round plan-regression diff (a broadcast silently
   * flipping to shuffle shows up as a doc diff, not a bench surprise).
   * Regenerate with `sbt "runMain graft.Plans"` after plan-shape changes.
+  *
+  * Each section is [[normalize]]d, so a regeneration diff shows only the
+  * plans that really changed.
   */
 object Plans {
+
+  private val ExprId = "#\\d+L?".r
+  private val PlanId = "plan_id=\\d+".r
+  private val LambdaRef = "\\$Lambda\\$?[0-9]+/0x[0-9a-f]+@[0-9a-f]+".r
+
+  /** Renumber expression ids (`#123`, `#45L`) and exchange `plan_id=N`
+    * in order of first appearance, as Spark's PlanStabilitySuite does:
+    * both are allocated from JVM-wide counters, so the same query
+    * explained twice prints different numbers, while the renumbered
+    * text keeps which references are the same attribute or exchange.
+    * JVM lambda identities (`$Lambda$6073/0x…@63585495`, printed by
+    * typed operators) differ per JVM and are cut to `$Lambda`.
+    */
+  private[graft] def normalize(plan: String): String = {
+    def renumber(s: String, re: scala.util.matching.Regex, fmt: Int => String) = {
+      val ids = re.findAllIn(s).distinct.zipWithIndex.toMap
+      re.replaceAllIn(s, m => fmt(ids(m.matched) + 1))
+    }
+    LambdaRef.replaceAllIn(
+      renumber(renumber(plan, ExprId, i => s"#$i"), PlanId, i => s"plan_id=$i"),
+      scala.util.matching.Regex.quoteReplacement("$Lambda"))
+  }
+
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "EXPLAINS.md"
     val spark = SparkSession.builder()
@@ -76,7 +102,7 @@ object Plans {
       // Execute THIS dataframe (not a count() wrapper, which would plan
       // a different query) so its adaptive plan finalizes.
       df.collect()
-      val p = df.queryExecution.explainString(FormattedMode)
+      val p = normalize(df.queryExecution.explainString(FormattedMode))
       sb.append(s"\n## $n\n\n```\n$p```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)

@@ -31,7 +31,16 @@ object Functions {
   /** Register the native functions for SQL use in an existing session. */
   def register(spark: SparkSession): Unit =
     Kernel.all.foreach(k => spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      k.name, exprs => VectorKernel(exprs(0), exprs(1), k), "built-in"))
+      k.name, builder(k), "built-in"))
+
+  /** The SQL function builder of `k`, shared by [[register]] and
+    * [[GraftExtensions]]: two arguments, or the built-ins' WRONG_NUM_ARGS
+    * analysis error naming the function.
+    */
+  private[functions] def builder(k: Kernel): Seq[Expression] => Expression = {
+    case Seq(a, b) => VectorKernel(a, b, k)
+    case args => throw Bridge.wrongNumArgs(k.name, 2, args.length)
+  }
 }
 
 /** `spark.sql.extensions=graft.functions.GraftExtensions` injects the
@@ -43,7 +52,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     Kernel.all.foreach(k => e.injectFunction((
       FunctionIdentifier(k.name),
       new ExpressionInfo(classOf[VectorKernel].getName, k.name),
-      (exprs: Seq[Expression]) => VectorKernel(exprs(0), exprs(1), k))))
+      Functions.builder(k))))
     e.injectOptimizerRule(_ => SingleElementOverlapToContains)
   }
 }

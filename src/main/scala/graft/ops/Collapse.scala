@@ -3,97 +3,132 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** The exact-twin collapse: run a document-keyed pipeline once per
-  * DISTINCT key tuple (a text, or a text plus a side tag) instead of once
-  * per document, and fan the results back out to every document holding
-  * that key. On a corpus where each text is copied m times the expensive
-  * per-text work (md5 passes, window hashing, tokenizing) shrinks m-fold
-  * while the output stays row-identical to the per-document form.
+/** The exact-twin collapse: run an expensive pipeline once per DISTINCT
+  * key tuple (a text, a token array, a vector value, a name) instead of
+  * once per row, and fan the results back out to every row holding that
+  * key. On a corpus where each key is copied m times the per-key work
+  * shrinks m-fold (and pair work m²-fold) while the output stays
+  * row-identical to the per-row form.
   *
-  * [[byKey]] is exact under this contract on `f`:
-  *  - `f` reads only the key columns, `doc_id` and `mult` (the number of
-  *    documents a row stands for; 1 on the direct form);
-  *  - every corpus-wide term `f` computes is a `mult`-weighted sum
-  *    (`sum(mult)` where the per-document form counts rows), or is
-  *    insensitive to multiplicity (a `max` over a tag);
-  *  - `f`'s output is keyed by `doc_id`: each output row belongs to the
-  *    input row carrying that `doc_id`.
-  *
-  * Null ids: a document with a null `doc_id` is never collapsed. It
-  * reaches `f` as its own row with `mult = 1`, and its output rows leave
-  * without expansion — exactly the rows the direct form gives it, so the
-  * result never depends on which path the twin gate picks.
+  * The contract every collapse shares:
+  *  - [[hub]] is the only builder of group membership. Per distinct
+  *    `keys` tuple it holds `rep = min(id)`, `members` = the sorted
+  *    non-null ids and `mult` = the number of rows the group stands for.
+  *    Null ids never join a group of real ids: rows with a null id form
+  *    a group of their own per key tuple, with a null `rep`, no members
+  *    and `mult` = their count. A null `rep` matches no equi-join, so
+  *    such rows never pair and never fan out; they still weigh in any
+  *    `sum(mult)` a cap or statistic takes, as on the per-row form.
+  *  - [[byKey]] carries the doc-keyed operators (one output row set per
+  *    document) and [[pairs]] the pair-shaped ones (`(a, b, score)`).
   */
 object Collapse {
 
+  /** The twin hub of `df`: `(keys…, rep, members, mult)`, one row per
+    * distinct `keys` tuple and id nullness (see the contract above).
+    * Persisted via OpCaches: every collapse reads it at least twice
+    * (the per-key pipeline and the fan-out), so the input is scanned
+    * once; MEMORY_AND_DISK so corpus scale spills, released by the
+    * harnesses per query.
+    */
+  private[ops] def hub(df: DataFrame, keys: Seq[String], id: String): DataFrame =
+    OpCaches.persisted(df
+      .groupBy(keys.map(col) :+ col(id).isNull.as("null_id"): _*)
+      .agg(min(col(id)).as("rep"), sort_array(collect_list(col(id))).as("members"),
+        count(lit(1)).as("mult"))
+      .drop("null_id"))
+
   /** `f` over `docs` (`doc_id` plus `keys`), twin-collapsed when `on`.
     *
-    * On: per distinct key tuple, the persisted hub holds the
-    * representative (`min(doc_id)`) with `mult` = the number of non-null
-    * ids and the sorted `members`, plus one `mult = 1` row per null-id
-    * copy. `f` runs over the hub; its non-null rows fan out to every
-    * member of their group. Off: `f` runs over `docs` with `mult = 1`.
-    * Both forms hand `f` the same columns.
+    * `f` sees `(doc_id, keys…, mult)` on both forms: off, every document
+    * with `mult = 1`; on, one row per [[hub]] group (`doc_id = rep`)
+    * plus one `mult = 1` row per null-id copy. It is exact when
+    *  - `f` reads only the key columns, `doc_id` and `mult`;
+    *  - every corpus-wide term `f` computes is a `mult`-weighted sum
+    *    (`sum(mult)` where the per-document form counts rows), or is
+    *    insensitive to multiplicity (a `max` over a tag);
+    *  - `f`'s output is keyed by `doc_id`: each output row belongs to the
+    *    input row carrying that `doc_id`.
+    * Output rows of a representative fan out to every member of its
+    * group; null-id rows leave as they are, exactly the rows the direct
+    * form gives them, so the result never depends on the twin gate.
     */
   def byKey(docs: DataFrame, keys: Seq[String], on: Boolean)(
       f: DataFrame => DataFrame): DataFrame = {
     val keyCols = keys.map(col)
     if (!on) return f(docs.select(col("doc_id") +: keyCols :+ lit(1L).as("mult"): _*))
-    // One hub row per representative plus one `mult = 1` row per null-id
-    // copy, both from the one grouping. Persisted via OpCaches: f's
-    // passes and the fan-out all read it, so documents are scanned once;
-    // released by the harnesses per query. array_repeat, not sequence:
-    // sequence(1, 0) counts DOWN to [1, 0].
-    val hub = OpCaches.persisted(docs.groupBy(keyCols: _*)
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members"),
-        count(col("doc_id")).as("n_ids"),
-        (count(lit(1)) - count(col("doc_id"))).as("n_null"))
-      .select(keyCols :+ col("members") :+ explode(concat(
-        array_repeat(struct(col("rep").as("doc_id"), col("n_ids").as("mult")),
-          (col("n_ids") > 0).cast("int")),
-        array_repeat(struct(lit(null).cast(docs.schema("doc_id").dataType).as("doc_id"),
-          lit(1L).as("mult")), col("n_null").cast("int")))).as("r"): _*)
-      .select(col("r.doc_id").as("doc_id") +: keyCols :+ col("r.mult").as("mult") :+
-        col("members"): _*))
-    val out = f(hub.select(col("doc_id") +: keyCols :+ col("mult"): _*))
+    val h = hub(docs, keys, "doc_id")
+    // A null-id group becomes `mult` rows of weight 1 (the direct form's
+    // per-copy rows). array_repeat, not sequence: sequence(1, 0) counts
+    // DOWN to [1, 0].
+    val nullId = col("rep").isNull
+    val out = f(h
+      .select(keyCols :+ explode(array_repeat(
+        struct(col("rep").as("doc_id"), when(nullId, 1L).otherwise(col("mult")).as("mult")),
+        when(nullId, col("mult")).otherwise(1L).cast("int"))).as("r"): _*)
+      .select(col("r.doc_id").as("doc_id") +: keyCols :+ col("r.mult").as("mult"): _*))
     // Left join: null-id rows match no group and leave as they are
     // (explode_outer of the missing member list yields their null id).
     // The generator's outer output is nullable, which also keeps the
     // schema equal to the direct form's nullable doc_id.
-    out.join(hub.select(col("doc_id"), col("members")), Seq("doc_id"), "left")
+    out.join(h.select(col("rep").as("doc_id"), col("members")), Seq("doc_id"), "left")
       .select(out.columns.toSeq.map(c =>
         if (c == "doc_id") explode_outer(col("members")).as("doc_id") else col(c)): _*)
   }
 
-  /** Fan-out for the PAIR-shaped collapses (d2, d4), whose output is
-    * `(doc_a, doc_b, score)` pairs rather than doc-keyed rows.
-    * `repPairs` scores pairs of representatives, `members` maps each
-    * representative (`rep`) to its sorted member list, and `within` has
-    * one `(members, score)` row per multi-member group whose twins pair
-    * with each other. Cross pairs take every member of A × every member
-    * of B, one side exploded at a time (a row never holds the product),
-    * ordered by least/greatest because member ids interleave across
-    * groups; within pairs keep doc_a < doc_b through the sorted members
-    * and posexplode/slice.
+  /** Fan-out for the pair-shaped collapses (d2, d4, d5, d8b, d15, q62):
+    * representative pairs and within-group pairs back to member pairs.
+    *
+    *  - `repPairs` has exactly three columns `(a, b, score)`: two
+    *    representative ids and the pair's score. The output keeps these
+    *    three names.
+    *  - `hub` maps each representative (`rep`) to its sorted `members`
+    *    (a [[hub]] frame, or a projection of one).
+    *  - `within` has one `(members, score)` row per group whose members
+    *    pair with each other at that score.
+    *  - `parts`, when given, is the partition count after the first
+    *    explode of each leg. AQE sizes partitions from pre-expansion
+    *    bytes and cannot see a generator's multiplication, and a
+    *    partitioner cannot split one row, so the spread is keyed on the
+    *    exploded member. Absent, the legs stay as AQE plans them.
+    *
+    * Cross pairs take every member of A × every member of B, one side
+    * exploded at a time (a row never holds the m_a×m_b product), ordered
+    * by least/greatest because member ids interleave across groups.
+    * Each member pair arises from exactly one rep pair, so no distinct
+    * is needed. Within pairs keep a < b through the sorted members and
+    * posexplode/slice.
     */
-  private[ops] def pairs(repPairs: DataFrame, members: DataFrame,
-      within: DataFrame, score: String): DataFrame = {
-    val cross = repPairs
-      .join(members.select(col("rep").as("doc_a"), col("members").as("ms_a")), Seq("doc_a"))
-      .join(members.select(col("rep").as("doc_b"), col("members").as("ms_b")), Seq("doc_b"))
-      .select(col(score), col("ms_b"), explode(col("ms_a")).as("x"))
+  private[ops] def pairs(repPairs: DataFrame, hub: DataFrame, within: DataFrame,
+      parts: Option[Int] = None): DataFrame = {
+    val Array(a, b, score) = repPairs.columns
+    def members(rep: String, as: String) =
+      hub.select(col("rep").as(rep), col("members").as(as))
+    val cross = spread(repPairs.join(members(a, "ms_a"), Seq(a))
+        .join(members(b, "ms_b"), Seq(b))
+        .select(col(b), col(score), col("ms_b"), explode(col("ms_a")).as("x")),
+        parts, "x", b)
       .select(col(score), col("x"), explode(col("ms_b")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"), col(score))
-    val inside = within
-      .select(col(score), col("members"), posexplode(col("members")).as(Seq("i", "x")))
-      .select(col("x").as("doc_a"),
-        explode(slice(col("members"), col("i") + lit(2), size(col("members")))).as("doc_b"),
+      .select(least(col("x"), col("y")).as(a), greatest(col("x"), col("y")).as(b),
         col(score))
-    cross.unionByName(inside)
-      .select(widen("doc_a"), widen("doc_b"), col(score))
+    cross.unionByName(withinPairs(within, a, b, score, parts))
+      .select(widen(a), widen(b), col(score))
   }
+
+  /** The within-group leg of [[pairs]] alone, for d15's sparse-twin
+    * path, which expands its cross pairs through its own broadcast of
+    * the multi-member groups.
+    */
+  private[ops] def withinPairs(within: DataFrame, a: String, b: String,
+      score: String, parts: Option[Int]): DataFrame =
+    spread(within.select(col(score), col("members"),
+        posexplode(col("members")).as(Seq("i", "x"))), parts, "x")
+      .select(col("x").as(a),
+        explode(slice(col("members"), col("i") + lit(2), size(col("members")))).as(b),
+        col(score))
+
+  private def spread(df: DataFrame, parts: Option[Int], keys: String*): DataFrame =
+    parts.fold(df)(n => df.repartition(n, keys.map(col): _*))
 
   /** Schema parity with the per-document form: least/greatest and explode
     * outputs are non-nullable, the direct form's grouping keys are

@@ -117,21 +117,14 @@ object Dedup {
       .select(col("doc_id"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
     if (!collapse) return pairsFromSigs(minhashSigs(toked))
-    // Twin hub: one row per DISTINCT token array. Persisted via
-    // OpCaches — the signature pass and both expansion joins would
-    // each replay the tokenize + groupBy otherwise; released by the
-    // harnesses per query.
-    val grp = OpCaches.persisted(toked.groupBy("t")
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members")))
+    val hub = Collapse.hub(toked, Seq("t"), "doc_id")
     val repPairs = pairsFromSigs(
-      minhashSigs(grp.select(col("rep").as("doc_id"), col("t"))))
+      minhashSigs(hub.select(col("rep").as("doc_id"), col("t"))))
     // Within-group pairs at est 1.0 — round(1.0, 3) in the original is
     // the double literal 1.0.
-    Collapse.pairs(repPairs, grp,
-      grp.filter(size(col("members")) >= 2)
-        .select(col("members"), lit(1.0).as("est_jaccard")),
-      "est_jaccard")
+    Collapse.pairs(repPairs, hub,
+      hub.filter(size(col("members")) >= 2)
+        .select(col("members"), lit(1.0).as("est_jaccard")))
   }
 
   /** Band explode + self-join + per-pair dedup over a signature frame
@@ -235,8 +228,8 @@ object Dedup {
     * Unlike d15, the cap keeps its ORIGINAL per-document meaning, which
     * is what makes the collapse exact rather than a semantics trade:
     * each posting carries its groups' member counts, the [2,
-    * [[MaxPostings]]] gate tests sum(m) (the true document depth), and a
-    * single-rep posting with m ≥ 2 is KEPT — it emits no cross pairs
+    * [[MaxPostings]]] gate tests sum(mult) (the true document depth), and a
+    * single-rep posting with mult ≥ 2 is KEPT — it emits no cross pairs
     * but contributes to its group's within-pair intersection count.
     * Within-group pairs share one J value computed from ni_w = the
     * number of the group's shingles surviving the cap (identical twins
@@ -314,55 +307,19 @@ object Dedup {
       // transform would re-run per reference (4× measured on d2).
       .select(col("doc_id"), col("source"), col("n_sh"),
         conv(substring(md5(col("sh")), 1, 15), 16, 10).cast("long").as("shk"))
-    if (!collapse) {
-      // Per-document form (twin-free corpora): the round-2..15 pipeline,
-      // one index shuffle + one pair aggregation, no collapse overhead.
-      val postings = sh.groupBy(col("source"), col("shk"))
-        .agg(sort_array(collect_list(struct(col("doc_id"), col("n_sh")))).as("docs"))
-        .filter(size(col("docs")).between(2, MaxPostings))
-      return postings
-        .select(explode(flatten(transform(col("docs"), a =>
-          transform(filter(col("docs"), b => b.getField("doc_id") > a.getField("doc_id")),
-            b => struct(a.getField("doc_id").as("doc_a"), a.getField("n_sh").as("n_a"),
-              b.getField("doc_id").as("doc_b"), b.getField("n_sh").as("n_b")))))).as("p"))
-        .groupBy(col("p.doc_a").as("doc_a"), col("p.doc_b").as("doc_b"))
-        .agg(count(lit(1)).as("n_inter"),
-          max(col("p.n_a")).as("n_a"), max(col("p.n_b")).as("n_b"))
-        .select(col("doc_a"), col("doc_b"),
-          round(col("n_inter").cast("double") /
-            (col("n_a") + col("n_b") - col("n_inter")).cast("double"), 6).as("jaccard"))
-        .filter(col("jaccard") >= 0.3)
-    }
-    // Twin collapse hub (one row per DISTINCT document per source):
-    // sorted key array + sorted member list. Persisted via OpCaches —
-    // three consumers (postings, cross expansion ×2 legs, within
-    // expansion) would each replay tokenize→shingle→md5 plus two
-    // shuffles; MEMORY_AND_DISK so corpus scale spills, released by the
-    // harnesses per query. n_sh is part of the group key for the same
-    // reason as d15: an intra-doc 60-bit collision (n_sh > |arr|) must
-    // not merge docs whose true shingle counts differ. Null-id documents
-    // of a source share one group of their own (rep null, no members):
-    // they never pair, as on the direct path, and count toward a
-    // posting's depth once per shingle occurrence.
-    val grp = OpCaches.persisted(sh.groupBy("doc_id", "source")
-      .agg(first(col("n_sh")).as("n_sh"), sort_array(collect_list(col("shk"))).as("arr"))
-      .groupBy(col("source"), col("arr"), col("n_sh"), col("doc_id").isNull)
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members")))
-    // Persisted like grp: the cross-pair and within-pair legs both
-    // consume it; capped lists bound the footprint (d15's postings
-    // rule).
-    val postings = OpCaches.persisted(grp
-      .select(col("source"), col("rep"), col("n_sh"),
-        size(col("members")).as("m"), explode(col("arr")).as("shk"))
+    // One posting and pair pipeline over `(source, rep, n_sh, mult, shk)`
+    // rows: each document as its own rep with mult = 1 on the direct
+    // form, one row per twin group on the collapse. Postings keep the
+    // non-null reps with their mult; the [2, MaxPostings] gate tests
+    // sum(mult), the true document depth, so null-id documents count
+    // toward the cap and never pair.
+    def postingsOf(rows: DataFrame): DataFrame = rows
       .groupBy(col("source"), col("shk"))
       .agg(sort_array(collect_list(when(col("rep").isNotNull,
-          struct(col("rep"), col("n_sh"), col("m"))))).as("reps"),
-        sum(when(col("rep").isNull, 1L).otherwise(col("m"))).as("n_docs"))
-      .filter(col("n_docs").between(2, MaxPostings)))
-    // Cross-group rep pairs: same emission/aggregation as the per-doc
-    // form, over representatives.
-    val repPairs = postings
+          struct(col("rep"), col("n_sh"), col("mult"))))).as("reps"),
+        sum(col("mult")).as("n_docs"))
+      .filter(col("n_docs").between(2, MaxPostings))
+    def repPairsOf(postings: DataFrame): DataFrame = postings
       .select(explode(flatten(transform(col("reps"), a =>
         transform(filter(col("reps"), b => b.getField("rep") > a.getField("rep")),
           b => struct(a.getField("rep").as("rep_a"), a.getField("n_sh").as("n_a"),
@@ -374,23 +331,38 @@ object Dedup {
         round(col("n_inter").cast("double") /
           (col("n_a") + col("n_b") - col("n_inter")).cast("double"), 6).as("jaccard"))
       .filter(col("jaccard") >= 0.3)
+    if (!collapse) return repPairsOf(postingsOf(sh.select(col("source"),
+      col("doc_id").as("rep"), col("n_sh"), lit(1L).as("mult"), col("shk"))))
+    // Twin hub over (source, sorted key array, n_sh). n_sh is part of
+    // the key for the same reason as d15: an intra-doc 60-bit collision
+    // (n_sh > |arr|) must not merge docs whose true shingle counts
+    // differ. Null-id documents of a source merge into one key array in
+    // the per-doc grouping, so each shingle occurrence still counts once.
+    val hub = Collapse.hub(sh.groupBy("doc_id", "source")
+      .agg(first(col("n_sh")).as("n_sh"), sort_array(collect_list(col("shk"))).as("arr")),
+      Seq("source", "arr", "n_sh"), "doc_id")
+    // Persisted like the hub: the cross-pair and within-pair legs both
+    // consume it; capped lists bound the footprint (d15's postings
+    // rule).
+    val postings = OpCaches.persisted(postingsOf(hub.select(col("source"),
+      col("rep"), col("n_sh"), col("mult"), explode(col("arr")).as("shk"))))
     // Within-group pairs: ni_w = how many of the group's shingles
     // survive the doc-depth cap (count of kept postings containing the
-    // rep — including single-rep postings, whose n_docs = m ≥ 2). All
+    // rep — including single-rep postings, whose n_docs = mult ≥ 2). All
     // member pairs of the group share J = ni_w / (2n − ni_w). Groups are
     // disjoint doc sets, so the legs never overlap.
     val within = postings
       .select(explode(col("reps")).as("r"))
-      .filter(col("r.m") >= 2)
+      .filter(col("r.mult") >= 2)
       .groupBy(col("r.rep").as("rep"))
       .agg(count(lit(1)).as("ni_w"), first(col("r.n_sh")).as("n_sh"))
       .select(col("rep"),
         round(col("ni_w").cast("double") /
           (col("n_sh") * 2 - col("ni_w")).cast("double"), 6).as("jaccard"))
       .filter(col("jaccard") >= 0.3)
-      .join(grp.select(col("rep"), col("members")), Seq("rep"))
+      .join(hub.select(col("rep"), col("members")), Seq("rep"))
       .select(col("members"), col("jaccard"))
-    Collapse.pairs(repPairs, grp, within, "jaccard")
+    Collapse.pairs(repPairsOf(postings), hub, within)
   }
 
   /** d15's Jaccard threshold as an exact rational (3/10, d4's bar):
@@ -498,22 +470,14 @@ object Dedup {
     // (arr, n) — n is carried alongside the key set so a rare intra-doc
     // 60-bit key collision (n > |arr|) can never merge docs whose
     // original shingle counts differ; every member of a group is
-    // bit-exactly interchangeable in the pair math below.
-    val allArrs = sh.groupBy("doc_id")
-      .agg(first(col("n")).as("n"),
-        sort_array(collect_list(col("shk"))).as("arr"))
-    val grp0 = allArrs.groupBy("arr", "n")
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
-    // The collapse hub: six consumers (rep keys, postings sizing,
-    // verify arrays, membership, group sizes, within-pairs) would
-    // each replay the tokenize→shingle→md5 pipeline — measured 4×
-    // the operator's wall at sf0.1. One row per DISTINCT document
-    // (key array + members), MEMORY_AND_DISK via OpCaches so corpus
-    // scale spills instead of evicting; CacheManager holds the entry
-    // strongly (no GC reclamation), so embedders free it through
-    // OpCaches.release — the harnesses clearCache per query.
-    val grp = OpCaches.persisted(grp0)
+    // bit-exactly interchangeable in the pair math below. The hub has
+    // six consumers (rep keys, postings sizing, verify arrays,
+    // membership, group sizes, within-pairs) that would each replay the
+    // tokenize→shingle→md5 pipeline — measured 4× the operator's wall
+    // at sf0.1.
+    val grp = Collapse.hub(sh.groupBy("doc_id")
+      .agg(first(col("n")).as("n"), sort_array(collect_list(col("shk"))).as("arr")),
+      Seq("arr", "n"), "doc_id")
     val shR = grp.select(col("rep").as("doc_id"), col("n"),
       explode(col("arr")).as("shk"))
     // Document frequency over REPRESENTATIVES: the global ordering only
@@ -645,17 +609,8 @@ object Dedup {
 
     // Within-group pairs: identical (set, n) means J is EXACTLY 1.0 —
     // the same value the direct formulation computes (ni = n_a = n_b).
-    // Members are sorted, so positions i < j give doc_a < doc_b; the
-    // expansion is CHUNKED (posexplode the anchor first, spread by it,
-    // slice the suffix after — one row never holds the pair product).
-    def withinLeg(parts: Int): DataFrame = grp
-      .filter(size(col("members")) >= 2)
-      .select(col("members"), posexplode(col("members")).as(Seq("i", "x")))
-      .repartition(parts, col("x"))
-      .select(col("x").as("doc_a"),
-        explode(slice(col("members"), col("i") + lit(2),
-          size(col("members")))).as("doc_b"))
-      .select(col("doc_a"), col("doc_b"), lit(1.0).as("jaccard"))
+    val within = grp.filter(size(col("members")) >= 2)
+      .select(col("members"), lit(1.0).as("jaccard"))
 
     // SPARSE-TWIN PATH (the common shape of a pre-cleaned corpus: a few
     // boilerplate groups in an otherwise distinct corpus — the sf0.1
@@ -665,12 +620,13 @@ object Dedup {
     // through a BROADCAST left-join of just those groups, defaulting the
     // missing side to [doc]: one consumer chain, which removes the
     // localCheckpoint (repPairs' pipeline runs once), the second sizing
-    // action, and both shuffle-hash expansion joins. Thresholds keep the
-    // broadcast honest: ≤200k member ids (~3 MB build side) and ≤1000
-    // members per group (per-pair expansion ≤10⁶, within the default
-    // partitioning's streaming reach). Past either bound — the
-    // duplication-HEAVY regime (sf3's 30× is 4.5M twin docs) — the
-    // shuffle path below takes over.
+    // action, and both shuffle-hash expansion joins against the whole
+    // hub. Thresholds keep the broadcast honest: ≤200k member ids (~3 MB
+    // build side) and ≤1000 members per group (per-pair expansion ≤10⁶,
+    // within the default partitioning's streaming reach). Past either
+    // bound — the duplication-HEAVY regime (sf3's 30× is 4.5M twin
+    // docs) — the shuffle path below takes over.
+    val defaultParts = s.sessionState.conf.numShufflePartitions
     if (twinDocs <= bcastTwinDocs && maxGroup <= bcastMaxGroup) {
       val multiMem = grp.filter(size(col("members")) >= 2)
         .select(col("rep"), col("members"))
@@ -682,13 +638,12 @@ object Dedup {
         .select(col("doc_b"), col("jaccard"),
           coalesce(col("mb"), array(col("doc_b"))).as("mb"),
           explode(coalesce(col("ma"), array(col("doc_a")))).as("x"))
-        .repartition(s.sessionState.conf.numShufflePartitions,
-          col("x"), col("doc_b"))
+        .repartition(defaultParts, col("x"), col("doc_b"))
         .select(col("jaccard"), col("x"), explode(col("mb")).as("y"))
         .select(least(col("x"), col("y")).as("doc_a"),
           greatest(col("x"), col("y")).as("doc_b"), col("jaccard"))
       return cross.unionByName(
-        withinLeg(s.sessionState.conf.numShufflePartitions))
+        Collapse.withinPairs(within, "doc_a", "doc_b", "jaccard", Some(defaultParts)))
     }
 
     // DUPLICATION-HEAVY PATH. Materialize repPairs ONCE (d9's
@@ -697,43 +652,20 @@ object Dedup {
     // replay the full candidate + verify pipeline. Rep-level pairs are
     // small by construction.
     val repPairs = repPairs0.localCheckpoint()
-
-    // ---- expansion back to document pairs (output-bound explode) ----
-    val mem = grp.select(col("rep"), col("members"))
-    val gsz = grp.select(col("rep"), size(col("members")).cast("long").as("m"))
-    // Cross-pair count: Σ m_a·m_b over rep pairs (the within term is
-    // already known from the fused sizing job above).
+    // Output sizing: the within term is known from the fused sizing job;
+    // the cross term is Σ m_a·m_b over rep pairs.
+    val gsz = grp.select(col("rep"), col("mult"))
     val outRows = withinPairs + repPairs
-      .join(gsz.select(col("rep").as("doc_a"), col("m").as("ma")), "doc_a")
-      .join(gsz.select(col("rep").as("doc_b"), col("m").as("mb")), "doc_b")
+      .join(gsz.select(col("rep").as("doc_a"), col("mult").as("ma")), "doc_a")
+      .join(gsz.select(col("rep").as("doc_b"), col("mult").as("mb")), "doc_b")
       .agg(coalesce(sum(col("ma") * col("mb")), lit(0L)))
       .head.getLong(0)
-    val outParts = math.max(
-      s.sessionState.conf.numShufflePartitions,
-      math.min(16384L, outRows / 200000L).toInt)
-    // Cross-group pairs: every (x ∈ A, y ∈ B) inherits the rep pair's
-    // exact score; least/greatest restores the doc_a < doc_b contract
-    // (group ids interleave). Each doc pair arises from exactly one
-    // rep pair, so no distinct is needed. CHUNKED (round 10): explode
-    // side A into rows BEFORE pairing with side B, so the largest
-    // in-memory object is one member list (which grp already holds),
-    // never an m_a×m_b struct array — and repartition on the exploded
-    // member, because a partitioner cannot split one row: keyed on
-    // (doc_a, doc_b) a single pair of million-member twin groups lands
-    // its whole 10¹² product on one task; keyed on (x, rep_b) it
-    // spreads over outParts tasks.
-    val cross = repPairs
-      .join(mem.select(col("rep").as("doc_a"), col("members").as("ma"))
-        .hint("shuffle_hash"), Seq("doc_a"))
-      .join(mem.select(col("rep").as("doc_b"), col("members").as("mb"))
-        .hint("shuffle_hash"), Seq("doc_b"))
-      .select(col("doc_b"), col("jaccard"), col("mb"),
-        explode(col("ma")).as("x"))
-      .repartition(outParts, col("x"), col("doc_b"))
-      .select(col("jaccard"), col("x"), explode(col("mb")).as("y"))
-      .select(least(col("x"), col("y")).as("doc_a"),
-        greatest(col("x"), col("y")).as("doc_b"), col("jaccard"))
-    cross.unionByName(withinLeg(outParts))
+    val outParts = math.max(defaultParts, math.min(16384L, outRows / 200000L).toInt)
+    // Member joins pinned SHUFFLE_HASH (the hint reaches both through
+    // the projections): an unmeasured broadcast of the whole hub is the
+    // verify join's sf3 driver abort again. Spread to outParts after
+    // each first explode.
+    Collapse.pairs(repPairs, grp.hint("shuffle_hash"), within, Some(outParts))
   }
 
   /** d8 — embedding-cosine near-dup with sign-bit LSH blocking (the
@@ -777,47 +709,28 @@ object Dedup {
       collapse = graft.ops.Kmeans.embTwinGate(s, dir))
   }
 
-  /** TWIN COLLAPSE (round 16, [[Similarity.vecHub]] family note): the
+  /** TWIN COLLAPSE over [[Collapse.hub]] on the vector value: the
     * banding, the cap and the score are pure functions of the vector
-    * VALUE plus a weighted bucket population, so candidate generation
-    * and cosine run once per distinct-vector GROUP pair and member
-    * pairs expand back — d5's chunked cross expansion (explode side A
-    * into rows before pairing with side B; explicit repartition on the
-    * exploded member because AQE's byte-based sizing is blind to the
-    * expansion) plus its sorted-members within-group leg.
+    * VALUE plus a weighted bucket population (see
+    * [[Similarity.cappedBandsGrouped]]), so candidate generation and
+    * cosine run once per distinct-vector GROUP pair; [[Collapse.pairs]]
+    * expands member pairs back, cross pairs from distinct group pairs
+    * and within pairs from self pairs of multi-member groups.
     */
   private[graft] def d8bNearDupMultibandImpl(e: DataFrame,
       collapse: Boolean): DataFrame = {
     if (collapse) {
-      val hub = Similarity.vecHub(e, "vec_id", "v")
-      val gp = Similarity.groupPairs(
-        Similarity.cappedBandsGrouped(hub, "vec_id", "v"), "vec_id", "v")
+      val hub = Collapse.hub(e, Seq("v"), "vec_id")
+      val gp = Similarity.groupPairs(Similarity.cappedBandsGrouped(hub, "v"), "v")
         .filter(col("cos_sim") >= 0.3)
-      val mem = hub.select(col("vec_id").as("rep"), col("members"))
-      val parts = e.sparkSession.sessionState.conf.numShufflePartitions
-      val cross = gp.filter(col("ga") =!= col("gb"))
-        .join(mem.select(col("rep").as("ga"), col("members").as("ma")), Seq("ga"))
-        .join(mem.select(col("rep").as("gb"), col("members").as("mb")), Seq("gb"))
-        .select(col("gb"), col("cos_sim"), col("mb"), explode(col("ma")).as("x"))
-        .repartition(parts, col("x"), col("gb"))
-        .select(col("cos_sim"), col("x"), explode(col("mb")).as("y"))
-        .select(least(col("x"), col("y")).as("va"),
-          greatest(col("x"), col("y")).as("vb"), col("cos_sim"))
-        // when(isNotNull, ..) widens nullability back to the direct
-        // path's (d4's expansion precedent: analysis-time schema parity).
-        .select(when(col("va").isNotNull, col("va")).as("vec_a"),
-          when(col("vb").isNotNull, col("vb")).as("vec_b"), col("cos_sim"))
-      val within = gp.filter(col("ga") === col("gb"))
-        .join(mem.select(col("rep").as("ga"), col("members").as("ma")), Seq("ga"))
-        .filter(size(col("ma")) >= 2)
-        .select(col("cos_sim"), col("ma"), posexplode(col("ma")).as(Seq("i", "x")))
-        .repartition(parts, col("x"))
-        .select(col("x").as("va"),
-          explode(slice(col("ma"), col("i") + lit(2), size(col("ma")))).as("vb"),
-          col("cos_sim"))
-        .select(when(col("va").isNotNull, col("va")).as("vec_a"),
-          when(col("vb").isNotNull, col("vb")).as("vec_b"), col("cos_sim"))
-      return cross.unionByName(within)
+      return Collapse.pairs(
+        gp.filter(col("ga") =!= col("gb"))
+          .select(col("ga").as("vec_a"), col("gb").as("vec_b"), col("cos_sim")),
+        hub,
+        gp.filter(col("ga") === col("gb"))
+          .join(hub.select(col("rep").as("ga"), col("members")), Seq("ga"))
+          .select(col("members"), col("cos_sim")),
+        Some(e.sparkSession.sessionState.conf.numShufflePartitions))
     }
     val c = Similarity.cappedBands(e, "vec_id", "v")
     c.as("a")
@@ -856,33 +769,19 @@ object Dedup {
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"), col("label"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
-    // Persisted: the cross-pair self-join (twice) and the within-group
-    // leg all consume grp; registered with OpCaches (released by
-    // harnesses between queries).
-    val grp = OpCaches.persisted(
-      e.groupBy(col("label"), col("v"))
-        .agg(min(col("vec_id")).as("rep"),
-          sort_array(collect_list(col("vec_id"))).as("members")))
-    val cross = grp.as("a")
-      .join(grp.as("b").hint("SHUFFLE_HASH"),
+    val hub = Collapse.hub(e, Seq("label", "v"), "vec_id")
+    val repPairs = hub.as("a")
+      .join(hub.as("b").hint("SHUFFLE_HASH"),
         col("a.label") === col("b.label") && col("a.rep") < col("b.rep"))
-      .select(col("a.members").as("ma"), col("b.members").as("mb"),
+      .select(col("a.rep").as("vec_a"), col("b.rep").as("vec_b"),
         round(Similarity.cosine(col("a.v"), col("b.v")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= 0.3)
-      .select(explode(col("ma")).as("x"), col("mb"), col("cos_sim"))
-      .select(col("x"), explode(col("mb")).as("y"), col("cos_sim"))
-      .select(least(col("x"), col("y")).as("vec_a"),
-        greatest(col("x"), col("y")).as("vec_b"), col("cos_sim"))
-    val within = grp
+    val within = hub
       .filter(col("label").isNotNull && size(col("members")) >= 2)
       .select(col("members"),
         round(Similarity.cosine(col("v"), col("v")), 6).as("cos_sim"))
       .filter(col("cos_sim") >= 0.3)
-      .select(explode(col("members")).as("x"), col("members"), col("cos_sim"))
-      .select(col("x"), explode(col("members")).as("y"), col("cos_sim"))
-      .filter(col("x") < col("y"))
-      .select(col("x").as("vec_a"), col("y").as("vec_b"), col("cos_sim"))
-    cross.unionByName(within)
+    Collapse.pairs(repPairs, hub, within)
   }
 
   /** Connected components over an undirected edge list by iterative
@@ -1022,25 +921,21 @@ object Dedup {
     val toked = graft.Tables.spread(load(s, dir, "documents"))
       .select(col("doc_id"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
-    // The sig-level grouping above collapses the GRAPH but still pays
-    // the md5 signature pass once per copy. Behind the shared text
-    // gate (round 16, d2's hub): hash once per distinct token array
-    // and let the signature grouping merge the token groups' member
-    // lists — min-of-mins is the global min, and flatten-of-lists is
-    // the original membership, so `grp` is value-identical and every
-    // downstream step (banding, CC, expansion) is untouched.
+    // Behind the shared text gate, the md5 signature pass runs once per
+    // distinct token array (d2's hub) and the signature grouping merges
+    // the token hub's member lists — min-of-mins is the global min, and
+    // flatten-of-lists is the original membership, so `grp` is
+    // value-identical to the direct signature hub and every downstream
+    // step (banding, CC, expansion) is untouched.
     val grp = if (twinGate(s, dir, Seq("text"))) {
-      val tg = OpCaches.persisted(toked.groupBy("t")
-        .agg(min(col("doc_id")).as("doc_id"),
-          collect_list(col("doc_id")).as("ms")))
+      val tg = Collapse.hub(toked, Seq("t"), "doc_id")
+        .select(col("rep").as("doc_id"), col("t"), col("members"))
       minhashSigs(tg.select(col("doc_id"), col("t")))
-        .join(tg.select(col("doc_id"), col("ms")), Seq("doc_id"))
+        .join(tg.select(col("doc_id"), col("members")), Seq("doc_id"))
         .groupBy("sig")
         .agg(min(col("doc_id")).as("rep"),
-          sort_array(flatten(collect_list(col("ms")))).as("members"))
-    } else minhashSigs(toked).groupBy("sig")
-      .agg(min(col("doc_id")).as("rep"),
-        sort_array(collect_list(col("doc_id"))).as("members"))
+          sort_array(flatten(collect_list(col("members")))).as("members"))
+    } else Collapse.hub(minhashSigs(toked), Seq("sig"), "doc_id")
     // Rep-level band collisions — the same banding as minhashPairs,
     // over one row per distinct signature (est_jaccard is not needed:
     // d9 consumes adjacency only).
@@ -1253,9 +1148,10 @@ object Dedup {
     * degenerate singletons stay excluded.
     */
   def d11SemanticDedup(s: SparkSession, dir: String): DataFrame = {
-    // Persisted: pairs AND the membership expansion both consume grp;
-    // registered with OpCaches (released by harnesses between queries).
-    val grp = OpCaches.persisted(d11Groups(s, dir))
+    // One hub row per DISTINCT quantized vector; assignment is
+    // q-determined, so keying on (q, cell) is keying on q.
+    val grp = d11Vec(Collapse.hub(graft.ops.Kmeans.assignedWithVec(s, dir),
+      Seq("q", "cell"), "id"))
     val labels = connectedComponents(
       d11RepPairs(grp), "vec_a", "vec_b")
     grp.join(labels, grp("rep") === labels("id"), "left")
@@ -1266,19 +1162,11 @@ object Dedup {
         coalesce(col("label"), col("rep")).as("cluster_id"))
   }
 
-  /** One row per DISTINCT quantized vector: (cell, rep, members, v).
-    * min(cell) mirrors the oracle's grouping — assignment is
-    * q-determined, so every member shares the cell.
-    */
-  private def d11Groups(s: SparkSession, dir: String): DataFrame =
-    graft.ops.Kmeans.assignedWithVec(s, dir)
-      .groupBy(col("q"))
-      .agg(min(col("cell")).as("cell"), min(col("id")).as("rep"),
-        sort_array(collect_list(col("id"))).as("members"))
-      .withColumn("v",
-        transform(col("q"), x => x.cast("double") / graft.ops.Kmeans.Scale))
+  /** The cosine's vector: the quantized components mapped back to doubles. */
+  private def d11Vec(df: DataFrame): DataFrame =
+    df.withColumn("v", transform(col("q"), x => x.cast("double") / graft.ops.Kmeans.Scale))
 
-  /** Rep-level within-cell cosine pairs over a [[d11Groups]] frame.
+  /** Rep-level within-cell cosine pairs over `(rep, cell, v)` rows.
     * SHUFFLE_HASH pin, same reason as d2: both self-join sides must go
     * through byte-identical exchanges on cell so the upstream pass is
     * planned once and reused.
@@ -1292,15 +1180,17 @@ object Dedup {
       .select(col("a.rep").as("vec_a"), col("b.rep").as("vec_b"))
   }
 
-  /** The pre-component pairs stage over an UNPERSISTED groups frame —
+  /** The pre-component pairs stage over UNPERSISTED representatives —
     * the PlanChecksSpec surface pinning the load-bearing plan property
     * (one Lloyd's-assignment pass feeding BOTH self-join sides via a
     * `ReusedExchange`), which the composed d11 plan can't show once
-    * [[connectedComponents]]' localCheckpoint truncates lineage and
-    * the production path's persist hides the lineage in a cache.
+    * [[connectedComponents]]' localCheckpoint truncates lineage and the
+    * persisted hub hides the lineage in a cache. It needs only each
+    * group's rep, so it builds no member lists.
     */
   private[graft] def d11Pairs(s: SparkSession, dir: String): DataFrame =
-    d11RepPairs(d11Groups(s, dir))
+    d11RepPairs(d11Vec(graft.ops.Kmeans.assignedWithVec(s, dir)
+      .groupBy(col("q"), col("cell")).agg(min(col("id")).as("rep"))))
 
   private val SubstrK = 40
 
@@ -1571,9 +1461,14 @@ object Dedup {
     */
   private[graft] def winnow(docs: DataFrame, collapse: Boolean = false): DataFrame =
     Collapse.byKey(docs, Seq("text"), collapse) { rows =>
-      val w = Window.partitionBy("doc_id").orderBy("off")
+      // Frames run per (doc_id, text hash), not per doc_id: null-id
+      // documents share the id, and one frame sequence over several
+      // texts would interleave their tied offsets in whatever order the
+      // exchange delivers them. (Copies of one text still share a
+      // sequence; their rows are identical, so their order cannot show.)
+      val w = Window.partitionBy("doc_id", "th").orderBy("off")
         .rowsBetween(Window.currentRow, WinnowW - 1)
-      windowGrams(rows)
+      windowGrams(rows.withColumn("th", xxhash64(col("text"))), Seq("th"))
         // Rightmost-min per window: struct min orders by gk then -off,
         // so ties on gk resolve to the LARGEST offset — the tie rule
         // that makes runs of identical windows (e.g. char repeats)

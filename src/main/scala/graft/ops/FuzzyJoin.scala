@@ -29,8 +29,7 @@ import graft.Tables.load
   * distinct name, and expand result pairs back through membership —
   * within-group pairs are distance 0 by identity (no verify needed),
   * and the quadratic legs shrink by the square of the duplication
-  * depth. The expansion is output-bound and chunked (explode one
-  * member list per step, d15's rule — no m_a×m_b array in any row).
+  * depth; [[Collapse.pairs]] does the expansion.
   *
   * Determinism: distances are exact integers in both engines (same DP
   * recurrence), pairs are canonical (suppkey_a < suppkey_b), no floats
@@ -85,51 +84,29 @@ object FuzzyJoin {
     * Callers with non-keyed rows must dedup/re-key first.
     */
   private[graft] def fuzzyPairs(keyed: DataFrame): DataFrame = {
-    val named = keyed.filter(col("name").isNotNull)
     // Twin collapse (d15's): one representative per DISTINCT name.
-    // Four consumers below (rep keys, both expansion sides, the
-    // within-group leg) — persist so the groupBy runs once. Registered
-    // with OpCaches: CacheManager holds persisted plans strongly (GC /
-    // ContextCleaner never reclaims them), so embedders release via
-    // OpCaches.release(spark); the per-query harnesses clearCache.
-    val grp = OpCaches.persisted(named.groupBy("name")
-      .agg(sort_array(collect_list(col("k"))).as("members")))
-    val vars = grp.select(col("name"), explode(deletionKeys(col("name"))).as("v"))
+    val hub = Collapse.hub(keyed.filter(col("name").isNotNull), Seq("name"), "k")
+    val vars = hub.select(col("rep"), col("name"),
+      explode(deletionKeys(col("name"))).as("v"))
     // Candidate pairs: equi-join on the block key. name_a < name_b
     // both canonicalizes the pair and removes self-joins; distinct
     // collapses multi-key agreement (two strings can share several
     // deletion keys) before the verify touches them.
-    val crossRep = vars.select(col("name").as("name_a"), col("v"))
-      .join(vars.select(col("name").as("name_b"), col("v")), "v")
+    val repPairs = vars.select(col("rep").as("rep_a"), col("name").as("name_a"), col("v"))
+      .join(vars.select(col("rep").as("rep_b"), col("name").as("name_b"), col("v")), "v")
       .filter(col("name_a") < col("name_b"))
-      .select(col("name_a"), col("name_b")).distinct()
+      .select(col("rep_a"), col("rep_b"), col("name_a"), col("name_b")).distinct()
       // Distance computed ONCE, then filtered: Filter and Project are
       // separate codegen operators with no cross-operator CSE, so a
       // filter-then-recompute shape would run the O(|a|·|b|) DP twice
       // per surviving pair — the dominant CPU of the verify leg
       // (review-caught).
-      .select(col("name_a"), col("name_b"),
+      .select(col("rep_a").as("suppkey_a"), col("rep_b").as("suppkey_b"),
         levenshtein(col("name_a"), col("name_b")).cast("long").as("dist"))
       .filter(col("dist") <= MaxDist)
-    // Expansion: every (x ∈ A, y ∈ B) inherits the rep pair's exact
-    // distance; least/greatest restores k_a < k_b (group member ids
-    // interleave). Chunked one explode per step.
-    val cross = crossRep
-      .join(grp.select(col("name").as("name_a"), col("members").as("ma")), "name_a")
-      .join(grp.select(col("name").as("name_b"), col("members").as("mb")), "name_b")
-      .select(col("dist"), col("mb"), explode(col("ma")).as("x"))
-      .select(col("dist"), col("x"), explode(col("mb")).as("y"))
-      .select(least(col("x"), col("y")).as("suppkey_a"),
-        greatest(col("x"), col("y")).as("suppkey_b"), col("dist"))
     // Within-group pairs: identical names, distance 0 by identity.
-    // Members are sorted, so position i < j gives suppkey_a < suppkey_b.
-    val within = grp.filter(size(col("members")) >= 2)
-      .select(col("members"), posexplode(col("members")).as(Seq("i", "x")))
-      .select(col("x").as("suppkey_a"),
-        explode(slice(col("members"), col("i") + lit(2),
-          size(col("members")))).as("suppkey_b"),
-        lit(0L).as("dist"))
-    cross.unionByName(within)
+    Collapse.pairs(repPairs, hub,
+      hub.filter(size(col("members")) >= 2).select(col("members"), lit(0L).as("dist")))
   }
 
   /** Streaming record linkage — [[fuzzyPairs]]' blocking applied

@@ -85,21 +85,17 @@ object Hybrid {
     val e = emb
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
       .withColumn("n2", sqNorm(col("v")))
-    // Corpus side collapsed to distinct vector values; cgid = min doc_id
-    // (deterministic group key), docs = the group's members (re-ranked
-    // after explode, so list order is immaterial).
-    val cg = corpus.select(col("doc_id"))
-      .join(e, col("doc_id") === col("vec_id")).drop("vec_id")
-      .groupBy(col("v"), col("n2"))
-      .agg(min(col("doc_id")).as("cgid"),
-        collect_list(col("doc_id")).as("docs"),
-        count(lit(1)).as("gsize"))
-    // Query side collapsed the same way; qids fans results back out.
-    val qg = queries.select(col("doc_id").as("query_id"))
-      .join(e, col("query_id") === col("vec_id"))
-      .groupBy(col("v"), col("n2"))
-      .agg(min(col("query_id")).as("qgid"),
-        collect_list(col("query_id")).as("qids"))
+    // Both sides collapsed to distinct vector values ([[Collapse.hub]]):
+    // the group's rep is its deterministic key, its members fan results
+    // back out (docs are re-ranked after explode), and mult is the
+    // corpus group's size.
+    val cg = Collapse.hub(corpus.select(col("doc_id"))
+      .join(e, col("doc_id") === col("vec_id")).drop("vec_id"), Seq("v", "n2"), "doc_id")
+      .select(col("v"), col("n2"), col("rep").as("cgid"), col("members").as("docs"),
+        col("mult").as("gsize"))
+    val qg = Collapse.hub(queries.select(col("doc_id").as("query_id"))
+      .join(e, col("query_id") === col("vec_id")), Seq("v", "n2"), "query_id")
+      .select(col("v"), col("n2"), col("rep").as("qgid"), col("members").as("qids"))
     // Explicit partition count for the kernel input: cgSlim is a SMALL
     // frame (distinct corpus vectors) that the cross join expands by
     // |distinct query vectors| — AQE's byte-based coalesce sees only

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Release handle for the intermediate frames operators persist
-  * internally (d15's collapse hub / postings, q62's group frame).
+  * internally (the twin hubs of [[Collapse.hub]], d4/d15's postings).
   *
   * Why it exists: `Dataset.persist` registers the plan with the
   * session's CacheManager, which holds it STRONGLY — cached entries

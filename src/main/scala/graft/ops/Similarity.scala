@@ -224,44 +224,22 @@ object Similarity {
       .dropDuplicates(s"${idCol}_a", s"${idCol}_b")
   }
 
-  // --- Exact twin collapse over the capped-band family (round 16) -----
-  //
-  // The population caps here are WHOLE-BUCKET filters — [2, MaxBucket]
-  // on a bucket's TOTAL membership, `filter(between(...))`, never a
-  // row_number truncation inside a bucket — so they weight exactly
-  // (sum(mult) over hub rows ≡ count(1) over member rows, Long for
-  // Long) and the family collapses like d4: band math and cosine run
-  // once per DISTINCT embedding value, member results expand back
-  // through group membership. (An earlier NOTES entry mislabeled these
-  // caps as member-level truncations; reading the code shows the cap
-  // drops whole buckets, which is the weightable case.) Twins share
-  // every band bucket — banding is a pure function of the vector — so
-  // co-occurrence decisions are group-level: if groups A and B share a
-  // surviving bucket, EVERY cross member pair co-occurs there, and the
-  // score round(cosine, 6) is bit-identical for all of them. Gated per
-  // corpus on [[Kmeans.embTwinGate]] (the memoized embeddings
-  // duplication probe the Lloyd's collapse already uses); unique
-  // corpora keep the original single-pass member-level plans.
-
-  /** One row per distinct vector value: `(vecCol, idCol = min member
-    * id, members sorted asc, mult)`. Persisted — every consumer reads
-    * it at least twice (banding + membership expansion).
+  /** [[cappedBands]] over [[Collapse.hub]] rows keyed on the vector
+    * value: identical band explode and window shape, with the bucket
+    * population as the mult-weighted sum. The caps are WHOLE-BUCKET
+    * filters on a bucket's total membership, never a truncation inside
+    * a bucket, so they weight exactly (sum(mult) over hub rows ≡
+    * count(1) over member rows). Twins share every bucket — banding is
+    * a pure function of the vector — so co-occurrence is decided per
+    * group and round(cosine, 6) is bit-identical for every member pair
+    * of two groups. Gated per corpus on [[Kmeans.embTwinGate]]; unique
+    * corpora keep the member-level plans.
     */
-  private[ops] def vecHub(e: DataFrame, idCol: String, vecCol: String): DataFrame =
-    OpCaches.persisted(e
-      .groupBy(col(vecCol))
-      .agg(min(col(idCol)).as(idCol),
-        sort_array(collect_list(col(idCol))).as("members"),
-        count(lit(1)).as("mult")))
-
-  /** [[cappedBands]] over hub rows: identical band explode and window
-    * shape, with the bucket population as the mult-weighted sum.
-    */
-  private[ops] def cappedBandsGrouped(hub: DataFrame, idCol: String,
-      vecCol: String, bits: Int = BandBits, nTables: Int = BandTables,
+  private[ops] def cappedBandsGrouped(hub: DataFrame, vecCol: String,
+      bits: Int = BandBits, nTables: Int = BandTables,
       maxBucket: Int = MaxBucket): DataFrame = {
     val banded = hub
-      .select(col(idCol), col(vecCol), col("mult"),
+      .select(col("rep"), col(vecCol), col("mult"),
         posexplode_outer(bandBuckets(col(vecCol), bits, nTables))
           .as(Seq("tbl", "bucket")))
     banded
@@ -278,13 +256,13 @@ object Similarity {
     * member-level join would emit within-group pairs. min() over the
     * per-table copies is pure dedup (scores are bit-identical).
     */
-  private[ops] def groupPairs(c: DataFrame, idCol: String, vecCol: String): DataFrame =
+  private[ops] def groupPairs(c: DataFrame, vecCol: String): DataFrame =
     c.as("a")
       .join(c.as("b"),
         col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          (col(s"a.$idCol") < col(s"b.$idCol") ||
-            (col(s"a.$idCol") === col(s"b.$idCol") && col("a.mult") >= 2)))
-      .select(col(s"a.$idCol").as("ga"), col(s"b.$idCol").as("gb"),
+          (col("a.rep") < col("b.rep") ||
+            (col("a.rep") === col("b.rep") && col("a.mult") >= 2)))
+      .select(col("a.rep").as("ga"), col("b.rep").as("gb"),
         round(cosine(col(s"a.$vecCol"), col(s"b.$vecCol")), 6).as("cs"))
       .groupBy(col("ga"), col("gb")).agg(min(col("cs")).as("cos_sim"))
 
@@ -296,13 +274,12 @@ object Similarity {
     * Output: one row per query group — `(gq, cand)` with `cand` a
     * rank-sorted array of `(rk, nid, cs)` structs, length ≤ keep.
     */
-  private def topCandidates(gp: DataFrame, hub: DataFrame, idCol: String,
-      keep: Int): DataFrame = {
+  private def topCandidates(gp: DataFrame, hub: DataFrame, keep: Int): DataFrame = {
     val directed = gp.select(col("ga").as("gq"), col("gb").as("gc"), col("cos_sim"))
       .union(gp.filter(col("ga") =!= col("gb"))
         .select(col("gb").as("gq"), col("ga").as("gc"), col("cos_sim")))
     val nm = directed
-      .join(hub.select(col(idCol).as("gc"),
+      .join(hub.select(col("rep").as("gc"),
         slice(col("members"), 1, keep).as("mc")), Seq("gc"))
       .select(col("gq"), explode(col("mc")).as("nid"), col("cos_sim"))
     val w = Window.partitionBy("gq")
@@ -314,13 +291,11 @@ object Similarity {
   }
 
   /** s2b — multi-table LSH ANN: per vector, the best neighbor among
-    * candidates from any band table. Directed collisions feed a max_by
-    * argmax per query (partial+final agg, no sort window); a pair
-    * colliding in several tables yields identical (payload, order-key)
-    * rows, so duplicates cannot flip the argmax and no pre-dedup pass is
-    * needed. Vectors whose every bucket is singleton (or over the cap)
-    * have no candidates and are absent — the recall/cost trade the
-    * (bits, tables) pair tunes.
+    * candidates from any band table, by (cos_sim desc, neighbor_id asc).
+    * That is [[s6AnnRerank]]'s rank-1 row, so s2b is s6 with the rank
+    * column dropped, on both twin-gate paths. Vectors whose every bucket
+    * is singleton (or over the cap) have no candidates and are absent —
+    * the recall/cost trade the (bits, tables) pair tunes.
     */
   def s2bAnnMultiband(s: SparkSession, dir: String): DataFrame = {
     val e = load(s, dir, "embeddings")
@@ -328,47 +303,8 @@ object Similarity {
     s2bAnnMultibandImpl(e, collapse = Kmeans.embTwinGate(s, dir))
   }
 
-  /** TWIN COLLAPSE (round 16, see the family note above): the argmax of
-    * (cos_sim, -neighbor_id) over a query member's candidates is
-    * derivable from the GROUP-level top-2 — all members of a query
-    * group share one candidate member list (ordered by score desc, id
-    * asc), each member just excludes ITSELF, and at most one of the
-    * top-2 entries can be the member — so the per-member best is the
-    * first top-2 entry that isn't the member. A query whose only
-    * candidate entry is itself (impossible: a surviving self pair
-    * implies ≥ 2 members, so the top-2 holds a second id) would drop
-    * out, exactly like a direct query with no candidates.
-    */
-  private[graft] def s2bAnnMultibandImpl(e: DataFrame, collapse: Boolean): DataFrame = {
-    if (collapse) {
-      val hub = vecHub(e, "vec_id", "v")
-      val top = topCandidates(
-        groupPairs(cappedBandsGrouped(hub, "vec_id", "v"), "vec_id", "v"),
-        hub, "vec_id", keep = 2)
-      // when(isNotNull, ..) widens nullability back to the direct
-      // path's (d4's expansion precedent: analysis-time schema parity).
-      return hub.select(col("vec_id").as("gq"), col("members")).join(top, Seq("gq"))
-        .select(explode(col("members")).as("qx"), col("cand"))
-        .select(col("qx"),
-          filter(col("cand"), x => x.getField("nid") =!= col("qx")).as("c2"))
-        .filter(size(col("c2")) >= 1)
-        .select(when(col("qx").isNotNull, col("qx")).as("query_id"),
-          element_at(col("c2"), 1).getField("nid").as("neighbor_id"),
-          element_at(col("c2"), 1).getField("cs").as("cos_sim"))
-    }
-    val c = cappedBands(e, "vec_id", "v")
-    c.as("a")
-      .join(c.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
-        round(cosine(col("a.v"), col("b.v")), 6).as("cos_sim"))
-      .groupBy(col("query_id"))
-      .agg(max_by(
-        struct(col("neighbor_id"), col("cos_sim")),
-        struct(col("cos_sim"), (-col("neighbor_id")).as("neg_id"))).as("best"))
-      .select(col("query_id"), col("best.neighbor_id"), col("best.cos_sim"))
-  }
+  private[graft] def s2bAnnMultibandImpl(e: DataFrame, collapse: Boolean): DataFrame =
+    s6AnnRerankImpl(e, collapse).filter(col("rank") === 1).drop("rank")
 
   private[ops] val RerankK = 3
 
@@ -388,7 +324,7 @@ object Similarity {
     s6AnnRerankImpl(e, collapse = Kmeans.embTwinGate(s, dir))
   }
 
-  /** TWIN COLLAPSE (round 16, see the family note above): after the
+  /** TWIN COLLAPSE ([[cappedBandsGrouped]]'s exactness note): after the
     * (query, neighbor) dedup, every member of a query group ranks the
     * SAME candidate member list (score desc, id asc) minus itself — so
     * the group-level top-(K+1) determines every member's top-K: drop
@@ -400,13 +336,12 @@ object Similarity {
     */
   private[graft] def s6AnnRerankImpl(e: DataFrame, collapse: Boolean): DataFrame = {
     if (collapse) {
-      val hub = vecHub(e, "vec_id", "v")
-      val top = topCandidates(
-        groupPairs(cappedBandsGrouped(hub, "vec_id", "v"), "vec_id", "v"),
-        hub, "vec_id", keep = RerankK + 1)
+      val hub = Collapse.hub(e, Seq("v"), "vec_id")
+      val top = topCandidates(groupPairs(cappedBandsGrouped(hub, "v"), "v"),
+        hub, keep = RerankK + 1)
       // when(isNotNull, ..) widens nullability back to the direct
       // path's (d4's expansion precedent: analysis-time schema parity).
-      return hub.select(col("vec_id").as("gq"), col("members")).join(top, Seq("gq"))
+      return hub.select(col("rep").as("gq"), col("members")).join(top, Seq("gq"))
         .select(explode(col("members")).as("qx"), col("cand"))
         .select(col("qx"),
           slice(filter(col("cand"), x => x.getField("nid") =!= col("qx")),

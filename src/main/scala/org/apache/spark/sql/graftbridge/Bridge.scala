@@ -3,14 +3,18 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.errors.QueryCompilationErrors
 
 /** Column ⇄ Expression bridge. Spark 4 made `Column.expr` and
   * `ExpressionUtils` private[sql]; a library shipping custom Catalyst
-  * expressions needs exactly these two conversions, so this object lives
-  * under the `org.apache.spark.sql` namespace to access them — the
-  * conventional pattern for Spark extension libraries.
+  * expressions needs exactly these two conversions (and the built-ins'
+  * WRONG_NUM_ARGS analysis error for its SQL function builders), so this
+  * object lives under the `org.apache.spark.sql` namespace to access
+  * them — the conventional pattern for Spark extension libraries.
   */
 object Bridge {
   def expr(c: Column): Expression = ExpressionUtils.expression(c)
   def column(e: Expression): Column = ExpressionUtils.column(e)
+  def wrongNumArgs(name: String, expected: Int, actual: Int): Throwable =
+    QueryCompilationErrors.wrongNumArgsError(name, Seq(expected), actual)
 }

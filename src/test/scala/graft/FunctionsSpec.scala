@@ -162,6 +162,33 @@ class FunctionsSpec extends AnyFunSuite {
     assert(r == 1.0)
   }
 
+  test("a kernel called with 1 or 3 arguments raises WRONG_NUM_ARGS naming " +
+    "the function, through Functions.register and through GraftExtensions") {
+    def check(session: SparkSession): Unit =
+      for ((name, args) <- Seq("cosine_sim" -> "array(1.0d)",
+          "cosine_sim" -> "array(1.0d), array(1.0d), array(1.0d)",
+          "sq_dist_long" -> "array(1L)")) {
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          session.sql(s"SELECT $name($args)").collect())
+        assert(e.getCondition.startsWith("WRONG_NUM_ARGS"), e.getMessage)
+        assert(e.getMessage.contains(s"`$name`"), e.getMessage)
+      }
+    Functions.register(spark)
+    check(spark)
+    // The extension path builds its own session on the shared context
+    // (ExtensionsSpec's pattern); the shared session is restored after.
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try check(SparkSession.builder()
+      .withExtensions(new graft.functions.GraftExtensions()(_)).getOrCreate())
+    finally {
+      SparkSession.clearActiveSession()
+      SparkSession.clearDefaultSession()
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
+  }
+
   test("edge cases: zero vector → NaN; empty arrays → NaN; null → null") {
     Functions.register(spark)
     val r = spark.sql(

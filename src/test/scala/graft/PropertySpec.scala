@@ -964,7 +964,11 @@ class PropertySpec extends AnyFunSuite {
     //   d ×2  — sign flip in dim 1 only (table-0 bucket differs,
     //           tables 1-3 collide);
     //   w ×1  — alternating signs: singleton in every bucket, dropped
-    //           by the ≥2 side of the cap in BOTH formulations.
+    //           by the ≥2 side of the cap in BOTH formulations;
+    //   null-id copies: two of q (its bucket populations grow, its
+    //           group's members do not) and z ×2 held ONLY by null ids
+    //           (all-positive, so it shares a/b's buckets) — they weigh
+    //           in every cap and never appear as an id.
     val ones = Seq.tabulate(48)(_ => 1.0f)
     def vWith(over: (Int, Float)*): Seq[Float] =
       over.foldLeft(ones) { case (v, (i, x)) => v.updated(i - 1, x) }
@@ -974,14 +978,19 @@ class PropertySpec extends AnyFunSuite {
     val c = ones.map(x => -x)
     val d = vWith(1 -> -1.0f)
     val w = Seq.tabulate(48)(i => if (i % 2 == 0) 1.0f else -1.0f)
-    val rows: Seq[(Long, Seq[Float])] = Seq(
+    val z = vWith(2 -> 0.5f)
+    val rows: Seq[(Option[Long], Seq[Float])] = Seq(
       1L -> q, 2L -> q, 3L -> q, 10L -> a, 11L -> a, 20L -> b,
       30L -> c, 31L -> c, 32L -> c, 40L -> d, 41L -> d, 60L -> w)
+      .map { case (i, v) => (Option(i), v) } ++
+      Seq(None -> q, None -> q, None -> z, None -> z)
     val e = rows.toDF("vec_id", "embedding")
       .select(col("vec_id"),
         transform(col("embedding"), x => x.cast("double")).as("v"))
     def set(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(_.toSeq.toList).toSet
+    def bag(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(_.toSeq.toList).groupBy(identity).view.mapValues(_.length).toMap
     import graft.ops.{Dedup, Similarity}
     val pairs = Seq(
       ("d8b", Dedup.d8bNearDupMultibandImpl(e, collapse = true),
@@ -991,9 +1000,10 @@ class PropertySpec extends AnyFunSuite {
       ("s6", Similarity.s6AnnRerankImpl(e, collapse = true),
         Similarity.s6AnnRerankImpl(e, collapse = false)))
     for ((name, got, want) <- pairs) {
-      val (g, v) = (set(got), set(want))
+      val (g, v) = (bag(got), bag(want))
       assert(g.nonEmpty, s"$name produced no rows — vacuous")
       assert(g == v, s"$name collapse diverged from direct")
+      assert(!g.keys.exists(_.take(2).contains(null)), s"$name emitted a null id")
     }
     // Non-vacuous shape checks on the direct output the collapse had to
     // reproduce: within-group and cross-group d8b pairs both present;
@@ -1006,6 +1016,59 @@ class PropertySpec extends AnyFunSuite {
     val s2b = Similarity.s2bAnnMultibandImpl(e, collapse = true)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(s2b(1L) == 2L && s2b(2L) == 1L && s2b(3L) == 1L)
+  }
+
+  test("d5 on DUPLICATED embeddings with null labels and null ids ≡ " +
+    "the brute-force label-blocked self-join, as multisets") {
+    // Twin groups within one label (1-3, 4-5), the same vector under two
+    // labels (1-3 vs 6) and under a NULL label (7, 8 — never pair), a
+    // null-id copy of a twin and a vector held only by null ids (never
+    // appear), a label-1 vector below the 0.3 bar against the others,
+    // and a label-2 cluster (10-12).
+    val u = Seq(1.0f, 0.0f, 0.0f)
+    val u2 = Seq(1.0f, 0.1f, 0.0f)
+    val rows = Seq[(Option[Long], Option[Int], Seq[Float])](
+      (Some(1L), Some(1), u), (Some(2L), Some(1), u), (Some(3L), Some(1), u),
+      (None, Some(1), u), (Some(4L), Some(1), u2), (Some(5L), Some(1), u2),
+      (Some(6L), Some(2), u), (Some(7L), None, u), (Some(8L), None, u),
+      (Some(9L), Some(1), Seq(0.0f, 1.0f, 0.0f)),
+      (None, Some(1), Seq(1.0f, 1.0f, 0.0f)), (None, Some(1), Seq(1.0f, 1.0f, 0.0f)),
+      (Some(10L), Some(2), Seq(1.0f, 1.0f, 0.0f)), (Some(11L), Some(2), Seq(1.0f, 1.0f, 0.0f)),
+      (Some(12L), Some(2), Seq(0.9f, 1.0f, 0.2f)))
+    val dir = java.nio.file.Files.createTempDirectory("d5Twins").toFile
+    try {
+      rows.toDF("vec_id", "label", "embedding").write.mode("overwrite")
+        .parquet(s"${dir.getPath}/embeddings.parquet")
+      // The engine's cosine: three sequential double sums, one sqrt;
+      // Spark's round(x, 6) is HALF_UP on the double's decimal form.
+      def cos(x: Seq[Float], y: Seq[Float]): Double = {
+        val (xd, yd) = (x.map(_.toDouble), y.map(_.toDouble))
+        val (dot, nx, ny) = xd.zip(yd).foldLeft((0.0, 0.0, 0.0)) {
+          case ((d, a, b), (p, q)) => (d + p * q, a + p * p, b + q * q)
+        }
+        BigDecimal(dot / math.sqrt(nx * ny))
+          .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+      }
+      val want = (for {
+        (Some(a), Some(la), va) <- rows
+        (Some(b), Some(lb), vb) <- rows
+        if a < b && la == lb && cos(va, vb) >= 0.3
+      } yield List[Any](a, b, cos(va, vb)))
+        .groupBy(identity).view.mapValues(_.length).toMap
+      val got = graft.ops.Dedup.d5EmbeddingNearDup(spark, dir.getPath)
+        .select("vec_a", "vec_b", "cos_sim").collect()
+        .map(_.toSeq.toList).groupBy(identity).view.mapValues(_.length).toMap
+      // Non-vacuous: within-group (1,2), cross-group (1,4) and the
+      // label-2 pairs are all in the reference.
+      assert(Seq(List(1L, 2L, 1.0), List(10L, 11L, 1.0)).forall(want.contains))
+      assert(want.keys.exists(r => r.take(2) == List(1L, 4L)))
+      assert(got == want)
+    } finally {
+      def rm(f: java.io.File): Unit = {
+        Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
+      }
+      rm(dir)
+    }
   }
 
   test("t15/t16 on a DUPLICATED corpus: twin collapse ≡ direct, " +
