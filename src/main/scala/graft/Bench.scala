@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Success}
 
 /** Benchmark main (driver contract): runs the headline queries on
-  * `SPARK_GRAFT_SF_DIR` at local[32] and prints ONE JSON line
+  * `SPARK_GRAFT_SF_DIR` (at [[Harness.cores]] cores) and prints ONE JSON line
   * `{"metric":…,"value":…,"unit":"sec","queries":{…},"sf":…}`.
   *
   * Headline set = the shuffle/join/agg-heavy queries that dominate at
@@ -128,19 +128,10 @@ object Bench {
       quietWaitS: Int, quietGaveUp: Boolean): Unit = {
     val sfDir = args.headOption
       .getOrElse(sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // Optional second arg: shuffle partition count (default = cores; the
     // sbt server swallows client env vars, so experiments pass it here).
-    val shufflePartitions = args.lift(1).getOrElse(cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-bench")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench",
+      conf = args.lift(1).map("spark.sql.shuffle.partitions" -> _).toMap)
 
     val all = SparkEntry.queries.keySet
     // v1 — FROZEN since round 2 for cross-round comparability; never
@@ -179,26 +170,19 @@ object Bench {
       catch { case _: Throwable => () }
     }
 
-    // Three measured runs, report the min — run-to-run noise at this
-    // scale is ±10-15% (measured, round 3), larger than most real
-    // per-query deltas, and the min is the reproducible figure. Spark's
-    // cache is cleared before every timed run so cached intermediates
-    // are measured cold. A failing query reports -1, never its
+    // Min of 3 ([[Harness.timed]]). A failing run reports -1, never its
     // elapsed-to-failure time (a regression must not read as a speedup).
     def measure(names: Seq[String]): Seq[(String, Seq[Double], Double)] =
       names.map { name =>
-        val times = (1 to 3).map { _ =>
-          spark.catalog.clearCache()
-          val t0 = System.nanoTime()
-          val ok =
-            try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              false
-            }
-          if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+        val times = Harness.timed(spark) {
+          SparkEntry.queries(name)(spark, sfDir).count(): Unit
+        }.map {
+          case Success(t) => t
+          case Failure(e) =>
+            System.err.println(s"[bench] $name failed: ${e.getMessage}")
+            -1.0
         }
-        (name, times.toSeq,
+        (name, times,
           if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0)
       }
     def minsJson(rs: Seq[(String, Seq[Double], Double)]): String =

@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
+import scala.util.matching.Regex
 
 /** Writes EXPLAINS.md: the executed formatted physical plan of EVERY
   * registered query — the artifact of the "explain, then iterate" loop,
@@ -15,38 +16,78 @@ import org.apache.spark.sql.execution.FormattedMode
   */
 object Plans {
 
-  private val ExprId = "#\\d+L?".r
-  private val PlanId = "plan_id=\\d+".r
+  // Each pattern is (kept prefix)(id). Expression ids drop their `L`
+  // suffix, as they always have.
+  private val Renumbered = Seq("(#)(\\d+)L?", "(plan_id=)(\\d+)").map(_.r)
+  private val Cut = Seq("(\\[codegen id : )\\d+",
+    "(?m)(QueryStage\\n(?:[^\\n]+\\n)*?Arguments: )\\d+$").map(_.r)
   private val LambdaRef = "\\$Lambda\\$?[0-9]+/0x[0-9a-f]+@[0-9a-f]+".r
 
-  /** Renumber expression ids (`#123`, `#45L`) and exchange `plan_id=N`
-    * in order of first appearance, as Spark's PlanStabilitySuite does:
-    * both are allocated from JVM-wide counters, so the same query
-    * explained twice prints different numbers, while the renumbered
-    * text keeps which references are the same attribute or exchange.
-    * JVM lambda identities (`$Lambda$6073/0x…@63585495`, printed by
-    * typed operators) differ per JVM and are cut to `$Lambda`.
+  /** Renumber expression ids (`#123`, `#45L`) and exchange `plan_id=N` in
+    * order of first appearance, as Spark's PlanStabilitySuite does: both
+    * are allocated from JVM-wide counters, so the same query explained
+    * twice prints different numbers, while the renumbered text keeps
+    * which references are the same attribute or exchange.
+    *
+    * Codegen stage ids (`[codegen id : 5]`) and query-stage ids (a
+    * `…QueryStage`'s `Arguments: 3`) are cut to `_`. AQE numbers them in
+    * the order its stages happen to finish, and a cached relation's plan
+    * counts its own from 1, so the same number names different stages in
+    * one section and no renumbering is canonical. JVM lambda identities
+    * (`$Lambda$6073/0x…@63585495`, printed by typed operators) differ per
+    * JVM and are cut to `$Lambda`.
     */
   private[graft] def normalize(plan: String): String = {
-    def renumber(s: String, re: scala.util.matching.Regex, fmt: Int => String) = {
-      val ids = re.findAllIn(s).distinct.zipWithIndex.toMap
-      re.replaceAllIn(s, m => fmt(ids(m.matched) + 1))
+    val renumbered = Renumbered.foldLeft(plan) { (s, re) =>
+      val ids = re.findAllMatchIn(s).map(_.group(2)).distinct.zipWithIndex.toMap
+      re.replaceAllIn(s, m => Regex.quoteReplacement(m.group(1) + (ids(m.group(2)) + 1)))
     }
-    LambdaRef.replaceAllIn(
-      renumber(renumber(plan, ExprId, i => s"#$i"), PlanId, i => s"plan_id=$i"),
-      scala.util.matching.Regex.quoteReplacement("$Lambda"))
+    val cut = Cut.foldLeft(renumbered)((s, re) => re.replaceAllIn(s, "$1_"))
+    LambdaRef.replaceAllIn(cut, Regex.quoteReplacement("$Lambda"))
   }
 
+  /** Executes query `n` on `dir` — the query's own dataframe, not a
+    * count() wrapper, which would plan a different query — so its
+    * adaptive plan finalizes, and returns the normalized formatted plan.
+    */
+  private def executed(spark: SparkSession, dir: String, n: String): String = {
+    val df = SparkEntry.queries(n)(spark, dir)
+    df.collect()
+    normalize(df.queryExecution.explainString(FormattedMode))
+  }
+
+  /** `Plans [out.md]` rewrites EXPLAINS.md (or `out.md`) from sf0.001;
+    * `Plans <outDir> <suffix> <dataDir> <query...>` writes
+    * `<outDir>/<query>_<suffix>.txt` per named query instead. The
+    * per-query form takes the data directory so a DUPLICATED corpus can
+    * be used: the twin-collapse legs (`ops.Collapse`) are stat-gated per
+    * corpus (`Dedup.twinGate`) and never execute on the twin-free
+    * fixtures, so only a duplicated input shows the collapsed plan.
+    * Four cores, whatever the host: plan text embeds partition counts.
+    */
   def main(args: Array[String]): Unit = {
-    val out = if (args.nonEmpty) args(0) else "EXPLAINS.md"
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-plans", cores = 4,
+      // A broadcast hash relation's size is counted in whole memory
+      // pages, and the default page size follows heap and cores: without
+      // a fixed page q48's broadcast printed 16 MiB at a 3 GB heap and
+      // 32 MiB at 6 GB.
+      conf = Map("spark.buffer.pageSize" -> "32m"))
+    try args match {
+      case Array(outDir, suffix, dir, names @ _*) if names.nonEmpty =>
+        val unknown = names.filterNot(SparkEntry.queries.contains)
+        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+        Files.createDirectories(Paths.get(outDir))
+        names.foreach { n =>
+          val hdr = s"# $n ($suffix) — executed formatted plan on $dir\n\n"
+          Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), hdr + executed(spark, dir, n))
+          println(s"wrote ${n}_$suffix.txt")
+        }
+      case Array() | Array(_) => explains(spark, args.headOption.getOrElse("EXPLAINS.md"))
+      case _ => sys.error("usage: Plans [out.md] | Plans <outDir> <suffix> <dataDir> <query>...")
+    } finally spark.stop()
+  }
+
+  private def explains(spark: SparkSession, out: String): Unit = {
     val dir = "/root/testdata/sf0.001"
     // Curated family ordering first (stable diffs across rounds), then
     // EVERY remaining registered query appended sorted — full coverage
@@ -98,15 +139,9 @@ object Plans {
     sb.append("load-bearing pre-checkpoint plans (one assignment pass\n")
     sb.append("reused across the self-join) are pinned in PlanChecksSpec.\n")
     names.foreach { n =>
-      val df = SparkEntry.queries(n)(spark, dir)
-      // Execute THIS dataframe (not a count() wrapper, which would plan
-      // a different query) so its adaptive plan finalizes.
-      df.collect()
-      val p = normalize(df.queryExecution.explainString(FormattedMode))
-      sb.append(s"\n## $n\n\n```\n$p```\n")
+      sb.append(s"\n## $n\n\n```\n${executed(spark, dir, n)}```\n")
     }
     Files.writeString(Paths.get(out), sb.toString)
     println(s"wrote $out")
-    spark.stop()
   }
 }

@@ -1,16 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.util.{Failure, Try}
 
 /** Ad-hoc per-query timer for queries OUTSIDE the Bench headline set
   * (Bench's set stays frozen for cross-round comparability):
-  * `sbt "runMain graft.Timed <sfDir> <query...>"` — warm-up + min-of-3
-  * per query, cache cleared between runs. Each run writes the full
-  * result to the `noop` sink, so the whole plan executes: unlike
-  * Bench's `count()`, nothing lets the optimizer prune unconsumed
-  * projections or eliminate a left join, and every query's wall is
-  * end to end. Its numbers are therefore NOT commensurable with Bench
-  * or BENCHCMP figures. Honors `SPARK_GRAFT_CPUS` like Bench/Verify.
+  * `sbt "runMain graft.Timed <sfDir> <query...>"` — a warm-up, then
+  * Bench's min-of-3 loop ([[Harness.timed]], a [[Harness.reset]] before
+  * every run, so a c-query's wall includes its curate() pass). Each run writes
+  * the full result to the `noop` sink, so the whole plan executes:
+  * unlike Bench's `count()`, nothing lets the optimizer prune unconsumed
+  * projections or eliminate a left join, and every query's wall is end
+  * to end. Its numbers are therefore NOT commensurable with Bench or
+  * BENCHCMP figures.
   */
 object Timed {
   def main(args: Array[String]): Unit = {
@@ -20,30 +21,21 @@ object Timed {
       else SparkEntry.queries.keys.toSeq.sorted
     val unknown = names.filterNot(SparkEntry.queries.contains)
     require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-timed")
     try {
       for (n <- names) {
         // A failing query reports FAILED and the loop continues — one
         // bad query must not lose the measurements before it.
-        try {
-          def run(): Unit = SparkEntry.queries(n)(spark, dir)
-            .write.format("noop").mode("overwrite").save()
-          run() // warm
-          val times = (1 to 3).map { _ =>
-            spark.catalog.clearCache()
-            val t0 = System.nanoTime()
-            run()
-            (System.nanoTime() - t0) / 1e9
-          }
-          println(f"TIMING $n min=${times.min}%.3f " +
-            s"runs=${times.map(t => f"$t%.3f").mkString(",")}")
-        } catch {
-          case e: Exception => println(s"TIMING $n FAILED: ${e.getMessage}")
+        def run(): Unit = SparkEntry.queries(n)(spark, dir)
+          .write.format("noop").mode("overwrite").save()
+        Try(run()) // warm-up; a broken query fails its timed runs too
+        val runs = Harness.timed(spark)(run())
+        runs.collectFirst { case Failure(e) => e } match {
+          case Some(e) => println(s"TIMING $n FAILED: ${e.getMessage}")
+          case None =>
+            val times = runs.map(_.get)
+            println(f"TIMING $n min=${times.min}%.3f " +
+              s"runs=${times.map(t => f"$t%.3f").mkString(",")}")
         }
       }
     } finally spark.stop()

@@ -15,14 +15,7 @@ object Verify {
     // nothing and let the downstream gate "pass" with zero queries.
     val unknown = only -- SparkEntry.queries.keySet
     require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()
     // Per-query dump wall seconds (VERDICT r15 item 5): the bench tracks
@@ -129,34 +122,7 @@ object Verify {
       require(leftovers.isEmpty,
         s"[verify] $name: scrub left debris: ${leftovers.take(5).mkString(", ")}")
       Some(msg)
-    } finally {
-      // Between-query reclamation, so the dump's memory high-water is
-      // the heaviest SINGLE query, not the accumulation:
-      // 1. Release the library's registries — OpCaches (d15/q62 hub
-      //    persists) and the curation memo, whose retained frames pin
-      //    the eager clustering pass's localCheckpoint blocks via
-      //    lineage references. At sf10 that retention starved d11's
-      //    hash aggregation (AGGREGATE_OUT_OF_MEMORY in the shared JVM;
-      //    standalone the same query passes) — dropping the references
-      //    lets the ContextCleaner reclaim the blocks. The next
-      //    c-query recomputes its curate() run: bounded, recompute-safe
-      //    (the memo rebuilds from source, not from dead blocks).
-      // 2. clearCache for cached plans (Bench's clearCache rule) —
-      //    clearCache ONLY; unpersisting `getPersistentRDDs` wholesale
-      //    destroys localCheckpoint blocks still referenced by LIVE
-      //    frames, whose lineage is TRUNCATED: they then die with
-      //    CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of recomputing
-      //    (measured, round 9). Dropping the REFERENCES first (step 1)
-      //    is the safe ordering.
-      // 3. System.gc(): ContextCleaner reclamation is weak-ref-driven —
-      //    it runs AFTER a GC notices the dropped references. Without
-      //    the prompt, a heavy next query can OOM before any GC happens
-      //    to run; one explicit collection per dumped query is noise.
-      graft.ops.OpCaches.release(spark)
-      graft.ops.Curation.releaseAll(spark)
-      spark.catalog.clearCache()
-      System.gc()
-    }
+    } finally Harness.reset(spark) // high-water = heaviest single query
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

@@ -15,16 +15,14 @@ import org.scalatest.funsuite.AnyFunSuite
   * in the CacheManager, which substitutes its InMemoryRelation into any
   * plan-equal subtree here — erasing the very exchange/scan signatures
   * these tests assert (d11's ReusedExchange pin, round-11 regression).
-  * The release ordering mirrors Verify's between-query reclamation.
+  * The release is the mains' between-query [[Harness.reset]].
   */
 class PlanChecksSpec extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = SparkTest.session
   val dir = "/root/testdata/sf0.001"
 
   override def beforeEach(): Unit = {
-    graft.ops.OpCaches.release(spark)
-    graft.ops.Curation.releaseAll(spark)
-    spark.catalog.clearCache()
+    Harness.reset(spark)
     super.beforeEach()
   }
 

@@ -31,4 +31,26 @@ class PlansSpec extends AnyFunSuite {
     assert("#\\d+".r.findAllIn(Plans.normalize(a)).toSet.size ==
       "#\\d+L?".r.findAllIn(a).toSet.size)
   }
+
+  test("codegen and query-stage ids are cut; other bare arguments stay") {
+    // One plan as two runs print it when AQE finished its stages in
+    // another order: the same stages and codegen grouping, other ids.
+    def text(stage: Int, agg: Int, limit: Int) =
+      s"""(1) ShuffleQueryStage
+         |Output [1]: [k#7]
+         |Arguments: $stage
+         |
+         |(2) HashAggregate [codegen id : $agg]
+         |Input [1]: [k#7]
+         |
+         |(3) GlobalLimit [codegen id : $limit]
+         |Input [1]: [k#7]
+         |Arguments: 10
+         |""".stripMargin
+    val (a, b) = (Plans.normalize(text(3, 5, 7)), Plans.normalize(text(0, 4, 2)))
+    assert(a == b)
+    assert(a.contains("Arguments: _\n") && a.contains("Arguments: 10\n"), a)
+    assert("\\[codegen id : (\\S+)\\]".r.findAllMatchIn(a).map(_.group(1)).toSeq ==
+      Seq("_", "_"), a)
+  }
 }

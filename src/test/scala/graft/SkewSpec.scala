@@ -145,7 +145,7 @@ class SkewSpec extends AnyFunSuite {
     // The two skew mitigations must be RESULT-interchangeable: AQE's
     // runtime split (variant the engine ships by default) and explicit
     // salting (the tool for keys AQE can't fix) may only reshape the
-    // shuffle. Mirrors graft.SkewProbe's sf1 evidence at test scale.
+    // shuffle. The sf1 form of this check is in SCALE.md (skew section).
     val confs = Seq(
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "8KB",

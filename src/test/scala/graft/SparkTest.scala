@@ -3,22 +3,12 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (spinning a session per suite
-  * costs ~5s each).
+  * costs ~5s each), built by [[Harness.session]] so tests run under the
+  * mains' defaults.
   */
 object SparkTest {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      // Keep saveAsTable output (BucketedSpec) under target/ so test
-      // runs never litter the repo root with spark-warehouse/.
-      .config("spark.sql.warehouse.dir", "target/test-warehouse")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Harness.session("graft-test", cores = 8,
+    // Keep saveAsTable output (BucketedSpec) under target/ so test
+    // runs never litter the repo root with spark-warehouse/.
+    conf = Map("spark.sql.warehouse.dir" -> "target/test-warehouse"))
 }

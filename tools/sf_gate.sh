@@ -7,7 +7,8 @@
 #   tools/sf_gate.sh                # sf1 (10x) gate, the round norm
 #   tools/sf_gate.sh .scale/sf3 30  # sf3 probe
 #
-# Env knobs: SPARK_GRAFT_CPUS (default 32), SPARK_DRIVER_MEM (default
+# Env knobs: SPARK_GRAFT_CPUS (default: the host's cores, graft.Harness's
+# rule), SPARK_DRIVER_MEM (default
 # 8g — the point of the gate is that the DEFAULT survives),
 # GRAFT_DUCKDB_MEM (oracle-side cap, default 8GB in check.py).
 set -euo pipefail
@@ -97,8 +98,10 @@ if [ ! -f "$SF_DIR/documents.parquet" ]; then
   python3 tools/scale_gen.py /root/testdata/sf0.1 "$SF_DIR" "$COPIES"
 fi
 
-export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
-echo "== dumping the full registry via graft.Verify ($SF_DIR -> $OUT, cpus=$SPARK_GRAFT_CPUS, heap=${SPARK_DRIVER_MEM:-8g default})"
+# No default here: graft.Harness decides (SPARK_GRAFT_CPUS if set, else
+# the JVM's availableProcessors, which equals nproc unless a cgroup CPU
+# quota caps it lower).
+echo "== dumping the full registry via graft.Verify ($SF_DIR -> $OUT, cpus=${SPARK_GRAFT_CPUS:-$(nproc)}, heap=${SPARK_DRIVER_MEM:-8g default})"
 sbt -batch "runMain graft.Verify $SF_DIR $OUT"
 
 # Staged-oracle drift guard (VERDICT r13 item 4): before leaning on a
