@@ -18,16 +18,18 @@ object Plans {
 
   // Each pattern is (kept prefix)(id). Expression ids drop their `L`
   // suffix, as they always have.
-  private val Renumbered = Seq("(#)(\\d+)L?", "(plan_id=)(\\d+)").map(_.r)
+  private val Renumbered = Seq("(#)(\\d+)L?", "(plan_id=)(\\d+)", "(RDD\\[)(\\d+)").map(_.r)
   private val Cut = Seq("(\\[codegen id : )\\d+",
     "(?m)(QueryStage\\n(?:[^\\n]+\\n)*?Arguments: )\\d+$").map(_.r)
   private val LambdaRef = "\\$Lambda\\$?[0-9]+/0x[0-9a-f]+@[0-9a-f]+".r
 
-  /** Renumber expression ids (`#123`, `#45L`) and exchange `plan_id=N` in
-    * order of first appearance, as Spark's PlanStabilitySuite does: both
-    * are allocated from JVM-wide counters, so the same query explained
-    * twice prints different numbers, while the renumbered text keeps
-    * which references are the same attribute or exchange.
+  /** Renumber expression ids (`#123`, `#45L`), exchange `plan_id=N` and
+    * RDD ids (a checkpointed scan's `MapPartitionsRDD[890]`) in order of
+    * first appearance, as Spark's PlanStabilitySuite does: all are
+    * allocated from JVM-wide counters, so the same query explained twice,
+    * or after a change to the jobs run before it, prints different
+    * numbers, while the renumbered text keeps which references are the
+    * same attribute, exchange or RDD.
     *
     * Codegen stage ids (`[codegen id : 5]`) and query-stage ids (a
     * `…QueryStage`'s `Arguments: 3`) are cut to `_`. AQE numbers them in

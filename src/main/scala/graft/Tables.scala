@@ -19,7 +19,7 @@ object Tables {
       // into reading it as epoch-nanos long (exact). Harmless when the
       // file is micros.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
+      val df = read(spark, dir, name)
       // Downstream queries do integer arithmetic on ts (bucketing, range
       // joins, session gaps) and assume epoch NANOS as LongType. Testdata
       // generations vary the physical type (TIMESTAMP(NANOS) vs
@@ -46,21 +46,41 @@ object Tables {
           throw new IllegalStateException(
             s"events.ts: unsupported parquet logical type $other")
       }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+    } else read(spark, dir, name)
+  }
+
+  /** `<dir>/<name>.parquet` read with a supplied schema. Inferring one
+    * runs a Spark job that reads parquet footers (~100 ms a load, against
+    * ~15 ms with the schema given), so the inferred schema is memoized on
+    * the file listing ([[memoOnListing]]) and on the session's
+    * parquet-reading confs (`nanosAsLong`, `binaryAsString`,
+    * `int96AsTimestamp`, `mergeSchema`, …), which change what inference
+    * returns: a rewritten table or a changed conf infers again.
+    */
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val confs = spark.conf.getAll.toSeq
+      .filter { case (k, _) =>
+        k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+      }.sorted.mkString(",")
+    val schema = memoOnListing(spark, dir, name, s"schema|$confs")(
+      spark.read.parquet(path).schema)
+    spark.read.schema(schema).parquet(path)
   }
 
   private val listingMemo = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[(String, Long, Long)], Boolean)]
+    String, (Seq[(String, Long, Long)], Any)]
 
-  /** A corpus fact (a twin gate's verdict) memoized per (table, `tag`)
-    * and keyed on the table's file listing — every file's path, size and
-    * mtime under `<dir>/<name>.parquet`. Repeated calls over an unchanged
-    * table (the bench's passes, an embedder's loop) pay one listing
-    * instead of the probe's scan; a table rewritten in place lists
-    * differently, so its fact is probed again instead of going stale.
+  /** A corpus fact (a twin gate's verdict, a table's schema) memoized per
+    * (table, `tag`) and keyed on the table's file listing — every file's
+    * path, size and mtime under `<dir>/<name>.parquet`. Repeated calls
+    * over an unchanged table (the bench's passes, an embedder's loop)
+    * pay one listing instead of the probe's scan; a table rewritten in
+    * place lists differently, so its fact is probed again instead of
+    * going stale. A tag names one fact, so always of one type `T`.
     */
-  private[graft] def memoOnListing(spark: SparkSession, dir: String, name: String,
-      tag: String)(probe: => Boolean): Boolean = {
+  private[graft] def memoOnListing[T](spark: SparkSession, dir: String, name: String,
+      tag: String)(probe: => T): T = {
     val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
     val listing = if (!fs.exists(path)) Nil else {
@@ -72,8 +92,17 @@ object Tables {
       }
       b.result().sorted
     }
-    listingMemo.compute(s"$dir/$name#$tag", (_, old) =>
-      if (old != null && old._1 == listing) old else (listing, probe))._2
+    // The probe runs outside the map's lock: a gate's probe loads its
+    // table, which memoizes the schema in this same map. Racing callers
+    // may both probe; the fact is a pure function of the listing.
+    val key = s"$dir/$name#$tag"
+    val old = listingMemo.get(key)
+    if (old != null && old._1 == listing) old._2.asInstanceOf[T]
+    else {
+      val fact = probe
+      listingMemo.put(key, (listing, fact))
+      fact
+    }
   }
 
   /** Spread a scan across the cluster when the file layout

@@ -2,6 +2,8 @@ package graft
 
 import scala.util.{Failure, Try}
 
+import org.apache.spark.sql.graftbridge.Bridge
+
 /** Ad-hoc per-query timer for queries OUTSIDE the Bench headline set
   * (Bench's set stays frozen for cross-round comparability):
   * `sbt "runMain graft.Timed <sfDir> <query...>"` — a warm-up, then
@@ -12,8 +14,36 @@ import scala.util.{Failure, Try}
   * projections or eliminate a left join, and every query's wall is end
   * to end. Its numbers are therefore NOT commensurable with Bench or
   * BENCHCMP figures.
+  *
+  * Each TIMING line ends with `compiles=N compile_ms=M`: the Janino
+  * compiles across the three timed runs (warm-up excluded) and their
+  * summed time, read from Spark's codegen compile-time histogram — no
+  * job, no effect on any output. A steady query compiles nothing; a
+  * non-zero N in the timed runs means generated classes were evicted
+  * from Spark's codegen cache between runs. Spark records each compile in
+  * whole ms. The histogram's reservoir keeps every sample only up to
+  * [[Reservoir]] compiles per JVM; past that M is N × the reservoir's
+  * mean and prints as `compile_ms~M`.
   */
 object Timed {
+  /** Codahale's default (exponentially decaying) reservoir size. */
+  private val Reservoir = 1028
+
+  /** (compiles, Σ compile ms) so far in this JVM; the sum is exact while
+    * the reservoir still holds every sample.
+    */
+  private def compiles(): (Long, Long) = {
+    val h = Bridge.codegenCompileTimes
+    (h.getCount, h.getSnapshot.getValues.sum)
+  }
+
+  private def compileDelta(before: (Long, Long)): String = {
+    val (n, ms) = compiles()
+    val dn = n - before._1
+    if (n <= Reservoir) s"compiles=$dn compile_ms=${ms - before._2}"
+    else f"compiles=$dn compile_ms~${dn * Bridge.codegenCompileTimes.getSnapshot.getMean}%.0f"
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: Timed <sfDir> [queryName...]")
     val dir = args.head
@@ -29,13 +59,14 @@ object Timed {
         def run(): Unit = SparkEntry.queries(n)(spark, dir)
           .write.format("noop").mode("overwrite").save()
         Try(run()) // warm-up; a broken query fails its timed runs too
+        val before = compiles()
         val runs = Harness.timed(spark)(run())
         runs.collectFirst { case Failure(e) => e } match {
           case Some(e) => println(s"TIMING $n FAILED: ${e.getMessage}")
           case None =>
             val times = runs.map(_.get)
             println(f"TIMING $n min=${times.min}%.3f " +
-              s"runs=${times.map(t => f"$t%.3f").mkString(",")}")
+              s"runs=${times.map(t => f"$t%.3f").mkString(",")} ${compileDelta(before)}")
         }
       }
     } finally spark.stop()

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables.load
+import graft.functions.VecSum
 
 /** Distributed k-means (Lloyd's iterations) over the `embeddings` table —
   * the trainer that makes the IVF/PQ ANN family self-contained (s3/s4
@@ -16,11 +17,14 @@ import graft.Tables.load
   *     the whole corpus — vector payload included — through an exchange
   *     per iteration; at 100 TB that is 4 corpus shuffles Lloyd's never
   *     needed).
-  *   - UPDATE is one aggregation to k×(dim+1) numbers (per-cell component
-  *     sums + count) with map-side partials; the k resulting rows round-trip
-  *     through the driver as the next iteration's broadcast literals. That
-  *     driver hop is k rows (bounded, like the dimension-option collects the
-  *     plan audit already allows) and it buys plan hygiene: every iteration
+  *   - UPDATE is one aggregation to k×(dim+1) numbers (per-cell count
+  *     and one `vec_sum` of the components, [[graft.functions.VecSum]],
+  *     whose `long[dim]` buffer replaced `dim` separate `sum` columns
+  *     and their hundreds of KB of generated Java per round) with
+  *     map-side partials; the k resulting rows round-trip through the
+  *     driver as the next iteration's broadcast literals. That driver hop
+  *     is k rows (bounded, like the dimension-option collects the plan
+  *     audit already allows) and it buys plan hygiene: every iteration
   *     re-plans from literal centroids, so there is NO nested lineage to
   *     checkpoint (the d9 problem never arises).
   *
@@ -145,39 +149,51 @@ object Kmeans {
     * final assignment `(id, q, sub, cell, dist)` and the trained
     * centroids.
     *
-    * Each round aggregates `sum(w)` and `sum(q_i · w)` by (sub, cell)
-    * over ONE weight-carrying frame: the persisted `(q, w)` twin hub
-    * when `collapse` (see [[embTwinGate]]), else `e` itself with w = 1.
-    * The (sub × k) result rows × (dim + 3) values round-trip through the
-    * driver as the next round's literal centroids.
+    * Each round is [[roundStats]] over ONE weight-carrying frame: the
+    * persisted `(q, w)` twin hub when `collapse` (see [[embTwinGate]]),
+    * else `e` itself with w = 1. The (sub × k) result rows round-trip
+    * through the driver as the next round's literal centroids. A
+    * component whose sum is null (no non-null element reached it) keeps
+    * the previous centroid's value, as an empty cell keeps its whole
+    * centroid. `vecSum` is the component-sum aggregate: the native
+    * [[graft.functions.VecSum]], or a form with the same contract.
     */
   private[graft] def lloyd(e: DataFrame, init: Seq[(Int, Long, Seq[Long])],
-      iters: Int = Iters, dim: Int = Dim,
-      collapse: Boolean = false): (DataFrame, Seq[(Int, Long, Seq[Long])]) = {
+      iters: Int = Iters, dim: Int = Dim, collapse: Boolean = false,
+      vecSum: (Column, Column, Column, Int) => Column = VecSum.vecSum)
+      : (DataFrame, Seq[(Int, Long, Seq[Long])]) = {
     val weighted =
       if (collapse) OpCaches.persisted(e.groupBy(col("q")).agg(count(lit(1)).as("w")))
       else e.select(col("q"), lit(1L).as("w"))
-    val sums = (1 to dim).map(i =>
-      sum(element_at(col("q"), col("sub") * dim + i) * col("w")).as(s"s_$i"))
     var cents = init
     for (_ <- 1 to iters) {
-      val stats = nearest(weighted, "q", cents, dim, sqDist)
-        .groupBy("sub", "cell").agg(sum(col("w")).as("n"), sums: _*)
-        .collect()
+      val stats = roundStats(weighted, cents, dim, vecSum).collect()
         .map(r => (r.getInt(0), r.getLong(1)) -> r).toMap
       cents = cents.map { case (b, cell, prev) =>
         stats.get((b, cell)) match {
           case Some(r) =>
             val n = r.getLong(2)
+            val s = r.getSeq[java.lang.Long](3)
             // floorDiv, not /: sums go negative and the oracle's pmod
             // identity floors — truncation would diverge on negatives.
-            (b, cell, Seq.tabulate(dim)(i => Math.floorDiv(r.getLong(3 + i), n)))
+            (b, cell, Seq.tabulate(dim)(i =>
+              if (s(i) == null) prev(i) else Math.floorDiv(s(i).longValue, n)))
           case None => (b, cell, prev) // empty cell keeps its centroid
         }
       }
     }
     (nearest(e, "q", cents, dim, sqDist), cents)
   }
+
+  /** One Lloyd's round's update statistics over the `(q, w)` frame:
+    * `(sub, cell, n = Σ w, s = Σ w·q over the subspace's dim components)`,
+    * one aggregation with one vector-sum column.
+    */
+  private[graft] def roundStats(weighted: DataFrame, cents: Seq[(Int, Long, Seq[Long])],
+      dim: Int, vecSum: (Column, Column, Column, Int) => Column = VecSum.vecSum): DataFrame =
+    nearest(weighted, "q", cents, dim, sqDist)
+      .groupBy("sub", "cell")
+      .agg(sum(col("w")).as("n"), vecSum(col("q"), col("w"), col("sub") * dim, dim).as("s"))
 
   /** Lloyd's over the quantized corpus, seeded with the first-k vectors
     * split into `dim`-wide subspaces, collapsed behind [[embTwinGate]].

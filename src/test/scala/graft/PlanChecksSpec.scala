@@ -276,6 +276,27 @@ class PlanChecksSpec extends AnyFunSuite with BeforeAndAfterEach {
     assert(!p.contains("Join"), s"centroids must be literals, not a join:\n${p.take(800)}")
   }
 
+  test("Lloyd's round: ONE aggregate holding one vec_sum — no per-component " +
+    "element_at sums") {
+    import org.apache.spark.sql.catalyst.expressions.ElementAt
+    import org.apache.spark.sql.catalyst.plans.logical.Aggregate
+    import graft.functions.VecSum
+    val s = spark
+    import s.implicits._
+    // Two 2-wide subspaces: the PQ shape, where each row's sum starts at
+    // sub·dim. The frame is planned, never run.
+    val weighted = Seq((Seq(1L, 2L, 3L, 4L), 2L), (Seq(5L, 6L, 7L, 8L), 1L)).toDF("q", "w")
+    val cents = Seq((0, 0L, Seq(1L, 2L)), (0, 1L, Seq(5L, 6L)),
+      (1, 0L, Seq(3L, 4L)), (1, 1L, Seq(7L, 8L)))
+    val aggs = graft.ops.Kmeans.roundStats(weighted, cents, dim = 2)
+      .queryExecution.optimizedPlan.collect { case a: Aggregate => a }
+    assert(aggs.length == 1, aggs.mkString("\n"))
+    val exprs = aggs.head.aggregateExpressions
+    assert(exprs.flatMap(_.collect { case v: VecSum => v }).length == 1, exprs)
+    assert(exprs.forall(_.find(_.isInstanceOf[ElementAt]).isEmpty),
+      s"per-component sums crept back: $exprs")
+  }
+
   test("s4/s5: PQ assignment is one projection over the unexploded vector — " +
     "one embeddings scan, no per-subspace Union") {
     val s4 = SparkEntry.queries("s4_pq_codes")(spark, dir)

@@ -34,9 +34,13 @@ class PlansSpec extends AnyFunSuite {
 
   test("codegen and query-stage ids are cut; other bare arguments stay") {
     // One plan as two runs print it when AQE finished its stages in
-    // another order: the same stages and codegen grouping, other ids.
-    def text(stage: Int, agg: Int, limit: Int) =
-      s"""(1) ShuffleQueryStage
+    // another order, after a different number of earlier jobs: the same
+    // stages, codegen grouping and checkpoint, other ids.
+    def text(stage: Int, agg: Int, limit: Int, rdd: Int) =
+      s"""(0) Scan ExistingRDD
+         |Arguments: [k#7], MapPartitionsRDD[$rdd] at localCheckpoint at X.scala:1
+         |
+         |(1) ShuffleQueryStage
          |Output [1]: [k#7]
          |Arguments: $stage
          |
@@ -47,9 +51,10 @@ class PlansSpec extends AnyFunSuite {
          |Input [1]: [k#7]
          |Arguments: 10
          |""".stripMargin
-    val (a, b) = (Plans.normalize(text(3, 5, 7)), Plans.normalize(text(0, 4, 2)))
+    val (a, b) = (Plans.normalize(text(3, 5, 7, 890)), Plans.normalize(text(0, 4, 2, 826)))
     assert(a == b)
     assert(a.contains("Arguments: _\n") && a.contains("Arguments: 10\n"), a)
+    assert(a.contains("MapPartitionsRDD[1] at"), a)
     assert("\\[codegen id : (\\S+)\\]".r.findAllMatchIn(a).map(_.group(1)).toSeq ==
       Seq("_", "_"), a)
   }

@@ -7,7 +7,9 @@ import org.apache.spark.sql.functions._
   * ([[graft.functions.VectorKernel]]), kept as the semantic spec each
   * kernel is tested bit-identical against (FunctionsSpec): the same
   * sequential left-to-right folds, where a null element or zip_with's
-  * null pad (length mismatch) poisons the result to null.
+  * null pad (length mismatch) poisons the result to null. Likewise the
+  * native aggregate [[graft.functions.VecSum]] against Lloyd's update
+  * as it was written before it, one `sum` per component (VecSumSpec).
   */
 object ComposedKernels {
 
@@ -30,4 +32,10 @@ object ComposedKernels {
     val nb = aggregate(transform(b, x => x * x), lit(0.0), (acc, x) => acc + x)
     dot(a, b) / sqrt(na * nb)
   }
+
+  /** Weighted component sums (`vec_sum`): `dim` columns of
+    * `sum(element_at(v, from + i) * w)`, gathered into one array.
+    */
+  def vecSum(v: Column, w: Column, from: Column, dim: Int): Column =
+    array((1 to dim).map(i => sum(element_at(v, from + i) * w)): _*)
 }
