@@ -63,7 +63,7 @@ object Plans {
     * `<outDir>/<query>_<suffix>.txt` per named query instead. The
     * per-query form takes the data directory so a DUPLICATED corpus can
     * be used: the twin-collapse legs (`ops.Collapse`) are stat-gated per
-    * corpus (`Dedup.twinGate`) and never execute on the twin-free
+    * corpus (`Collapse.gate`) and never execute on the twin-free
     * fixtures, so only a duplicated input shows the collapsed plan.
     * Four cores, whatever the host: plan text embeds partition counts.
     */

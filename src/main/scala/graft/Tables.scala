@@ -81,9 +81,29 @@ object Tables {
     */
   private[graft] def memoOnListing[T](spark: SparkSession, dir: String, name: String,
       tag: String)(probe: => T): T = {
+    val now = listing(spark, dir, name)
+    // The probe runs outside the map's lock: a gate's probe loads its
+    // table, which memoizes the schema in this same map. Racing callers
+    // may both probe; the fact is a pure function of the listing.
+    val key = s"$dir/$name#$tag"
+    val old = listingMemo.get(key)
+    if (old != null && old._1 == now) old._2.asInstanceOf[T]
+    else {
+      val fact = probe
+      listingMemo.put(key, (now, fact))
+      fact
+    }
+  }
+
+  /** The file listing of `<dir>/<name>.parquet`: every file's path, size
+    * and mtime, sorted; empty when the table does not exist. Two equal
+    * listings are the same table contents for every memo keyed on it.
+    */
+  private[graft] def listing(spark: SparkSession, dir: String,
+      name: String): Seq[(String, Long, Long)] = {
     val path = new org.apache.hadoop.fs.Path(s"$dir/$name.parquet")
     val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val listing = if (!fs.exists(path)) Nil else {
+    if (!fs.exists(path)) Nil else {
       val it = fs.listFiles(path, true)
       val b = Seq.newBuilder[(String, Long, Long)]
       while (it.hasNext) {
@@ -91,17 +111,6 @@ object Tables {
         b += ((f.getPath.toString, f.getLen, f.getModificationTime))
       }
       b.result().sorted
-    }
-    // The probe runs outside the map's lock: a gate's probe loads its
-    // table, which memoizes the schema in this same map. Racing callers
-    // may both probe; the fact is a pure function of the listing.
-    val key = s"$dir/$name#$tag"
-    val old = listingMemo.get(key)
-    if (old != null && old._1 == listing) old._2.asInstanceOf[T]
-    else {
-      val fact = probe
-      listingMemo.put(key, (listing, fact))
-      fact
     }
   }
 

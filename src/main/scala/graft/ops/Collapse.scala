@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The exact-twin collapse: run an expensive pipeline once per DISTINCT
@@ -21,6 +21,8 @@ import org.apache.spark.sql.functions._
   *    `sum(mult)` a cap or statistic takes, as on the per-row form.
   *  - [[byKey]] carries the doc-keyed operators (one output row set per
   *    document) and [[pairs]] the pair-shaped ones (`(a, b, score)`).
+  *  - [[gate]] is the per-corpus verdict that turns a collapse on; the
+  *    operators take it as `on` and hold no path of their own.
   */
 object Collapse {
 
@@ -37,6 +39,39 @@ object Collapse {
       .agg(min(col(id)).as("rep"), sort_array(collect_list(col(id))).as("members"),
         count(lit(1)).as("mult"))
       .drop("null_id"))
+
+  /** Memoized exact-copy depth probe behind every stat-gated collapse:
+    * one bounded Spark action, approx_count_distinct over
+    * xxhash64(`keys`) of `table`, on iff the corpus is non-empty and
+    * averages ≥ 1.2 copies per distinct key tuple (`10n ≥ 12·nd`). An
+    * empty corpus reads off: 0 ≥ 0 would route degenerate inputs onto
+    * the collapse plans, whose expanded-id nullability differs
+    * (DegenerateCorpusSpec's schema-parity gate). Engine-side only, so
+    * the hash never touches an oracle; both paths are row-identical, so
+    * a misread costs time, never rows. The verdict is memoized on the
+    * table's file listing per key tuple ([[graft.Tables.memoOnListing]]):
+    * repeated calls pay one listing, an in-place rewrite probes again.
+    */
+  private[graft] def gate(s: SparkSession, dir: String, table: String,
+      keys: Seq[String]): Boolean =
+    graft.Tables.memoOnListing(s, dir, table, keys.mkString(",")) {
+      val st = graft.Tables.spread(graft.Tables.load(s, dir, table))
+        .agg(count(lit(1)).as("n"), approx_count_distinct(xxhash64(keys.map(col): _*)).as("nd"))
+        .head
+      st.getLong(0) > 0L && st.getLong(0) * 10L >= st.getLong(1) * 12L
+    }
+
+  /** The input rows of a pair-shaped collapse, `(keys…, rep, members,
+    * mult)` on both forms: the [[hub]] when `on`; otherwise every row as
+    * its own group (`rep` = its id, `members` = `[id]`, `mult = 1`),
+    * unpersisted. An operator written over these rows, with every
+    * corpus-wide count a `sum(mult)`, is the per-row form when off.
+    */
+  private[ops] def groups(df: DataFrame, keys: Seq[String], id: String,
+      on: Boolean): DataFrame =
+    if (on) hub(df, keys, id)
+    else df.select(keys.map(col) ++ Seq(col(id).as("rep"), array(col(id)).as("members"),
+      lit(1L).as("mult")): _*)
 
   /** `f` over `docs` (`doc_id` plus `keys`), twin-collapsed when `on`.
     *
@@ -78,6 +113,10 @@ object Collapse {
 
   /** Fan-out for the pair-shaped collapses (d2, d4, d5, d8b, d15, q62):
     * representative pairs and within-group pairs back to member pairs.
+    * Off (`on = false`, rows from [[groups]]), every representative is
+    * its own one member, so `repPairs` is the answer and returns as is;
+    * `within` is then never built (Spark analyses a frame as it is
+    * built, tens of milliseconds of driver time for a join).
     *
     *  - `repPairs` has exactly three columns `(a, b, score)`: two
     *    representative ids and the pair's score. The output keeps these
@@ -99,8 +138,9 @@ object Collapse {
     * is needed. Within pairs keep a < b through the sorted members and
     * posexplode/slice.
     */
-  private[ops] def pairs(repPairs: DataFrame, hub: DataFrame, within: DataFrame,
-      parts: Option[Int] = None): DataFrame = {
+  private[ops] def pairs(repPairs: DataFrame, hub: DataFrame, within: => DataFrame,
+      parts: Option[Int] = None, on: Boolean = true): DataFrame = {
+    if (!on) return repPairs
     val Array(a, b, score) = repPairs.columns
     def members(rep: String, as: String) =
       hub.select(col("rep").as(rep), col("members").as(as))

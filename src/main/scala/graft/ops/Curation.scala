@@ -251,24 +251,48 @@ object Curation {
   private val MinJaccard = 0.5
   private val MaxPostings = 1000
 
-  /** c1 and c2 are two views of ONE curate() run: memoized per
-    * (session, dir) so Verify's separate query invocations share the
-    * eager clustering pass and the internal caches instead of executing
-    * the pipeline twice. The session is part of the key: a dir-only
-    * memo would hand frames bound to a STOPPED session to a later
-    * caller that built a fresh one (review-caught).
+  private val MinLmScore = 0.032
+
+  /** The two registered flavours: c1–c3 read curate(), c5/c6 curate2(). */
+  private val flavours: Map[String, DataFrame => Curated] = Map(
+    "curate" -> (curate(_, EvalSource, Langs, MinTokens, MinJaccard, MaxPostings)),
+    "curate2" -> (curate2(_, EvalSource, Langs, MinTokens, MinJaccard, MinLmScore)))
+
+  /** c1 and c2 (c5 and c6) are two views of ONE curate() (curate2())
+    * run: memoized per (session, dir, flavour) so Verify's separate
+    * query invocations share the eager clustering pass and the internal
+    * caches instead of executing the pipeline twice. The session is part
+    * of the key: a dir-only memo would hand frames bound to a STOPPED
+    * session to a later caller that built a fresh one (review-caught).
+    * Each entry holds the `documents` file listing it was built from
+    * ([[graft.Tables.listing]]): a corpus rewritten in place lists
+    * differently, so its stale run is released and curated again.
     */
+  private val memo = new ConcurrentHashMap[(SparkSession, String, String),
+    (Seq[(String, Long, Long)], Curated)]()
+
+  private def curatedFor(s: SparkSession, dir: String, flavour: String): Curated = {
+    purgeStopped()
+    val now = graft.Tables.listing(s, dir, "documents")
+    memo.compute((s, dir, flavour), (_, old) =>
+      if (old != null && old._1 == now) old
+      else {
+        if (old != null) old._2.release()
+        (now, flavours(flavour)(graft.Tables.load(s, dir, "documents")))
+      })._2
+  }
+
   // Dead entries (stopped sessions) are purged on every access: without
   // this, a long-lived process cycling SparkSessions over the same dirs
   // pins every past session's Curated (and its persisted frames'
   // metadata) in the map forever (review-caught). Entries of LIVE
   // sessions are exactly the sharing the memo exists for and stay.
-  private def purgeStopped(m: ConcurrentHashMap[(SparkSession, String), Curated]): Unit =
-    m.keySet.forEach { k =>
+  private def purgeStopped(): Unit =
+    memo.keySet.forEach { k =>
       // No release(): a stopped context already dropped its block
       // manager (and unpersist on a dead session throws) — removing
       // the reference is all the reclamation there is to do.
-      if (k._1.sparkContext.isStopped) m.remove(k)
+      if (k._1.sparkContext.isStopped) memo.remove(k)
     }
 
   /** Drop THIS session's memo entries and release their caches — the
@@ -283,47 +307,27 @@ object Curation {
     * memo until the caller releases.
     */
   def releaseAll(s: SparkSession): Unit =
-    Seq(memo, memo2).foreach { m =>
-      m.keySet.forEach { k =>
-        if (k._1 eq s) Option(m.remove(k)).foreach { c =>
-          if (!s.sparkContext.isStopped) c.release()
-        }
+    memo.keySet.forEach { k =>
+      if (k._1 eq s) Option(memo.remove(k)).foreach { c =>
+        if (!s.sparkContext.isStopped) c._2.release()
       }
     }
 
-  private val memo = new ConcurrentHashMap[(SparkSession, String), Curated]()
-  private def curatedFor(s: SparkSession, dir: String): Curated = {
-    purgeStopped(memo)
-    memo.computeIfAbsent((s, dir), _ =>
-      curate(graft.Tables.load(s, dir, "documents"),
-        EvalSource, Langs, MinTokens, MinJaccard, MaxPostings))
-  }
-
-  private val MinLmScore = 0.032
-
-  private val memo2 = new ConcurrentHashMap[(SparkSession, String), Curated]()
-  private def curated2For(s: SparkSession, dir: String): Curated = {
-    purgeStopped(memo2)
-    memo2.computeIfAbsent((s, dir), _ =>
-      curate2(graft.Tables.load(s, dir, "documents"),
-        EvalSource, Langs, MinTokens, MinJaccard, MinLmScore))
-  }
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c1_curation" -> ((s, dir) => curatedFor(s, dir).chunks),
-    "c2_curation_audit" -> ((s, dir) => curatedFor(s, dir).audit),
+    "c1_curation" -> ((s, dir) => curatedFor(s, dir, "curate").chunks),
+    "c2_curation_audit" -> ((s, dir) => curatedFor(s, dir, "curate").audit),
     // c3: curate → pack the TRAIN split into fixed-capacity training
     // sequences (t11 over c1's chunks) — the full "corpus in, packed
     // pretraining sequences out" flow. Packing is per-split by
     // construction: sequences never straddle the train/val/test
     // boundary (a sequence mixing train and held-out text would leak).
     "c3_curation_pack" -> ((s, dir) => TextAnalysis.pack(
-      curatedFor(s, dir).chunks.filter(col("split") === "train"))),
+      curatedFor(s, dir, "curate").chunks.filter(col("split") === "train"))),
     "c4_cluster_split" -> c4ClusterSplit,
     // c5/c6: the surgical (scrub + LM gate) flavor, two views of ONE
     // curate2() run — same memo discipline as c1/c2.
-    "c5_curation2" -> ((s, dir) => curated2For(s, dir).chunks),
-    "c6_curation2_audit" -> ((s, dir) => curated2For(s, dir).audit))
+    "c5_curation2" -> ((s, dir) => curatedFor(s, dir, "curate2").chunks),
+    "c6_curation2_audit" -> ((s, dir) => curatedFor(s, dir, "curate2").audit))
 
   /** c4 — leakage-safe split: q39's train/val/test assignment lifted to
     * near-dup-cluster granularity. Per-document hash splits (q39) let

@@ -80,7 +80,7 @@ object Dedup {
     // input would otherwise run it on one core (min() partials are
     // order-insensitive, so the round-robin is hash-safe).
     minhashPairs(graft.Tables.spread(load(s, dir, "documents")),
-      collapse = twinGate(s, dir, Seq("text")))
+      collapse = Collapse.gate(s, dir, "documents", Seq("text")))
 
   /** Frame-based core of d2 over any (doc_id, text) frame — the
     * composition surface ([[Curation]]); all plan properties
@@ -104,7 +104,7 @@ object Dedup {
     * the band-bucket populations by that factor while the 2.75M-row
     * output (which the expansion is bounded by) stays identical —
     * proved bit-identical at sf0.01 and sf10, pinned by PropertySpec's
-    * duplicated-corpus twin test. Stat-gated like d4 ([[twinGate]] on
+    * duplicated-corpus twin test. Stat-gated like d4 ([[Collapse.gate]] on
     * text — no blocking key here): twin-free corpora (the driver
     * fixtures, where d2 beats the reference engine outright) keep the
     * round-2 two-exchange pipeline and pay nothing.
@@ -116,15 +116,14 @@ object Dedup {
     val toked = docs
       .select(col("doc_id"), toks(col("text")).as("t"))
       .filter(size(col("t")) >= 3)
-    if (!collapse) return pairsFromSigs(minhashSigs(toked))
-    val hub = Collapse.hub(toked, Seq("t"), "doc_id")
+    val rows = Collapse.groups(toked, Seq("t"), "doc_id", collapse)
     val repPairs = pairsFromSigs(
-      minhashSigs(hub.select(col("rep").as("doc_id"), col("t"))))
+      minhashSigs(rows.select(col("rep").as("doc_id"), col("t"))))
     // Within-group pairs at est 1.0 — round(1.0, 3) in the original is
     // the double literal 1.0.
-    Collapse.pairs(repPairs, hub,
-      hub.filter(size(col("members")) >= 2)
-        .select(col("members"), lit(1.0).as("est_jaccard")))
+    Collapse.pairs(repPairs, rows,
+      rows.filter(size(col("members")) >= 2)
+        .select(col("members"), lit(1.0).as("est_jaccard")), on = collapse)
   }
 
   /** Band explode + self-join + per-pair dedup over a signature frame
@@ -165,11 +164,11 @@ object Dedup {
     * One explode + one aggregation — linear in corpus size.
     *
     * Twin-collapsed through [[Collapse.byKey]] on text behind
-    * [[twinGate]]: the signature is a pure function of the text (no
+    * [[Collapse.gate]]: the signature is a pure function of the text (no
     * corpus-level statistic), so it runs once per distinct text.
     */
   def d3Simhash(s: SparkSession, dir: String): DataFrame =
-    d3SimhashImpl(s, dir, collapse = twinGate(s, dir, Seq("text")))
+    d3SimhashImpl(s, dir, collapse = Collapse.gate(s, dir, "documents", Seq("text")))
 
   private[graft] def d3SimhashImpl(s: SparkSession, dir: String,
       collapse: Boolean): DataFrame = {
@@ -256,30 +255,8 @@ object Dedup {
     * embedder's loop — pay the probe scan once, and an in-place corpus
     * rewrite is probed again.
     */
-  /** Memoized exact-copy depth probe shared by the stat-gated twin
-    * collapses (d4 on (source, text) — its blocking key; d2 and the
-    * [[Collapse.byKey]] operators on text alone): one bounded Spark action,
-    * approx_count_distinct over xxhash64(keyCols), collapse iff avg
-    * copies per distinct key ≥ 1.2. Engine-side only, memoized per
-    * (documents file listing, key) — see d4's scaladoc for why a probe
-    * misread can only cost time, never rows.
-    */
-  private[graft] def twinGate(s: SparkSession, dir: String,
-      keyCols: Seq[String]): Boolean =
-    graft.Tables.memoOnListing(s, dir, "documents", keyCols.mkString(",")) {
-      val st = graft.Tables.spread(load(s, dir, "documents"))
-        .agg(count(lit(1)).as("n"),
-          approx_count_distinct(xxhash64(keyCols.map(col): _*)).as("nd"))
-        .head
-      // n > 0: an empty corpus has no twins (0 >= 0 would read as
-      // "duplicated" and route degenerate inputs onto the collapse
-      // plans, whose expanded-id nullability differs — caught by
-      // DegenerateCorpusSpec's schema-parity gate on t10, round 17).
-      st.getLong(0) > 0L && st.getLong(0) * 10L >= st.getLong(1) * 12L
-    }
-
   def d4NgramJaccard(s: SparkSession, dir: String): DataFrame =
-    d4NgramJaccardImpl(s, dir, twinGate(s, dir, Seq("source", "text")))
+    d4NgramJaccardImpl(s, dir, Collapse.gate(s, dir, "documents", Seq("source", "text")))
 
   private[graft] def d4NgramJaccardImpl(s: SparkSession, dir: String,
       collapse: Boolean): DataFrame = {
@@ -672,23 +649,16 @@ object Dedup {
     * production blocking path when no label exists): pairs only within a
     * hash bucket derived from the data itself. Same pair math as d5 —
     * the variants differ exactly in where candidate pairs come from.
-    * Single-table layout (≤64 buckets) with the
-    * [[Similarity.cappedSignBuckets]] population cap, so a hot bucket
-    * costs recall, never a quadratic task; [[d8bNearDupMultiband]] is
-    * the scale default.
+    * The one-table layout of [[Similarity.cappedBands]] (≤ 64 buckets)
+    * with its population cap, so a hot bucket costs recall, never a
+    * quadratic task; [[d8bNearDupMultiband]] is the scale default.
     */
   def d8EmbeddingLshNearDup(s: SparkSession, dir: String): DataFrame = {
-    val e = Similarity.cappedSignBuckets(
-      load(s, dir, "embeddings")
-        .select(col("vec_id"),
-          transform(col("embedding"), x => x.cast("double")).as("v"))
-        .withColumn("bucket", Similarity.buckets(col("v"))))
-    e.as("a")
-      .join(e.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        col("a.bucket").as("bucket"),
-        round(Similarity.cosine(col("a.v"), col("b.v")), 6).as("cos_sim"))
+    val rows = Collapse.groups(load(s, dir, "embeddings")
+        .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v")),
+      Seq("v"), "vec_id", on = false)
+    Similarity.groupPairs(rows, "v", Similarity.OneTableBits, 1)
+      .select(col("ga").as("vec_a"), col("gb").as("vec_b"), col("bucket"), col("cos_sim"))
       .filter(col("cos_sim") >= 0.3)
   }
 
@@ -696,52 +666,40 @@ object Dedup {
     * ([[Similarity.cappedBands]]: [[Similarity.BandTables]] band tables
     * of [[Similarity.BandBits]] sign bits OR'd for recall, population cap
     * so a degenerate bucket emits zero pairs — worst case stays linear).
-    * Collisions are scored per band table and deduped with a pair-keyed
-    * aggregation AFTER scoring, so the dedup shuffle carries an 8-byte
-    * cosine, not two 64-dim vectors; min() over bit-identical duplicates
-    * is pure dedup.
+    * [[Similarity.groupPairs]] dedups the per-table collisions AFTER
+    * scoring, so the dedup shuffle carries an 8-byte cosine, not two
+    * 64-dim vectors.
     */
   def d8bNearDupMultiband(s: SparkSession, dir: String): DataFrame = {
     val e = load(s, dir, "embeddings")
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
     d8bNearDupMultibandImpl(e,
-      collapse = graft.ops.Kmeans.embTwinGate(s, dir))
+      collapse = Collapse.gate(s, dir, "embeddings", Seq("embedding")))
   }
 
-  /** TWIN COLLAPSE over [[Collapse.hub]] on the vector value: the
-    * banding, the cap and the score are pure functions of the vector
-    * VALUE plus a weighted bucket population (see
-    * [[Similarity.cappedBandsGrouped]]), so candidate generation and
-    * cosine run once per distinct-vector GROUP pair; [[Collapse.pairs]]
-    * expands member pairs back, cross pairs from distinct group pairs
-    * and within pairs from self pairs of multi-member groups.
+  /** One pipeline on both gate paths. Collapsed, the rows are the
+    * [[Collapse.hub]] on the vector value: the banding, the cap and the
+    * score are pure functions of the vector VALUE plus a weighted bucket
+    * population (see [[Similarity.cappedBands]]), so candidate
+    * generation and cosine run once per distinct-vector GROUP pair, and
+    * [[Collapse.pairs]] expands member pairs back — cross pairs from
+    * distinct group pairs, within pairs from self pairs of multi-member
+    * groups. Direct, every vector is its own group and the group pairs
+    * are the answer.
     */
   private[graft] def d8bNearDupMultibandImpl(e: DataFrame,
       collapse: Boolean): DataFrame = {
-    if (collapse) {
-      val hub = Collapse.hub(e, Seq("v"), "vec_id")
-      val gp = Similarity.groupPairs(Similarity.cappedBandsGrouped(hub, "v"), "v")
-        .filter(col("cos_sim") >= 0.3)
-      return Collapse.pairs(
-        gp.filter(col("ga") =!= col("gb"))
-          .select(col("ga").as("vec_a"), col("gb").as("vec_b"), col("cos_sim")),
-        hub,
-        gp.filter(col("ga") === col("gb"))
-          .join(hub.select(col("rep").as("ga"), col("members")), Seq("ga"))
-          .select(col("members"), col("cos_sim")),
-        Some(e.sparkSession.sessionState.conf.numShufflePartitions))
-    }
-    val c = Similarity.cappedBands(e, "vec_id", "v")
-    c.as("a")
-      .join(c.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"),
-        round(Similarity.cosine(col("a.v"), col("b.v")), 6).as("cs"))
-      .groupBy(col("vec_a"), col("vec_b")) // collides-in->1-table counts once
-      .agg(min(col("cs")).as("cos_sim"))
+    val rows = Collapse.groups(e, Seq("v"), "vec_id", collapse)
+    val gp = Similarity.groupPairs(rows, "v")
       .filter(col("cos_sim") >= 0.3)
+    Collapse.pairs(
+      gp.filter(col("ga") =!= col("gb"))
+        .select(col("ga").as("vec_a"), col("gb").as("vec_b"), col("cos_sim")),
+      rows,
+      gp.filter(col("ga") === col("gb"))
+        .join(rows.select(col("rep").as("ga"), col("members")), Seq("ga"))
+        .select(col("members"), col("cos_sim")),
+      Some(e.sparkSession.sessionState.conf.numShufflePartitions), on = collapse)
   }
 
   /** d5 — embedding-cosine near-dup pairs within a blocking key (label;
@@ -767,8 +725,7 @@ object Dedup {
     */
   def d5EmbeddingNearDup(s: SparkSession, dir: String): DataFrame = {
     val e = load(s, dir, "embeddings")
-      .select(col("vec_id"), col("label"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
+      .select(col("vec_id"), col("label"), Similarity.asDouble(col("embedding")).as("v"))
     val hub = Collapse.hub(e, Seq("label", "v"), "vec_id")
     val repPairs = hub.as("a")
       .join(hub.as("b").hint("SHUFFLE_HASH"),
@@ -927,7 +884,7 @@ object Dedup {
     // flatten-of-lists is the original membership, so `grp` is
     // value-identical to the direct signature hub and every downstream
     // step (banding, CC, expansion) is untouched.
-    val grp = if (twinGate(s, dir, Seq("text"))) {
+    val grp = if (Collapse.gate(s, dir, "documents", Seq("text"))) {
       val tg = Collapse.hub(toked, Seq("t"), "doc_id")
         .select(col("rep").as("doc_id"), col("t"), col("members"))
       minhashSigs(tg.select(col("doc_id"), col("t")))
@@ -1226,7 +1183,7 @@ object Dedup {
     */
   def d12SubstrSpans(s: SparkSession, dir: String): DataFrame =
     substrSpans(load(s, dir, "documents"),
-      collapse = twinGate(s, dir, Seq("text")))
+      collapse = Collapse.gate(s, dir, "documents", Seq("text")))
 
   /** Segment stride for the window-hash pass: documents are first
     * exploded into stride-sized segments (with K-1 chars of overlap so
@@ -1348,7 +1305,7 @@ object Dedup {
     */
   def d13SpanScrub(s: SparkSession, dir: String): DataFrame =
     spanScrub(load(s, dir, "documents"),
-      collapse = twinGate(s, dir, Seq("text")))
+      collapse = Collapse.gate(s, dir, "documents", Seq("text")))
 
   /** Twins share their spans and therefore their scrubbed text, so the
     * scrub runs once per representative ([[Collapse.byKey]]): one hub
@@ -1375,7 +1332,7 @@ object Dedup {
     */
   def t13ContamSpans(s: SparkSession, dir: String): DataFrame =
     Collapse.byKey(t1314Tagged(s, dir), Seq("text", "ev"),
-      twinGate(s, dir, Seq("text")))(contamSpansTagged)
+      Collapse.gate(s, dir, "documents", Seq("text")))(contamSpansTagged)
 
   /** Both sides live in one table, so tag in a single projection — a
     * corpus/eval filter pair unioned back together would scan (and
@@ -1396,7 +1353,7 @@ object Dedup {
     */
   def t14ContamScrub(s: SparkSession, dir: String): DataFrame =
     Collapse.byKey(t1314Tagged(s, dir), Seq("text", "ev"),
-      twinGate(s, dir, Seq("text")))(rows =>
+      Collapse.gate(s, dir, "documents", Seq("text")))(rows =>
       scrubWith(rows.filter(col("ev") === 0).select(col("doc_id"), col("text")),
         contamSpansTagged(rows)))
 
@@ -1454,7 +1411,7 @@ object Dedup {
     */
   def d14Winnow(s: SparkSession, dir: String): DataFrame =
     winnow(load(s, dir, "documents"),
-      collapse = twinGate(s, dir, Seq("text")))
+      collapse = Collapse.gate(s, dir, "documents", Seq("text")))
 
   /** The fingerprint set is per-document with no corpus-global term at
     * all, so [[Collapse.byKey]] on text selects once per distinct text.
@@ -1547,7 +1504,7 @@ object Dedup {
     * pinning the aggregate's semantics declaratively).
     */
   def d7Simhash64(s: SparkSession, dir: String): DataFrame =
-    d7Simhash64Impl(s, dir, collapse = twinGate(s, dir, Seq("text")))
+    d7Simhash64Impl(s, dir, collapse = Collapse.gate(s, dir, "documents", Seq("text")))
 
   /** d3's twin collapse: the 64-bit signature is a pure per-text
     * function (the two md5s per token dominate the wall).

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.Tables.load
@@ -46,12 +46,6 @@ object Hybrid {
   /** Fused results kept per query. */
   private val TopK = 5
 
-  private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
-
-  /** Sequential-double squared norm — s1's recurrence, hoisted per row. */
-  private def sqNorm(v: Column): Column =
-    aggregate(transform(v, x => x * x), lit(0.0), (acc, x) => acc + x)
-
   /** Frame-based core: fuse BM25 over `(doc_id, text)` of
     * `corpus`/`queries` with cosine over `emb` `(vec_id, embedding)`,
     * joined on doc_id = vec_id. Returns (query_id, doc_id, rank, rrf).
@@ -83,8 +77,8 @@ object Hybrid {
     // equal round-6 cos_sim interleave by doc_id exactly as before,
     // because the final row_number orders the exploded docs the same.
     val e = emb
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-      .withColumn("n2", sqNorm(col("v")))
+      .select(col("vec_id"), Similarity.asDouble(col("embedding")).as("v"))
+      .withColumn("n2", Similarity.sqNorm(col("v")))
     // Both sides collapsed to distinct vector values ([[Collapse.hub]]):
     // the group's rep is its deterministic key, its members fan results
     // back out (docs are re-ranked after explode), and mult is the
@@ -111,8 +105,8 @@ object Hybrid {
     val qgSlim = qg.select(col("qgid"), col("v").as("qv"), col("n2").as("qn2"))
     val pair = cgSlim.crossJoin(broadcast(qgSlim))
       .select(col("qgid"), col("cgid"), col("gsize"),
-        round(graft.functions.Functions.dot_product(col("qv"), col("v")) /
-          sqrt(col("qn2") * col("n2")), 6).as("cos_sim"))
+        round(Similarity.cosineHoisted(col("qv"), col("qn2"), col("v"), col("n2")), 6)
+          .as("cos_sim"))
     // Per (query-group, cos_sim value): docs strictly better = cumulative
     // group sizes of rows with cos_sim strictly greater. Grouping by the
     // cos_sim VALUE first makes rowsBetween(…, -1) exactly "strictly

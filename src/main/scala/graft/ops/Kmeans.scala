@@ -104,37 +104,6 @@ object Kmeans {
       .select(keep ++ Seq("sub", "cell", "dist").map(f => col(s"a.$f").as(f)): _*)
   }
 
-  /** EXACT WEIGHTED-TWIN COLLAPSE for the update aggregations (round
-    * 16, the dedup family's pattern carried into training): assignment
-    * is a pure function of the quantized vector, and because every
-    * update statistic is an exact INTEGER sum, a duplicated vector's
-    * contribution is exactly `weight × q_i` — integer multiplication,
-    * associative, bit-equal to summing the copies. So behind a
-    * memoized embeddings-duplication probe, each Lloyd's round
-    * aggregates one row per DISTINCT vector (weight-carrying, hub
-    * persisted once for ALL rounds) instead of re-scanning the corpus
-    * — ~95× less distance arithmetic per round at the 100× gate. The
-    * centroid sequence is IDENTICAL by induction (same sums, same
-    * counts, same floorDiv), and the final assignment still runs over
-    * the full corpus, so every consumer's output is bit-identical.
-    * Init also reads the full frame (two first-k seed vectors may
-    * share a value but must stay distinct centroids). Unique-vector
-    * corpora keep the scan-per-round form: the scaladoc above is
-    * explicit that caching a 100 TB corpus is not a plan, and the
-    * hub IS the corpus when nothing is duplicated. The verdict is
-    * memoized on the table's file listing ([[graft.Tables.memoOnListing]]).
-    */
-  private[graft] def embTwinGate(s: SparkSession, dir: String): Boolean =
-    graft.Tables.memoOnListing(s, dir, "embeddings", "embedding") {
-      val st = graft.Tables.spread(load(s, dir, "embeddings"))
-        .agg(count(lit(1)).as("n"),
-          approx_count_distinct(xxhash64(col("embedding"))).as("nd"))
-        .head
-      // n > 0: empty corpus = no twins (Dedup.twinGate's rule — 0 >= 0
-      // must not route degenerate inputs onto the collapse plans).
-      st.getLong(0) > 0L && st.getLong(0) * 10L >= st.getLong(1) * 12L
-    }
-
   /** Exact integer squared-L2 — the native `sq_dist_long` kernel. */
   private val sqDist: (Column, Column) => Column = graft.functions.Functions.sq_dist_long
 
@@ -150,7 +119,7 @@ object Kmeans {
     * centroids.
     *
     * Each round is [[roundStats]] over ONE weight-carrying frame: the
-    * persisted `(q, w)` twin hub when `collapse` (see [[embTwinGate]]),
+    * persisted `(q, w)` twin hub when `collapse` (see [[train]]),
     * else `e` itself with w = 1. The (sub × k) result rows round-trip
     * through the driver as the next round's literal centroids. A
     * component whose sum is null (no non-null element reached it) keeps
@@ -196,12 +165,33 @@ object Kmeans {
       .agg(sum(col("w")).as("n"), vecSum(col("q"), col("w"), col("sub") * dim, dim).as("s"))
 
   /** Lloyd's over the quantized corpus, seeded with the first-k vectors
-    * split into `dim`-wide subspaces, collapsed behind [[embTwinGate]].
+    * split into `dim`-wide subspaces.
+    *
+    * EXACT WEIGHTED-TWIN COLLAPSE for the update aggregations (round
+    * 16, the dedup family's pattern carried into training): assignment
+    * is a pure function of the quantized vector, and because every
+    * update statistic is an exact INTEGER sum, a duplicated vector's
+    * contribution is exactly `weight × q_i` — integer multiplication,
+    * associative, bit-equal to summing the copies. So behind a
+    * memoized embeddings-duplication probe, each Lloyd's round
+    * aggregates one row per DISTINCT vector (weight-carrying, hub
+    * persisted once for ALL rounds) instead of re-scanning the corpus
+    * — ~95× less distance arithmetic per round at the 100× gate. The
+    * centroid sequence is IDENTICAL by induction (same sums, same
+    * counts, same floorDiv), and the final assignment still runs over
+    * the full corpus, so every consumer's output is bit-identical.
+    * Init also reads the full frame (two first-k seed vectors may
+    * share a value but must stay distinct centroids). Unique-vector
+    * corpora keep the scan-per-round form: the scaladoc above is
+    * explicit that caching a 100 TB corpus is not a plan, and the
+    * hub IS the corpus when nothing is duplicated. The probe is
+    * [[Collapse.gate]] on the embedding value.
     */
   private def train(s: SparkSession, dir: String, k: Int, iters: Int,
       dim: Int): (DataFrame, Seq[(Int, Long, Seq[Long])]) = {
     val e = corpus(s, dir)
-    lloyd(e, seeds[Long](e, "id", "q", k, dim), iters, dim, collapse = embTwinGate(s, dir))
+    lloyd(e, seeds[Long](e, "id", "q", k, dim), iters, dim,
+      collapse = Collapse.gate(s, dir, "embeddings", Seq("embedding")))
   }
 
   /** Trained centroids for downstream IVF/PQ consumers: `(cell, cv)` with

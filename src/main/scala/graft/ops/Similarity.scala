@@ -33,23 +33,31 @@ object Similarity {
   def cosineSql(a: String, b: String): String =
     s"list_cosine_similarity(CAST($a AS DOUBLE[]), CAST($b AS DOUBLE[]))"
 
-  private def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
+  /** A float vector widened to double, element by element. */
+  private[ops] def asDouble(c: Column): Column = transform(c, x => x.cast("double"))
 
   private val NQueries = 3
   private val TopK = 5
 
   /** Squared norm, same sequential recurrence as the cosine kernel. */
-  private def sqNorm(v: Column): Column =
+  private[ops] def sqNorm(v: Column): Column =
     aggregate(transform(v, x => x * x), lit(0.0), (acc, x) => acc + x)
+
+  /** [[cosine]] with both squared norms ([[sqNorm]]) hoisted out of the
+    * pair loop: `dot / sqrt(na · nb)` is the fused kernel's exact
+    * expression tree, so the bits are the same and the per-pair work is
+    * one native dot product.
+    */
+  private[ops] def cosineHoisted(a: Column, na: Column, b: Column, nb: Column): Column =
+    graft.functions.Functions.dot_product(a, b) / sqrt(na * nb)
 
   /** s1 — brute-force cosine top-k: query vectors (vec_id < NQueries)
     * against the full corpus, k best by (similarity desc, vec_id asc).
     *
     * Norms are hoisted out of the pair loop: each vector's ‖·‖² is
     * computed once in the scan, and the per-pair kernel is only the
-    * native dot product — for q queries that removes 2/3 of the
-    * per-pair flops. `dot / sqrt(na * nb)` keeps the exact expression
-    * tree of the fused kernel, so results are bit-identical.
+    * native dot product ([[cosineHoisted]]) — for q queries that removes
+    * 2/3 of the per-pair flops, with bit-identical results.
     */
   def s1KnnCosine(s: SparkSession, dir: String): DataFrame = {
     val e = load(s, dir, "embeddings")
@@ -61,8 +69,7 @@ object Similarity {
       .orderBy(col("cos_sim").desc, col("vec_id").asc)
     e.join(broadcast(q), col("vec_id") =!= col("query_id"))
       .select(col("query_id"), col("vec_id"),
-        round(graft.functions.Functions.dot_product(col("qv"), col("v")) /
-          sqrt(col("qn2") * col("n2")), 6).as("cos_sim"))
+        round(cosineHoisted(col("qv"), col("qn2"), col("v"), col("n2")), 6).as("cos_sim"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= TopK)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
@@ -89,87 +96,35 @@ object Similarity {
           .otherwise(transform(col(vecCol), x => x / col("norm"))))
   }
 
-  private val NBuckBits = 6
-
-  /** Sign-bit LSH bucket: bit i set iff component i is positive. */
-  private[graft] def buckets(v: Column): Column =
-    (1 to NBuckBits).map(i =>
-      when(element_at(v, i) > 0, lit(1L << (i - 1))).otherwise(lit(0L)))
-      .reduce(_ + _)
-
-  /** Single-table sign-bucket rows with bucket population outside
-    * [2, maxBucket] dropped — the same window-count cap as
-    * [[cappedBands]], applied to the one-table layout s2/d8 use.
-    * Singleton buckets never emit pairs anyway, so the ≥2 side only
-    * prunes; the ≤maxBucket side is the scale guard: a degenerate
-    * bucket (dense embedding region at 100× corpus) contributes ZERO
-    * pairs instead of an O(pop²) task. The count is a window over the
-    * bucket key, so the frame still reaches the self-join through ONE
-    * scan and ONE (bucket) exchange that both join sides reuse.
-    */
-  private[graft] def cappedSignBuckets(e: DataFrame,
-      maxBucket: Int = MaxBucket): DataFrame =
-    e.withColumn("n_bucket",
-        count(lit(1)).over(Window.partitionBy("bucket")))
-      .filter(col("n_bucket").between(2, maxBucket))
-      .drop("n_bucket")
-
-  /** s2 — LSH-bucketed ANN: nearest neighbor within the same sign-bit
-    * bucket for every vector (approximate — bucket boundaries lose some
-    * true neighbors, which is the accuracy/cost trade the bucket count
-    * tunes). Single-table layout: 6 bits ⇒ ≤64 buckets, which keeps
-    * recall high on a small corpus; the per-bucket population cap
-    * ([[cappedSignBuckets]]) bounds the within-bucket join so a hot
-    * bucket degrades recall, never cost. [[s2bAnnMultiband]] remains
-    * the scale default (more bits shrink mean population 64×, OR'd
-    * tables buy the recall back).
-    */
-  def s2AnnLsh(s: SparkSession, dir: String): DataFrame = {
-    val e = cappedSignBuckets(
-      load(s, dir, "embeddings")
-        .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-        .withColumn("bucket", buckets(col("v"))))
-    // argmax per query via max_by (partial+final agg — no sort-window
-    // shuffle); tie-break = smallest neighbor id, so the order key is
-    // (cos_sim, -vec_id) maximized.
-    e.as("a")
-      .join(e.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
-        col("a.bucket").as("bucket"),
-        round(cosine(col("a.v"), col("b.v")), 6).as("cos_sim"))
-      .groupBy(col("query_id"))
-      .agg(max_by(
-        struct(col("neighbor_id"), col("bucket"), col("cos_sim")),
-        struct(col("cos_sim"), (-col("neighbor_id")).as("neg_id"))).as("best"))
-      .select(col("query_id"), col("best.neighbor_id"), col("best.bucket"),
-        col("best.cos_sim"))
-  }
-
-  // --- Multi-table (banded) sign LSH: the scale-safe default. -----------
+  // --- Sign-LSH blocking: one bucket builder, one cap, one self-join. --
   //
-  // One table of NBuckBits=6 sign bits caps out at 64 buckets: at 100×
-  // corpus the within-bucket self-join is O((n/64)²) per bucket and a
-  // dense region of embedding space hot-spots one task. The banded form
-  // fixes both knobs at once:
-  //   - BandBits (12) sign bits per table ⇒ 4096 buckets per table, so
-  //     mean bucket population shrinks 64× and the quadratic term with it;
-  //   - BandTables (4) tables over disjoint component ranges, OR'd —
-  //     a pair is a candidate if it collides in ANY table — which buys
-  //     back the recall the narrower buckets lose;
-  //   - MaxBucket caps the population a bucket may have and still emit
-  //     pairs (mirrors d4's MaxPostings): a degenerate bucket (all-equal
-  //     region, adversarial corpus) contributes ZERO pairs instead of a
-  //     quadratic task, making worst-case cost linear in corpus size.
+  // Every embedding blocking operator is [[groupPairs]] (the
+  // [[bandBuckets]] → [[cappedBands]] → self-join pipeline) over
+  // `(rep, v, mult)` rows from [[Collapse.groups]]:
+  // one row per vector with mult = 1 on the direct form, one per
+  // distinct vector on the twin collapse. Two layouts:
+  //   - s2/d8: one table of OneTableBits (6) sign bits ⇒ ≤ 64 buckets,
+  //     which keeps recall high on a small corpus;
+  //   - s2b/s6/d8b, the scale default: BandTables (4) tables of BandBits
+  //     (12) sign bits over disjoint component ranges, OR'd (a pair is a
+  //     candidate if it collides in ANY table). 4096 buckets per table
+  //     shrink the mean population, and with it the quadratic term, 64×;
+  //     the extra tables buy the recall back.
+  // MaxBucket caps the population a bucket may have and still emit pairs
+  // (mirrors d4's MaxPostings): a degenerate bucket (all-equal region,
+  // adversarial corpus) contributes ZERO pairs instead of a quadratic
+  // task, so worst-case cost stays linear in corpus size.
+  private[graft] val OneTableBits = 6
   private[ops] val BandBits = 12
   private[ops] val BandTables = 4
   private[ops] val MaxBucket = 1000
 
   /** Per-table sign-bucket keys: element `b` is the bucket of table `b`,
-    * built from sign bits of components [b·bits+1, (b+1)·bits]. Vectors
-    * must have ≥ bits·nTables dimensions (48 at the defaults) — a
-    * shorter vector fails fast with ANSI's INVALID_ARRAY_INDEX; pass
-    * smaller (bits, nTables) for low-dimensional embeddings.
+    * bit i set iff component b·bits+i is positive (components
+    * [b·bits+1, (b+1)·bits]). Vectors must have ≥ bits·nTables
+    * dimensions (48 at the banded defaults) — a shorter vector fails
+    * fast with ANSI's INVALID_ARRAY_INDEX; pass smaller (bits, nTables)
+    * for low-dimensional embeddings.
     */
   private[ops] def bandBuckets(v: Column, bits: Int, nTables: Int): Column =
     array((0 until nTables).map { b =>
@@ -178,106 +133,136 @@ object Similarity {
         .reduce(_ + _)
     }: _*)
 
-  /** Rows exploded into (row, tbl, bucket) band memberships, keeping only
-    * buckets whose population is in [2, maxBucket]. The cap is a window
-    * count over (tbl, bucket) — NOT a separate aggregate joined back —
-    * so the frame is computed with ONE scan and ONE shuffle: the band
-    * explode and bucket math sit below the (tbl, bucket) exchange, the
-    * downstream self-join partitions by the same keys (no new exchange),
-    * and both join sides reuse the single exchange (the d2 lesson:
-    * identical shuffle subtrees dedup; broadcast never does).
+  /** [[Collapse.groups]] rows `(rep, vecCol, mult)` exploded into
+    * `(rep, vecCol, mult, tbl, bucket)` band memberships, keeping only
+    * buckets whose population is in [2, maxBucket]. The population is
+    * `sum(mult)`, the rows a bucket stands for: a count of the rows on
+    * the direct form and exact on the collapse, because the caps are
+    * WHOLE-BUCKET filters, never a truncation inside a bucket, and twins
+    * share every bucket (banding is a pure function of the vector).
+    * Singleton buckets never pair, so the ≥ 2 side only prunes. The cap
+    * is a window over (tbl, bucket) — NOT a separate aggregate joined
+    * back — so the frame is computed with ONE scan and ONE shuffle: the
+    * band explode and bucket math sit below the (tbl, bucket) exchange,
+    * the self-join partitions by the same keys (no new exchange), and
+    * both join sides reuse the single exchange (the d2 lesson: identical
+    * shuffle subtrees dedup; broadcast never does).
     */
-  private[ops] def cappedBands(e: DataFrame, idCol: String, vecCol: String,
+  private[graft] def cappedBands(rows: DataFrame, vecCol: String,
       bits: Int = BandBits, nTables: Int = BandTables,
-      maxBucket: Int = MaxBucket): DataFrame = {
+      maxBucket: Int = MaxBucket): DataFrame =
     // posexplode_outer, not posexplode: the plain generator lets
     // InferFiltersFromGenerate substitute the whole bucket-math array
     // into an inferred `size(arr) > 0` filter below this projection,
     // doubling the per-row work (the d4 lesson). The array is a non-null
-    // 4-element literal, so the row sets are identical.
-    val banded = e
-      .select(col(idCol), col(vecCol),
-        posexplode_outer(bandBuckets(col(vecCol), bits, nTables))
-          .as(Seq("tbl", "bucket")))
-    banded
-      .withColumn("n_bucket",
-        count(lit(1)).over(Window.partitionBy("tbl", "bucket")))
+    // nTables-element literal, so the row sets are identical.
+    rows.select(col("rep"), col(vecCol), col("mult"),
+        posexplode_outer(bandBuckets(col(vecCol), bits, nTables)).as(Seq("tbl", "bucket")))
+      .withColumn("n_bucket", sum(col("mult")).over(Window.partitionBy("tbl", "bucket")))
       .filter(col("n_bucket").between(2, maxBucket))
       .drop("n_bucket")
-  }
 
-  /** Unordered candidate pairs (idCol_a < idCol_b) colliding in ≥1 band
-    * table, deduped across tables — the library-surface blocking
-    * primitive (the oracled operators s2b/d8b layer scoring on the same
-    * join; the skew tests pin the population-cap bound on it).
+  /** The band self-join, the only one: candidate pairs of `rows`
+    * ([[Collapse.groups]]) that collide in ≥ 1 table of
+    * [[cappedBands]], undirected with ga ≤ gb and scored once —
+    * `(ga, gb, cos_sim, bucket, va, vb)`.
+    *  - A self pair (ga = gb) appears iff the group stands for ≥ 2 rows
+    *    and one of its buckets survives the cap, exactly when the
+    *    per-row join would pair its members; mult = 1 rows never
+    *    self-pair. Null reps match nothing.
+    *  - round(cosine, 6) reads only the two vectors and is symmetric bit
+    *    for bit (`dot / sqrt(na·nb)`), so it is every member pair's
+    *    score and either direction's.
+    *  - With several tables a pair can collide in more than one: an
+    *    aggregate on (ga, gb) dedups the copies, and min() over
+    *    bit-identical scores is pure dedup. One table gives each pair
+    *    once, so its join rows are the pairs and no dedup shuffle is
+    *    planned.
+    *  - `bucket` is the smallest colliding bucket: in the one-table
+    *    layout, THE bucket of the pair (s2/d8 report it).
+    *  - `va`/`vb` are the two vectors ([[multibandPairs]] returns them).
+    * Columns a caller does not read are pruned from the plan.
     */
-  def multibandPairs(e: DataFrame, idCol: String, vecCol: String,
+  private[graft] def groupPairs(rows: DataFrame, vecCol: String,
       bits: Int = BandBits, nTables: Int = BandTables,
       maxBucket: Int = MaxBucket): DataFrame = {
-    val c = cappedBands(e, idCol, vecCol, bits, nTables, maxBucket)
-    c.as("a")
-      .join(c.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
-      .select(col(s"a.$idCol").as(s"${idCol}_a"), col(s"b.$idCol").as(s"${idCol}_b"),
-        col(s"a.$vecCol").as(s"${vecCol}_a"), col(s"b.$vecCol").as(s"${vecCol}_b"))
-      .dropDuplicates(s"${idCol}_a", s"${idCol}_b")
-  }
-
-  /** [[cappedBands]] over [[Collapse.hub]] rows keyed on the vector
-    * value: identical band explode and window shape, with the bucket
-    * population as the mult-weighted sum. The caps are WHOLE-BUCKET
-    * filters on a bucket's total membership, never a truncation inside
-    * a bucket, so they weight exactly (sum(mult) over hub rows ≡
-    * count(1) over member rows). Twins share every bucket — banding is
-    * a pure function of the vector — so co-occurrence is decided per
-    * group and round(cosine, 6) is bit-identical for every member pair
-    * of two groups. Gated per corpus on [[Kmeans.embTwinGate]]; unique
-    * corpora keep the member-level plans.
-    */
-  private[ops] def cappedBandsGrouped(hub: DataFrame, vecCol: String,
-      bits: Int = BandBits, nTables: Int = BandTables,
-      maxBucket: Int = MaxBucket): DataFrame = {
-    val banded = hub
-      .select(col("rep"), col(vecCol), col("mult"),
-        posexplode_outer(bandBuckets(col(vecCol), bits, nTables))
-          .as(Seq("tbl", "bucket")))
-    banded
-      .withColumn("n_bucket",
-        sum(col("mult")).over(Window.partitionBy("tbl", "bucket")))
-      .filter(col("n_bucket").between(2, maxBucket))
-      .drop("n_bucket")
-  }
-
-  /** Unordered candidate GROUP pairs from grouped capped bands, deduped
-    * across tables, scored once: `(ga, gb, cos_sim)` with ga ≤ gb;
-    * a self pair (ga = gb) appears iff the group has ≥ 2 members and
-    * one of its buckets survives the cap — exactly when the direct
-    * member-level join would emit within-group pairs. min() over the
-    * per-table copies is pure dedup (scores are bit-identical).
-    */
-  private[ops] def groupPairs(c: DataFrame, vecCol: String): DataFrame =
-    c.as("a")
+    val c = cappedBands(rows, vecCol, bits, nTables, maxBucket)
+    val pairs = c.as("a")
       .join(c.as("b"),
         col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
           (col("a.rep") < col("b.rep") ||
             (col("a.rep") === col("b.rep") && col("a.mult") >= 2)))
       .select(col("a.rep").as("ga"), col("b.rep").as("gb"),
-        round(cosine(col(s"a.$vecCol"), col(s"b.$vecCol")), 6).as("cs"))
-      .groupBy(col("ga"), col("gb")).agg(min(col("cs")).as("cos_sim"))
+        round(cosine(col(s"a.$vecCol"), col(s"b.$vecCol")), 6).as("cos_sim"),
+        col("a.bucket").as("bucket"), col(s"a.$vecCol").as("va"), col(s"b.$vecCol").as("vb"))
+    if (nTables == 1) pairs
+    else pairs.groupBy(col("ga"), col("gb"))
+      .agg(min(col("cos_sim")).as("cos_sim"), min(col("bucket")).as("bucket"),
+        first(col("va")).as("va"), first(col("vb")).as("vb"))
+  }
 
-  /** Per-query-group top candidate members: directs [[groupPairs]] both
-    * ways, attaches each candidate group's first `keep` member ids
-    * (members are sorted asc and ties break by smallest id, so no
-    * later member of a group can enter a global top-`keep`), and keeps
-    * the global top `keep` per query group by (score desc, id asc).
-    * Output: one row per query group — `(gq, cand)` with `cand` a
-    * rank-sorted array of `(rk, nid, cs)` structs, length ≤ keep.
+  /** [[groupPairs]] in both directions, `(gq, gc, cos_sim, bucket)`:
+    * every candidate `gc` of each query group `gq`, a self pair once.
+    * One read of the pairs, so the join and its cosines run once (a
+    * union of two reads plans two joins: the flip's self-pair filter
+    * reaches the join condition, and the two sides stop matching for
+    * exchange reuse). explode_outer for d4's reason.
     */
-  private def topCandidates(gp: DataFrame, hub: DataFrame, keep: Int): DataFrame = {
-    val directed = gp.select(col("ga").as("gq"), col("gb").as("gc"), col("cos_sim"))
-      .union(gp.filter(col("ga") =!= col("gb"))
-        .select(col("gb").as("gq"), col("ga").as("gc"), col("cos_sim")))
+  private def directed(gp: DataFrame): DataFrame = {
+    val flip = col("flip")
+    gp.select(col("ga"), col("gb"), col("cos_sim"), col("bucket"),
+        explode_outer(array(lit(false), lit(true))).as("flip"))
+      .filter(!flip || col("ga") =!= col("gb"))
+      .select(when(flip, col("gb")).otherwise(col("ga")).as("gq"),
+        when(flip, col("ga")).otherwise(col("gb")).as("gc"), col("cos_sim"), col("bucket"))
+  }
+
+  /** s2 — LSH-bucketed ANN: nearest neighbor within the same sign-bit
+    * bucket for every vector (approximate — bucket boundaries lose some
+    * true neighbors, which is the accuracy/cost trade the bucket count
+    * tunes), in the one-table layout; the population cap bounds the
+    * within-bucket join so a hot bucket degrades recall, never cost.
+    * [[s2bAnnMultiband]] remains the scale default. The argmax per query
+    * is a max_by (partial+final agg — no sort-window shuffle); the
+    * tie-break is the smallest neighbor id, so the order key is
+    * (cos_sim, -neighbor_id) maximized.
+    */
+  def s2AnnLsh(s: SparkSession, dir: String): DataFrame = {
+    val e = load(s, dir, "embeddings")
+      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+    val rows = Collapse.groups(e, Seq("v"), "vec_id", on = false)
+    directed(groupPairs(rows, "v", OneTableBits, 1))
+      .groupBy(col("gq").as("query_id"))
+      .agg(max_by(
+        struct(col("gc").as("neighbor_id"), col("bucket"), col("cos_sim")),
+        struct(col("cos_sim"), (-col("gc")).as("neg_id"))).as("best"))
+      .select(col("query_id"), col("best.neighbor_id"), col("best.bucket"),
+        col("best.cos_sim"))
+  }
+
+  /** Unordered candidate pairs (idCol_a < idCol_b) colliding in ≥1 band
+    * table, deduped across tables, with both vectors — the
+    * library-surface blocking primitive: [[groupPairs]] over every row
+    * as its own group (the skew tests pin the population-cap bound on
+    * it).
+    */
+  def multibandPairs(e: DataFrame, idCol: String, vecCol: String,
+      bits: Int = BandBits, nTables: Int = BandTables,
+      maxBucket: Int = MaxBucket): DataFrame =
+    groupPairs(Collapse.groups(e, Seq(vecCol), idCol, on = false),
+        vecCol, bits, nTables, maxBucket)
+      .select(col("ga").as(s"${idCol}_a"), col("gb").as(s"${idCol}_b"),
+        col("va").as(s"${vecCol}_a"), col("vb").as(s"${vecCol}_b"))
+
+  /** Per-query-group top candidate members: the [[directed]] pairs with
+    * each candidate group's first `keep` member ids attached (members
+    * are sorted asc and ties break by smallest id, so no later member of
+    * a group can enter a global top-`keep`), keeping the global top
+    * `keep` per query group by (score desc, id asc). Output: one row per
+    * query group — `(gq, cand)` with `cand` a rank-sorted array of
+    * `(rk, nid, cs)` structs, length ≤ keep.
+    */
+  private def topCandidates(directed: DataFrame, hub: DataFrame, keep: Int): DataFrame = {
     val nm = directed
       .join(hub.select(col("rep").as("gc"),
         slice(col("members"), 1, keep).as("mc")), Seq("gc"))
@@ -300,7 +285,7 @@ object Similarity {
   def s2bAnnMultiband(s: SparkSession, dir: String): DataFrame = {
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    s2bAnnMultibandImpl(e, collapse = Kmeans.embTwinGate(s, dir))
+    s2bAnnMultibandImpl(e, collapse = Collapse.gate(s, dir, "embeddings", Seq("embedding")))
   }
 
   private[graft] def s2bAnnMultibandImpl(e: DataFrame, collapse: Boolean): DataFrame =
@@ -314,34 +299,33 @@ object Similarity {
     * exact cosine over candidates only, top-k per query by a rank window
     * (WindowGroupLimit keeps the per-group sort map-bounded). A pair
     * colliding in several band tables scores identically, but k>1 means
-    * duplicates would occupy ranks — so candidates dedup on
-    * (query, neighbor) BEFORE ranking, a shuffle that carries an 8-byte
-    * score rather than two vectors.
+    * duplicates would occupy ranks — [[groupPairs]] dedups the pair
+    * BEFORE ranking, a shuffle that carries an 8-byte score rather than
+    * two vectors, and the ranking reads it in both directions.
     */
   def s6AnnRerank(s: SparkSession, dir: String): DataFrame = {
     val e = load(s, dir, "embeddings")
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-    s6AnnRerankImpl(e, collapse = Kmeans.embTwinGate(s, dir))
+    s6AnnRerankImpl(e, collapse = Collapse.gate(s, dir, "embeddings", Seq("embedding")))
   }
 
-  /** TWIN COLLAPSE ([[cappedBandsGrouped]]'s exactness note): after the
-    * (query, neighbor) dedup, every member of a query group ranks the
-    * SAME candidate member list (score desc, id asc) minus itself — so
-    * the group-level top-(K+1) determines every member's top-K: drop
-    * the member if present (at most one entry can be it), take the
-    * first K, re-number. The per-group candidate explode carries only
-    * ids and one double, and each candidate group contributes at most
-    * K+1 member ids (members are sorted, so no later member of a group
-    * can reach the global top-(K+1)).
+  /** TWIN COLLAPSE ([[cappedBands]]' exactness note): every member of a
+    * query group ranks the SAME candidate member list (score desc, id
+    * asc) minus itself — so the group-level top-(K+1) determines every
+    * member's top-K: drop the member if present (at most one entry can
+    * be it), take the first K, re-number. The per-group candidate
+    * explode carries only ids and one double, and each candidate group
+    * contributes at most K+1 member ids (members are sorted, so no later
+    * member of a group can reach the global top-(K+1)).
     */
   private[graft] def s6AnnRerankImpl(e: DataFrame, collapse: Boolean): DataFrame = {
+    val rows = Collapse.groups(e, Seq("v"), "vec_id", collapse)
+    val cand = directed(groupPairs(rows, "v"))
     if (collapse) {
-      val hub = Collapse.hub(e, Seq("v"), "vec_id")
-      val top = topCandidates(groupPairs(cappedBandsGrouped(hub, "v"), "v"),
-        hub, keep = RerankK + 1)
+      val top = topCandidates(cand, rows, keep = RerankK + 1)
       // when(isNotNull, ..) widens nullability back to the direct
       // path's (d4's expansion precedent: analysis-time schema parity).
-      return hub.select(col("rep").as("gq"), col("members")).join(top, Seq("gq"))
+      return rows.select(col("rep").as("gq"), col("members")).join(top, Seq("gq"))
         .select(explode(col("members")).as("qx"), col("cand"))
         .select(col("qx"),
           slice(filter(col("cand"), x => x.getField("nid") =!= col("qx")),
@@ -351,16 +335,9 @@ object Similarity {
           when(col("c.nid").isNotNull, col("c.nid")).as("neighbor_id"),
           (col("p") + 1).cast("long").as("rank"), col("c.cs").as("cos_sim"))
     }
-    val c = cappedBands(e, "vec_id", "v")
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos_sim").desc, col("neighbor_id").asc)
-    c.as("a")
-      .join(c.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") =!= col("b.vec_id"))
-      .select(col("a.vec_id").as("query_id"), col("b.vec_id").as("neighbor_id"),
-        round(cosine(col("a.v"), col("b.v")), 6).as("cos_sim"))
-      .dropDuplicates("query_id", "neighbor_id")
+    cand.select(col("gq").as("query_id"), col("gc").as("neighbor_id"), col("cos_sim"))
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= RerankK)
       .select(col("query_id"), col("neighbor_id"),
@@ -573,9 +550,12 @@ object Similarity {
     "s4_pq_codes" -> s4PqCodes,
     "s5_pq_search" -> s5PqSearch)
 
-  private[ops] def bucketSql(v: String): String =
-    (1 to NBuckBits).map(i =>
-      s"CASE WHEN $v[$i] > 0 THEN CAST(${1L << (i - 1)} AS BIGINT) ELSE CAST(0 AS BIGINT) END")
+  /** DuckDB's sign bucket of components [from+1, from+bits] of `v` —
+    * one table of [[bandBuckets]]; the one-table layout by default.
+    */
+  private[ops] def bucketSql(v: String, bits: Int = OneTableBits, from: Int = 0): String =
+    (1 to bits).map(i =>
+      s"CASE WHEN $v[${from + i}] > 0 THEN CAST(${1L << (i - 1)} AS BIGINT) ELSE CAST(0 AS BIGINT) END")
       .mkString(" + ")
 
   /** Banded + capped CTEs over `embeddings`, shared by the s2b/d8b
@@ -584,12 +564,8 @@ object Similarity {
     * semantics, different machinery on each engine.
     */
   private[ops] def bandedCteSql: String = {
-    def tblBucketSql(b: Int): String =
-      (1 to BandBits).map(i =>
-        s"CASE WHEN embedding[${b * BandBits + i}] > 0 THEN CAST(${1L << (i - 1)} AS BIGINT) ELSE CAST(0 AS BIGINT) END")
-        .mkString(" + ")
     val caseSql = (0 until BandTables)
-      .map(b => s"WHEN $b THEN ${tblBucketSql(b)}").mkString(" ")
+      .map(b => s"WHEN $b THEN ${bucketSql("embedding", BandBits, b * BandBits)}").mkString(" ")
     s"""banded AS (SELECT vec_id, embedding, g.tbl,
        |    CASE g.tbl $caseSql END AS bucket
        |  FROM embeddings, generate_series(0, ${BandTables - 1}) g(tbl)),

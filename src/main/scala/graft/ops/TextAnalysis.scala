@@ -508,7 +508,7 @@ object TextAnalysis {
     */
   def t15LmScore(s: SparkSession, dir: String): DataFrame =
     lmScore(load(s, dir, "documents"),
-      collapse = Dedup.twinGate(s, dir, Seq("text")))
+      collapse = Collapse.gate(s, dir, "documents", Seq("text")))
 
   /** Frame-based core over any `(doc_id, text)` corpus. */
   def lmScore(docs: DataFrame): DataFrame = lmScore(docs, collapse = false)
@@ -585,7 +585,7 @@ object TextAnalysis {
     */
   def t16Importance(s: SparkSession, dir: String): DataFrame =
     importanceWeights(load(s, dir, "documents"),
-      collapse = Dedup.twinGate(s, dir, Seq("lang", "text")))
+      collapse = Collapse.gate(s, dir, "documents", Seq("lang", "text")))
 
   /** Frame-based core over any `(doc_id, lang, text)` corpus. */
   def importanceWeights(docs: DataFrame): DataFrame =
@@ -695,7 +695,7 @@ object TextAnalysis {
   def t10Contamination(s: SparkSession, dir: String): DataFrame =
     contamination(graft.Tables.spread(load(s, dir, "documents")),
       EvalSource, MaxContamPostings,
-      collapse = Dedup.twinGate(s, dir, Seq("source", "text")))
+      collapse = Collapse.gate(s, dir, "documents", Seq("source", "text")))
 
   /** Core of t10 over any (doc_id, source, text) frame. The posting cap
     * is applied with a window count BEFORE collect_set (the cappedBands

@@ -39,42 +39,51 @@ object Ingest {
         .when(col("e.region_id").isNotNull, "market")
         .otherwise("reject"))
 
-  /** Pydantic-equivalent constraints (ref dashboard.py:312-322 P13):
-    * non-empty trimmed id, timestamp ≥ 20 chars (ISO with offset).
+  /** Pydantic-equivalent constraints (ref dashboard.py:312-322 P13),
+    * the one validity rule of an event of a kind whose id field is `id`:
+    * non-empty trimmed id, timestamp ≥ 20 chars (ISO with offset) that
+    * parses. `field` resolves a field name to its column, so the
+    * validated frames (flat fields) and [[rejects]] (the decoded `e`
+    * struct) test the same predicate.
     */
-  private def validTs(ts: Column): Column =
+  private def valid(id: String, field: String => Column): Column = {
+    val ts = field("timestamp")
     // try_to_timestamp: ANSI mode would throw on unparseable input — the
     // dead-letter path must classify bad rows, not crash the stream.
-    ts.isNotNull && length(ts) >= 20 && try_to_timestamp(ts).isNotNull
+    length(trim(field(id))) > 0 &&
+      (ts.isNotNull && length(ts) >= 20 && try_to_timestamp(ts).isNotNull)
+  }
+
+  /** The id field of each routed kind. */
+  private val idOf = Map("facility" -> "facility_id", "market" -> "region_id")
+
+  /** The valid events of one routed kind, flattened to its schema;
+    * `measures` default to 0.0 like the Pydantic `float = 0.0` fields.
+    */
+  private def events(raw: DataFrame, kind: String,
+      schema: org.apache.spark.sql.types.StructType, measures: Seq[String]): DataFrame =
+    decoded(raw).filter(col("kind") === kind)
+      .select(schema.fieldNames.toIndexedSeq.map(f => col(s"e.$f")): _*)
+      .filter(valid(idOf(kind), col))
+      .na.fill(0.0, measures)
+      .withColumn("event_ts", try_to_timestamp(col("timestamp")))
 
   def facilityEvents(raw: DataFrame): DataFrame =
-    decoded(raw).filter(col("kind") === "facility")
-      .select(Schemas.facilityEvent.fieldNames.toIndexedSeq.map(f => col(s"e.$f")): _*)
-      .filter(length(trim(col("facility_id"))) > 0 && validTs(col("timestamp")))
-      // Measures default 0.0 like the Pydantic `float = 0.0` fields.
-      .na.fill(0.0, Seq("power_mw", "co2_tonnes"))
-      .withColumn("event_ts", try_to_timestamp(col("timestamp")))
+    events(raw, "facility", Schemas.facilityEvent, Seq("power_mw", "co2_tonnes"))
 
   def marketEvents(raw: DataFrame): DataFrame =
-    decoded(raw).filter(col("kind") === "market")
-      .select(Schemas.marketEvent.fieldNames.toIndexedSeq.map(f => col(s"e.$f")): _*)
-      .filter(length(trim(col("region_id"))) > 0 && validTs(col("timestamp")))
-      .na.fill(0.0, Seq("price_dmwh", "demand_mw"))
-      .withColumn("event_ts", try_to_timestamp(col("timestamp")))
+    events(raw, "market", Schemas.marketEvent, Seq("price_dmwh", "demand_mw"))
 
   /** Dead-letter channel: malformed JSON, the warm-start probe, and
-    * events failing validation (ref dashboard.py:357-359,407-414).
+    * events failing validation (ref dashboard.py:357-359,407-414) — per
+    * kind the complement of [[events]], by the same [[valid]] rule.
     */
-  def rejects(raw: DataFrame): DataFrame = {
-    val d = decoded(raw)
-    d.filter(
-      col("kind") === "reject" ||
-        (col("kind") === "facility" &&
-          !(length(trim(col("e.facility_id"))) > 0 && validTs(col("e.timestamp")))) ||
-        (col("kind") === "market" &&
-          !(length(trim(col("e.region_id"))) > 0 && validTs(col("e.timestamp")))))
+  def rejects(raw: DataFrame): DataFrame =
+    decoded(raw)
+      .filter(idOf.foldLeft(col("kind") === "reject") { case (acc, (kind, id)) =>
+        acc || (col("kind") === kind && !valid(id, f => col(s"e.$f")))
+      })
       .select(col("value"), col("kind").as("reject_stage"))
-  }
 
   /** Stream-static enrichment join (ref dashboard.py:346-359, J7): each
     * facility event gains the dim attributes via a broadcast join; lookup

@@ -42,14 +42,19 @@ object MergeState {
       power_mw = e.power_mw.getOrElse(cur.map(_.power_mw).getOrElse(0.0)),
       co2_tonnes = e.co2_tonnes.getOrElse(cur.map(_.co2_tonnes).getOrElse(0.0)))
 
+  /** One key's batch of events overlaid onto its previous state, in
+    * event-time order: the merge both state APIs run.
+    */
+  private def merged(key: String, prev: Option[MergedState],
+      events: Iterator[PartialEvent]): Option[MergedState] =
+    events.toSeq.sortBy(e => (e.event_ts_ms, e.timestamp))
+      .foldLeft(prev)((cur, e) => Some(overlay(key, cur, e)))
+
   def latestMerged(events: Dataset[PartialEvent]): Dataset[MergedState] =
     events.groupByKey(_.facility_id)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.NoTimeout) {
         (key: String, it: Iterator[PartialEvent], state: GroupState[MergedState]) =>
-          var cur = state.getOption
-          it.toSeq.sortBy(e => (e.event_ts_ms, e.timestamp)).foreach { e =>
-            cur = Some(overlay(key, cur, e))
-          }
+          val cur = merged(key, state.getOption, it)
           cur.foreach(state.update)
           cur.iterator
       }
@@ -72,10 +77,7 @@ object MergeState {
 
     override def handleInputRows(key: String, rows: Iterator[PartialEvent],
         timerValues: org.apache.spark.sql.streaming.TimerValues): Iterator[MergedState] = {
-      var cur = Option(state.get())
-      rows.toSeq.sortBy(e => (e.event_ts_ms, e.timestamp)).foreach { e =>
-        cur = Some(overlay(key, cur, e))
-      }
+      val cur = merged(key, Option(state.get()), rows)
       cur.foreach(state.update)
       cur.iterator
     }

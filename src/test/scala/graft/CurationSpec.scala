@@ -169,6 +169,35 @@ class CurationSpec extends AnyFunSuite {
     out.release()
   }
 
+  test("c1 over a corpus rewritten in place curates the new corpus, not the memoized run") {
+    // The registry's c1 parameters: en is allowed, 25 tokens pass
+    // minTokens 20, and "web" is not the eval source.
+    def write(path: String, docs: Seq[(Long, String)]): Unit =
+      docs.map { case (id, w) => (id, (1 to 25).map(i => s"$w$i").mkString(" "), "en", "web") }
+        .toDF("doc_id", "text", "lang", "source").write.parquet(path)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
+    }
+    val dir = java.nio.file.Files.createTempDirectory("curation-rewrite").toFile
+    val table = new java.io.File(dir, "documents.parquet")
+    def c1Docs() = SparkEntry.queries("c1_curation")(spark, dir.getPath)
+      .select("doc_id").distinct().as[Long].collect().toSet
+    try {
+      write(table.getPath, Seq(1L -> "a", 2L -> "b"))
+      assert(c1Docs() == Set(1L, 2L))
+      // Another writer replaces the table's files (a Spark overwrite in
+      // this session would also refresh the session's cached plans).
+      val next = new java.io.File(dir, "next")
+      write(next.getPath, Seq(7L -> "c", 8L -> "d", 9L -> "e"))
+      rm(table)
+      java.nio.file.Files.move(next.toPath, table.toPath)
+      assert(c1Docs() == Set(7L, 8L, 9L), "c1 returned the run of the replaced corpus")
+    } finally {
+      Harness.reset(spark)
+      rm(dir)
+    }
+  }
+
   test("curate conserves documents on the fixture corpus: kept + audited = candidates") {
     val docs = Tables.load(spark, "/root/testdata/sf0.001", "documents")
     val out = Curation.curate(docs, evalSource = "src0",

@@ -185,13 +185,17 @@ class EtlSpec extends AnyFunSuite {
       """{"timestamp":"starting...","price_dmwh":0,"demand_mw":0}""", // warm-start probe
       """not json at all""",
       """{"facility_id":"  ","timestamp":"2025-10-15T10:05:00+11:00","power_mw":1,"co2_tonnes":0}""", // blank id
-      """{"facility_id":"ALP","timestamp":"short","power_mw":1,"co2_tonnes":0}""" // bad ts
+      """{"facility_id":"ALP","timestamp":"short","power_mw":1,"co2_tonnes":0}""", // bad ts
+      """{"region_id":" ","timestamp":"2025-10-15T10:05:00+11:00","price_dmwh":1,"demand_mw":1}""", // blank id
+      """{"region_id":"NSW1","timestamp":"short","price_dmwh":1,"demand_mw":1}""", // short ts
+      // 25 characters that parse to no timestamp
+      """{"region_id":"NSW1","timestamp":"2025-13-45T99:99:99+11:00","price_dmwh":1,"demand_mw":1}"""
     ).toDF("value"))
     val nFac = Ingest.facilityEvents(noisy).count()
     val nMkt = Ingest.marketEvents(noisy).count()
     val nRej = Ingest.rejects(noisy).count()
     assert(nFac == 4 && nMkt == 4)
-    assert(nRej == 4)
+    assert(nRej == 7)
     assert(nFac + nMkt + nRej == noisy.count())
   }
 

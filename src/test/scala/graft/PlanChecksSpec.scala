@@ -209,6 +209,31 @@ class PlanChecksSpec extends AnyFunSuite with BeforeAndAfterEach {
       s"embeddings scanned more than once:\n$fin")
   }
 
+  test("d8b direct path (twin-free fixture): no cache read, one embeddings scan, " +
+    "band self-join reuses one exchange") {
+    // d4's direct-path pin: the twin gate must pick the direct rows here,
+    // so no leg reads the hub cache. AQE decides reuse at runtime, so
+    // assert on the final adaptive plan.
+    val df = SparkEntry.queries("d8b_neardup_multiband")(spark, dir)
+    df.collect()
+    val fin = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert(!fin.contains("InMemoryTableScan"),
+      s"stat gate chose the collapse on a twin-free corpus:\n$fin")
+    assert(fin.contains("ReusedExchange"), s"band self-join no longer reuses:\n$fin")
+    assert("FileScan parquet".r.findAllIn(fin).length == 1,
+      s"embeddings scanned more than once:\n$fin")
+  }
+
+  test("s2, d8: the one-table band self-join scans embeddings once") {
+    for (q <- Seq("s2_ann_lsh", "d8_embedding_lsh_neardup")) {
+      val df = SparkEntry.queries(q)(spark, dir)
+      df.collect()
+      val fin = df.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+      assert("FileScan parquet".r.findAllIn(fin).length == 1,
+        s"$q scans embeddings more than once:\n$fin")
+    }
+  }
+
   test("s3: probe leg's vec_id range reaches the scan — queries are not scored corpus-wide") {
     // The scale property worth pinning here is pushdown, not reuse: the
     // probes pipeline must score only the query vectors (range filter in

@@ -465,7 +465,7 @@ class PropertySpec extends AnyFunSuite {
       assert(Dedup.d12SubstrSpans(spark, dir.getPath).filter(col("doc_id").isNull)
         .count() > 0)
       // The collapse actually engaged (gate depth 16/6 ≥ 1.2).
-      assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")))
+      assert(graft.ops.Collapse.gate(spark, dir.getPath, "documents", Seq("text")))
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
@@ -501,7 +501,7 @@ class PropertySpec extends AnyFunSuite {
         .withColumn("lang", lit("en")).withColumn("source", lit("src1"))
         .write.mode("overwrite").parquet(s"${dir.getPath}/documents.parquet")
       // The public entries must take the collapse branch on this corpus.
-      assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")))
+      assert(graft.ops.Collapse.gate(spark, dir.getPath, "documents", Seq("text")))
       def bag(df: org.apache.spark.sql.DataFrame) = df.collect()
         .map(_.toSeq.toList).groupBy(identity).view.mapValues(_.length).toMap
       val pairs: Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)] = Seq(
@@ -547,9 +547,9 @@ class PropertySpec extends AnyFunSuite {
         .parquet(s"${bDir.getPath}/embeddings.parquet")
       dup.toDF("vec_id", "embedding").write.mode("overwrite")
         .parquet(s"${dDir.getPath}/embeddings.parquet")
-      assert(!graft.ops.Kmeans.embTwinGate(spark, bDir.getPath),
+      assert(!graft.ops.Collapse.gate(spark, bDir.getPath, "embeddings", Seq("embedding")),
         "base corpus must train on the direct path")
-      assert(graft.ops.Kmeans.embTwinGate(spark, dDir.getPath),
+      assert(graft.ops.Collapse.gate(spark, dDir.getPath, "embeddings", Seq("embedding")),
         "duplicated corpus must train on the collapsed path")
       val baseOut = graft.ops.Kmeans.s8PqTrained(spark, bDir.getPath)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3)))
@@ -583,10 +583,10 @@ class PropertySpec extends AnyFunSuite {
         .write.mode("overwrite").parquet(s"${dir.getPath}/documents.parquet")
       spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").limit(0)
         .write.mode("overwrite").parquet(s"${dir.getPath}/embeddings.parquet")
-      assert(!graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")),
-        "text twinGate must read false on an empty corpus")
-      assert(!graft.ops.Kmeans.embTwinGate(spark, dir.getPath),
-        "embeddings twinGate must read false on an empty corpus")
+      assert(!graft.ops.Collapse.gate(spark, dir.getPath, "documents", Seq("text")),
+        "text gate must read false on an empty corpus")
+      assert(!graft.ops.Collapse.gate(spark, dir.getPath, "embeddings", Seq("embedding")),
+        "embeddings gate must read false on an empty corpus")
     } finally {
       def rm(f: java.io.File): Unit = {
         Option(f.listFiles).getOrElse(Array.empty).foreach(rm); f.delete(): Unit
@@ -608,8 +608,8 @@ class PropertySpec extends AnyFunSuite {
         .toDF("vec_id", "embedding").write.mode("overwrite")
         .parquet(s"${dir.getPath}/embeddings.parquet")
     }
-    def gates = (graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")),
-      graft.ops.Kmeans.embTwinGate(spark, dir.getPath))
+    def gates = (graft.ops.Collapse.gate(spark, dir.getPath, "documents", Seq("text")),
+      graft.ops.Collapse.gate(spark, dir.getPath, "embeddings", Seq("embedding")))
     try {
       write(copies = 1)
       assert(gates == ((false, false)), "twin-free corpus")
@@ -1105,8 +1105,8 @@ class PropertySpec extends AnyFunSuite {
       import graft.ops.{DirectForms, TextAnalysis}
       // Gates actually engage on this corpus (12 docs / 5 distinct texts;
       // 8 distinct (lang, text) pairs — 12/8 = 1.5 ≥ 1.2).
-      assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("text")))
-      assert(graft.ops.Dedup.twinGate(spark, dir.getPath, Seq("lang", "text")))
+      assert(graft.ops.Collapse.gate(spark, dir.getPath, "documents", Seq("text")))
+      assert(graft.ops.Collapse.gate(spark, dir.getPath, "documents", Seq("lang", "text")))
       val lmWant = bag(DirectForms.lmScore(docs))
       val lmGot = bag(TextAnalysis.t15LmScore(spark, dir.getPath))
       assert(lmGot.nonEmpty && lmGot == lmWant, "t15 collapse diverged")

@@ -81,22 +81,22 @@ class SkewSpec extends AnyFunSuite {
     // survive → zero pairs downstream); at the population the full
     // bucket passes; singleton buckets are pruned by the ≥2 side.
     val n = 40
+    def capped(df: org.apache.spark.sql.DataFrame, maxBucket: Int) =
+      Similarity.cappedBands(df.select($"vec_id".as("rep"), $"v", lit(1L).as("mult")),
+        "v", Similarity.OneTableBits, 1, maxBucket)
     val e = (0 until n).map(i =>
       (i.toLong, Array.fill(64)(1.0 + i * 1e-9))).toDF("vec_id", "v")
-      .withColumn("bucket", graft.ops.Similarity.buckets(col("v")))
-    assert(Similarity.cappedSignBuckets(e, maxBucket = n - 1).count() == 0,
+    assert(capped(e, maxBucket = n - 1).count() == 0,
       "over-cap bucket must contribute no rows")
-    assert(Similarity.cappedSignBuckets(e, maxBucket = n).count() == n)
+    assert(capped(e, maxBucket = n).count() == n)
     // Mixed: a hot positive bucket over the cap + a 2-vector negative
     // bucket under it + one singleton — only the small bucket survives.
     val mixed = e.unionByName((100 until 102).map(i =>
-        (i.toLong, Array.fill(64)(-1.0))).toDF("vec_id", "v")
-        .withColumn("bucket", graft.ops.Similarity.buckets(col("v"))))
+        (i.toLong, Array.fill(64)(-1.0))).toDF("vec_id", "v"))
       .unionByName(Seq((200L, Array.tabulate(64)(j => if (j % 2 == 0) 1.0 else -1.0)))
-        .toDF("vec_id", "v")
-        .withColumn("bucket", graft.ops.Similarity.buckets(col("v"))))
-    val kept = Similarity.cappedSignBuckets(mixed, maxBucket = n - 1)
-      .select($"vec_id").as[Long].collect().toSet
+        .toDF("vec_id", "v"))
+    val kept = capped(mixed, maxBucket = n - 1)
+      .select($"rep").as[Long].collect().toSet
     assert(kept == Set(100L, 101L))
   }
 
