@@ -22,6 +22,15 @@ object Harness {
 
   def cores: Int = coresFor(sys.env.get("SPARK_GRAFT_CPUS"))
 
+  /** Refuses names that [[SparkEntry.queries]] does not register, naming
+    * every unknown one: a typo'd name must fail loudly, not time or dump
+    * nothing while the run still reads as a pass.
+    */
+  def requireKnown(names: Iterable[String]): Unit = {
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+  }
+
   /** A local session with the mains' defaults: `cores` task slots and as
     * many shuffle partitions, UTC, UI off, WARN logging. `conf` holds the
     * caller's fixed differences and wins over the defaults.
@@ -84,6 +93,6 @@ object Harness {
   // Every Throwable, not only NonFatal: a query that dies of an
   // OutOfMemoryError still reports as failed and the loop goes on to the
   // next one, so Bench always prints its JSON line.
-  private def attempt(f: => Unit): Try[Unit] =
+  private[graft] def attempt(f: => Unit): Try[Unit] =
     try Success(f) catch { case e: Throwable => Failure(e) }
 }

@@ -1,14 +1,13 @@
 package graft
 
 /** JSON string escaping shared by every artifact writer (Verify's
-  * manifests, Bench's env record). One escaper, not per-file copies:
-  * round 5 lost a correctness report to an unescaped control char in
-  * builder SQL, and round 15's Bench grew a second ad-hoc escaper that
-  * missed control chars entirely (ADVICE r15) — a newline inside a
-  * captured worker cmdline (e.g. a `python -c` argument, exactly what
-  * other_worker_cmds exists to record) would have emitted a literal
-  * control char inside a JSON string and made the whole BENCH_r*.json
-  * line unparseable downstream.
+  * manifests, Bench's query names and data dir). One escaper, not
+  * per-file copies: round 5 lost a correctness report to an unescaped
+  * control char in builder SQL, and round 15's Bench grew a second
+  * ad-hoc escaper that missed control chars entirely (ADVICE r15) — a
+  * newline inside a captured process command line would have emitted a
+  * literal control char inside a JSON string and made the whole
+  * BENCH_r*.json line unparseable downstream.
   */
 object Jsons {
   /** Quote + escape `s` as a JSON string literal: backslash, quote, and

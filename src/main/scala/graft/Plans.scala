@@ -17,19 +17,22 @@ import scala.util.matching.Regex
 object Plans {
 
   // Each pattern is (kept prefix)(id). Expression ids drop their `L`
-  // suffix, as they always have.
-  private val Renumbered = Seq("(#)(\\d+)L?", "(plan_id=)(\\d+)", "(RDD\\[)(\\d+)").map(_.r)
+  // suffix, as they always have. Lambda variables (`lambda x_19`,
+  // `lambda y_20`) share one counter, so x and y renumber together.
+  private val Renumbered = Seq("(#)(\\d+)L?", "(plan_id=)(\\d+)", "(RDD\\[)(\\d+)",
+    "(lambda [a-z]+_)(\\d+)").map(_.r)
   private val Cut = Seq("(\\[codegen id : )\\d+",
     "(?m)(QueryStage\\n(?:[^\\n]+\\n)*?Arguments: )\\d+$").map(_.r)
   private val LambdaRef = "\\$Lambda\\$?[0-9]+/0x[0-9a-f]+@[0-9a-f]+".r
 
-  /** Renumber expression ids (`#123`, `#45L`), exchange `plan_id=N` and
-    * RDD ids (a checkpointed scan's `MapPartitionsRDD[890]`) in order of
-    * first appearance, as Spark's PlanStabilitySuite does: all are
-    * allocated from JVM-wide counters, so the same query explained twice,
-    * or after a change to the jobs run before it, prints different
-    * numbers, while the renumbered text keeps which references are the
-    * same attribute, exchange or RDD.
+  /** Renumber expression ids (`#123`, `#45L`), exchange `plan_id=N`, RDD
+    * ids (a checkpointed scan's `MapPartitionsRDD[890]`) and lambda
+    * variable names (`lambda x_19`) in order of first appearance, as
+    * Spark's PlanStabilitySuite does: all are allocated from JVM-wide
+    * counters, so the same query explained twice, or after a change to
+    * the jobs run before it, prints different numbers, while the
+    * renumbered text keeps which references are the same attribute,
+    * exchange, RDD or lambda variable.
     *
     * Codegen stage ids (`[codegen id : 5]`) and query-stage ids (a
     * `…QueryStage`'s `Arguments: 3`) are cut to `_`. AQE numbers them in
@@ -76,8 +79,7 @@ object Plans {
       conf = Map("spark.buffer.pageSize" -> "32m"))
     try args match {
       case Array(outDir, suffix, dir, names @ _*) if names.nonEmpty =>
-        val unknown = names.filterNot(SparkEntry.queries.contains)
-        require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+        Harness.requireKnown(names)
         Files.createDirectories(Paths.get(outDir))
         names.foreach { n =>
           val hdr = s"# $n ($suffix) — executed formatted plan on $dir\n\n"

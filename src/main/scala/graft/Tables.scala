@@ -139,6 +139,17 @@ object Tables {
     else df
   }
 
+  /** Shuffle partitions for a frame that a later operator expands to
+    * `rows` rows: about 200k rows a partition (the t12 density), at most
+    * 16384, never fewer than the session's shuffle partitions. AQE's
+    * byte-based coalesce sizes by the small pre-expansion frame and would
+    * put the whole expansion on a few tasks, so callers repartition to
+    * this explicitly (SCALE.md r7).
+    */
+  def expansionParts(spark: SparkSession, rows: Long): Int =
+    math.max(spark.sessionState.conf.numShufflePartitions,
+      math.min(16384L, rows / 200000L).toInt)
+
   /** Planned scan-split count for `df`'s underlying file relation,
     * computed from FileIndex metadata with the same arithmetic
     * FileSourceScanExec applies (maxSplitBytes = min(maxPartitionBytes,

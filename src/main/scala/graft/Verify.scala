@@ -11,10 +11,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     val only = args.drop(2).toSet
-    // Fail loudly on a typo'd name: a silently-empty filter would dump
-    // nothing and let the downstream gate "pass" with zero queries.
-    val unknown = only -- SparkEntry.queries.keySet
-    require(unknown.isEmpty, s"unknown query names: ${unknown.mkString(", ")}")
+    Harness.requireKnown(only)
     val spark = Harness.session("graft-verify")
     new java.io.File(outDir).mkdirs()
     val failures = scala.collection.mutable.LinkedHashMap[String, String]()

@@ -519,9 +519,7 @@ object Dedup {
     val twinDocs = szRow.getLong(2)
     val maxGroup = szRow.getLong(3)
     val arrKeys = szRow.getLong(4)
-    val parts = math.max(
-      s.sessionState.conf.numShufflePartitions,
-      math.min(16384L, expanded / 200000L).toInt)
+    val parts = graft.Tables.expansionParts(s, expanded)
     // Skip the pre-explode spread only under an ABSOLUTE emission
     // bound, not merely parts == default: the cached postings frame's
     // partitioning is whatever AQE finalized, and byte-based coalesce
@@ -637,7 +635,7 @@ object Dedup {
       .join(gsz.select(col("rep").as("doc_b"), col("mult").as("mb")), "doc_b")
       .agg(coalesce(sum(col("ma") * col("mb")), lit(0L)))
       .head.getLong(0)
-    val outParts = math.max(defaultParts, math.min(16384L, outRows / 200000L).toInt)
+    val outParts = graft.Tables.expansionParts(s, outRows)
     // Member joins pinned SHUFFLE_HASH (the hint reaches both through
     // the projections): an unmeasured broadcast of the whole hub is the
     // verify join's sf3 driver abort again. Spread to outParts after

@@ -20,12 +20,13 @@ import org.apache.spark.storage.StorageLevel
   * the HOST application owns. This registry scopes the cleanup to
   * exactly the frames this library persisted.
   *
-  * The per-query harnesses (Verify / Bench / Timed) still use
-  * `spark.catalog.clearCache()` between queries — they own their
-  * sessions outright. `release(spark)` is for embedders: call it at
-  * any quiesce point; in-flight jobs that already resolved a cached
-  * plan recompute from lineage (unpersist is recompute-safe for
-  * CacheManager entries, unlike checkpoint-block deletion).
+  * The mains (Verify / Bench / Timed) call `release` through
+  * [[graft.Harness.reset]] between queries and before every timed run,
+  * then clear Spark's whole cache — they own their sessions outright.
+  * An embedder calls `release(spark)` alone, at any quiesce point;
+  * in-flight jobs that already resolved a cached plan recompute from
+  * lineage (unpersist is recompute-safe for CacheManager entries,
+  * unlike checkpoint-block deletion).
   *
   * Unpersisting the same logical plan twice is a CacheManager no-op,
   * so duplicate registrations (two invocations over the same dir

@@ -434,9 +434,7 @@ object TextAnalysis {
     // into a handful of post-expansion monsters.
     val nq = q.count()
     val expanded = nq * Bm25QueryTerms * Bm25MaxPostings
-    val parts = math.max(
-      corpus.sparkSession.sessionState.conf.numShufflePartitions,
-      math.min(16384L, expanded / 200000L).toInt)
+    val parts = graft.Tables.expansionParts(corpus.sparkSession, expanded)
     val posted = tf
       .join(broadcast(qterms.select("term").distinct()), "term", "left_semi")
       .withColumn("prank", row_number().over(psel))

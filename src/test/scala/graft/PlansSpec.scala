@@ -32,6 +32,22 @@ class PlansSpec extends AnyFunSuite {
       "#\\d+L?".r.findAllIn(a).toSet.size)
   }
 
+  test("lambda variables renumber per plan, x and y from one count") {
+    // Every built lambda takes fresh names from one JVM-wide counter, so
+    // two builds of one query print different names.
+    def explained(): String = {
+      val df = spark.range(0, 5).select(array(col("id"), col("id") + 1).as("a"))
+        .select(transform(col("a"), _ + 1).as("t"), zip_with(col("a"), col("a"), _ * _).as("z"))
+      df.collect()
+      df.queryExecution.explainString(FormattedMode)
+    }
+    val (a, b) = (explained(), explained())
+    assert(a != b, "raw explains already identical — nothing to normalise")
+    assert(Plans.normalize(a) == Plans.normalize(b))
+    assert("lambda [a-z]+_\\d+".r.findAllIn(Plans.normalize(a)).toSet ==
+      Set("lambda x_1", "lambda x_2", "lambda y_3"), Plans.normalize(a))
+  }
+
   test("codegen and query-stage ids are cut; other bare arguments stay") {
     // One plan as two runs print it when AQE finished its stages in
     // another order, after a different number of earlier jobs: the same

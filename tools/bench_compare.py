@@ -2,6 +2,13 @@
 """Single-node throughput comparison: Spark (graft.Bench JSON) vs DuckDB
 running the IDENTICAL oracle SQL on the same parquet at the same SF.
 
+Bench's walls are end to end: each query's full result goes to Spark's
+`noop` sink (min of 3). They were `count()` walls before, which let the
+optimizer prune unconsumed columns and whole left joins, so a table
+built from a Bench line of that time is not comparable with one built
+from a current line. The DuckDB side still times `count(*)` over the
+oracle SQL.
+
 The reference publishes no throughput numbers (SURVEY §6), so DuckDB —
 the correctness oracle itself, a state-of-the-art single-node engine —
 stands in as the single-node baseline. Usage:
